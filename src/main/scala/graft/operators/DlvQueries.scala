@@ -837,8 +837,7 @@ object DlvQueries {
     DlvDml.delete(s, path, col(MONTH) === months(0)) // rival wins
     val rejected =
       try {
-        tx.commit(snap.files.map(f =>
-          RemoveFile(f.path, 0L, f.partitionValues, dataChange = true)),
+        tx.commit(snap.files.map(_.remove(0L, dataChange = true)),
           isBlindAppend = false)
         false
       } catch { case _: DlvConcurrentException => true }

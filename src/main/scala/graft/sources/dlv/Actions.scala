@@ -88,18 +88,29 @@ final case class AddFile(
           case _ => Map.empty
         })
     }
+
+  /** This file's tombstone — the one place a [[RemoveFile]] is built
+    * from an AddFile, so every remove carries the size and vector
+    * state a change-feed replay of it needs. */
+  def remove(deletionTimestamp: Long, dataChange: Boolean): RemoveFile =
+    RemoveFile(path, deletionTimestamp, partitionValues, dataChange,
+      hadDv = dv.nonEmpty, size = Some(size))
 }
 
 /** `hadDv`: whether the file carried a deletion vector WHEN REMOVED —
   * the one bit CDF replay needs (a raw read of such a file cannot
   * subtract its soft-deleted rows, so the replay must refuse unless an
-  * eager CDC blob covers the commit). Absent in pre-DV logs → false. */
+  * eager CDC blob covers the commit). Absent in pre-DV logs → false.
+  * `size`: the removed file's bytes, so a remove replay plans from the
+  * log without touching the file (Delta's `RemoveFile.size`). Absent
+  * in logs written before it was recorded → None. */
 final case class RemoveFile(
     path: String,
     deletionTimestamp: Long,
     partitionValues: Map[String, String],
     dataChange: Boolean,
-    hadDv: Boolean = false) extends Action
+    hadDv: Boolean = false,
+    size: Option[Long] = None) extends Action
 
 final case class CommitInfo(
     version: Long,

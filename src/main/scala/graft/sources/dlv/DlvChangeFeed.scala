@@ -2,6 +2,7 @@ package graft.sources.dlv
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 /** Change-data-feed reader: `table_changes(table, fromVersion [, to])`.
   *
@@ -19,54 +20,37 @@ import org.apache.spark.sql.functions._
   * `_commit_timestamp`.
   *
   * Scale shape: the plan holds a BOUNDED number of scan relations
-  * regardless of the version range — one multi-path parquet read per
-  * change KIND (cdc blobs / add replays / remove replays), with
-  * `_commit_version`/`_commit_timestamp` stamped by a join against a
-  * (file-key → version, ts) mapping. A one-relation-per-version union
-  * over a 10⁴-commit table would build a 10⁴-leaf plan and stall the
-  * optimizer before a byte is read. Narrow ranges build the mapping on
-  * the driver (bounded-pool commit reads, broadcast join); ranges of
-  * [[distributedRangeThreshold]]+ versions classify the commits IN
-  * EXECUTORS ([[distributedMapping]]) and the driver holds only the
-  * distinct scan-path strings — the bound Spark's own scan planning
-  * imposes regardless.
+  * regardless of the version range — one read per change KIND (cdc
+  * blobs / add replays / remove replays), stamped by one join against
+  * a (file key → version, ts) mapping. A one-relation-per-version
+  * union over a 10⁴-commit table would build a 10⁴-leaf plan and stall
+  * the optimizer before a byte is read.
+  *
+  * One key: the format's own file key — [[DlvDv.keyOf]] on the mapping
+  * side, [[DlvDv.relFileExpr]] over `_metadata.file_path` on the scan
+  * side — byte-exact for every path, external (shallow-clone) files
+  * included; a CDC blob's key is its directory's. One reader per kind:
+  * data-file replays go through [[DlvDml.readFiles]] over files the
+  * log already describes (size and partition values from the add or
+  * remove action), so planning lists and HEADs nothing; a remove
+  * written before [[RemoveFile.size]] existed is left to the scan's
+  * explicit-schema read. Narrow ranges build the mapping on the
+  * driver; ranges of [[distributedRangeThreshold]]+ versions classify
+  * the commits IN EXECUTORS ([[distributedMapping]]) and the driver
+  * holds only the distinct replayed files — the bound the scan's own
+  * planning imposes regardless. Both routes call the same readers, and
+  * the planner's broadcast threshold picks a broadcast or shuffled
+  * stamp join.
   */
 object DlvChangeFeed {
 
-  /** One replayable unit: a table-relative path (CDC blob dir or data
-    * file), the commit it belongs to, and that commit's timestamp. */
-  private final case class Entry(rel: String, version: Long, tsMs: Long)
-
-  /** Join key distinguishing files of one batched read: the terminal
-    * path segment. CDC blob dirs are `_dlv_log/_cdc/<uuid>` (key =
-    * blob-dir uuid, the PARENT segment of each part file); data files
-    * end in `part-...-<uuid>....parquet` (key = file name). Both are
-    * UUID-bearing, so collisions across DISTINCT paths are
-    * impossible in practice — and guarded: an actual collision falls
-    * back to per-version reads rather than risk a mis-stamp. */
-  private def keyOf(rel: String): String =
-    rel.substring(rel.lastIndexOf('/') + 1)
-
-  /** Percent-encode one path segment exactly the way the scan reports
-    * it: `input_file_name()` surfaces `Path.toUri.toString`, i.e. the
-    * RFC-3986 path-quoted form of the on-disk name. A CONVERT-adopted
-    * file whose name carries spaces/unicode/'%' therefore differs
-    * between its raw log form and the scan's encoded form — an
-    * unencoded mapping key matches nothing and (pre-guard) its rows
-    * silently vanished from the feed. Encoding the mapping key with
-    * the same multi-arg URI constructor Hadoop's Path.toUri uses keeps
-    * the two sides byte-identical (including '+', which a URL-DEcoding
-    * of the scan side would corrupt to a space). */
-  private def encodeSegment(seg: String): String =
-    new java.net.URI(null, null, "/" + seg, null).getRawPath.substring(1)
-
-  /** True when two DISTINCT rel paths of one batched read share a
-    * terminal-segment join key — the one case where the batched stamp
-    * join could mis-attribute rows, so callers fall back to
-    * correct-by-construction per-version reads. */
-  private def hasKeyCollision(entries: Seq[Entry]): Boolean =
-    entries.map(_.rel).distinct
-      .groupBy(r => encodeSegment(keyOf(r))).exists(_._2.size > 1)
+  /** One file a change kind reads — a CDC blob dir (`cdc`) or a data
+    * file replayed as `insert`/`delete` — with the size and partition
+    * values its action recorded (size None for blob dirs and for
+    * removes written before sizes were). */
+  private final case class Replay(
+      kind: String, rel: String, size: Option[Long],
+      partitionValues: Map[String, String])
 
   def changes(
       spark: SparkSession, path: String, fromVersion: Long,
@@ -88,85 +72,84 @@ object DlvChangeFeed {
   private def assembleDriver(
       spark: SparkSession, l: DlvLog, meta: Metadata,
       fromVersion: Long, to: Long): DataFrame = {
-    // Per-version commit reads fan out over a bounded pool: each is
-    // one small object read, and a 10⁴-commit range on an object store
-    // at ~20 ms/read would otherwise serialize into minutes of driver
-    // wall time before a byte of data moves. Results are re-ordered by
-    // version, so parallelism never changes the output.
-    val perVersion: Seq[(Long, Seq[Entry], Seq[Entry], Seq[Entry])] = {
-      val versions = (fromVersion to to).toVector
-      def classify(v: Long) = {
-        // a missing commit below the newest checkpoint = the log
-        // retention horizon (DlvMaintenance.cleanupLog) — name the
-        // contract; probe only on failure, the happy path pays nothing
-        val actions =
-          try l.commitActionsOf(v)
-          catch {
-            case e: Exception if !l.io.exists(
-                l.io.child(l.logDir, CommitStore.fileName(v))) =>
-              throw new IllegalStateException(
-                s"table_changes: version $v of ${l.tablePath} predates " +
-                  s"the log retention horizon (commit $v was cleaned " +
-                  "up)", e)
+    import spark.implicits._
+    val stamped: Seq[(Replay, Long, Long)] =
+      l.commitActionsIn(fromVersion, to).zip(fromVersion to to).flatMap {
+        case (actions, v) =>
+          val info = actions.collectFirst { case c: CommitInfo => c }
+          val ts = info.map(_.timestamp).getOrElse(l.commitTimestamp(v))
+          info.flatMap(_.cdcPath) match {
+            case Some(rel) => Seq((Replay("cdc", rel, None, Map.empty), v, ts))
+            case None =>
+              // deletion-vector guards: a vector-bearing re-add would
+              // replay the file's RAW rows (soft-deleted included), and
+              // a removed file that CARRIED a vector (RemoveFile.hadDv)
+              // can't raw-replay its deletes either — both need the
+              // eager CDC blob
+              if (actions.exists {
+                  case a: AddFile => a.dataChange && a.dv.nonEmpty
+                  case _ => false
+                }) throw dvAdd(v)
+              if (actions.exists {
+                  case r: RemoveFile => r.dataChange && r.hadDv
+                  case _ => false
+                }) throw dvRemove(v)
+              actions.collect {
+                case a: AddFile if a.dataChange =>
+                  (Replay("insert", a.path, Some(a.size), a.partitionValues),
+                    v, ts)
+                case r: RemoveFile if r.dataChange =>
+                  (Replay("delete", r.path, r.size, r.partitionValues), v, ts)
+              }
           }
-        val info = actions.collectFirst { case c: CommitInfo => c }
-        val ts = info.map(_.timestamp).getOrElse(l.commitTimestamp(v))
-        info.flatMap(_.cdcPath) match {
-          case Some(rel) => (v, Seq(Entry(rel, v, ts)), Nil, Nil)
-          case None =>
-            val adds = actions.collect {
-              case a: AddFile if a.dataChange => Entry(a.path, v, ts)
-            }
-            val removes = actions.collect {
-              case r: RemoveFile if r.dataChange => Entry(r.path, v, ts)
-            }
-            // deletion-vector guards: a vector-bearing re-add would
-            // replay the file's RAW rows (soft-deleted included), and
-            // a removed file that CARRIED a vector (RemoveFile.hadDv)
-            // can't raw-replay its deletes either — both need the
-            // eager CDC blob
-            require(!actions.exists {
-                case a: AddFile => a.dv.nonEmpty && a.dataChange
-                case _ => false
-              },
-              s"table_changes: version $v is a deletion-vector commit " +
-                "without a CDC blob — enable change data feed " +
-                "alongside deletion vectors")
-            require(!actions.exists {
-                case r: RemoveFile => r.hadDv && r.dataChange
-                case _ => false
-              },
-              s"table_changes: version $v removes a vector-bearing " +
-                "file without a CDC blob; the raw replay cannot " +
-                "subtract its soft-deleted rows — enable change data " +
-                "feed alongside deletion vectors")
-            (v, Nil, adds, removes)
-        }
       }
-      DriverPar.map(versions)(classify) // order-preserving
-    }
-    val cdcBlobs = perVersion.flatMap(_._2)
-    val addReplays = perVersion.flatMap(_._3)
-    val removeReplays = perVersion.flatMap(_._4)
-
-    val parts: Seq[DataFrame] =
-      readCdcBlobs(spark, l, meta, cdcBlobs).toSeq ++
-        readReplays(spark, l, meta, addReplays, "insert") ++
-        readReplays(spark, l, meta, removeReplays, "delete")
-    parts.reduceOption(_ unionByName _).getOrElse(empty(spark, meta))
+    assemble(spark, l, meta, stamped.map(_._1), kind =>
+      stamped.collect {
+        case (r, v, ts) if r.kind == kind => (DlvDv.keyOf(l, r.rel), v, ts)
+      }.toDF("__k", "__v", "__ts"))
   }
 
-  private def empty(spark: SparkSession, meta: Metadata): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(
-      meta.schema.fields ++ Seq(
-        org.apache.spark.sql.types.StructField("_change_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("_commit_version",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("_commit_timestamp",
-          org.apache.spark.sql.types.TimestampType)))
+  private def dvAdd(v: Long) = new IllegalArgumentException(
+    s"table_changes: version $v is a deletion-vector commit without a " +
+      "CDC blob — enable change data feed alongside deletion vectors")
+
+  private def dvRemove(v: Long) = new IllegalArgumentException(
+    s"table_changes: version $v removes a vector-bearing file without " +
+      "a CDC blob; the raw replay cannot subtract its soft-deleted " +
+      "rows — enable change data feed alongside deletion vectors")
+
+  private def empty(spark: SparkSession, meta: Metadata): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(meta.schema.fields ++ Seq(
+        StructField("_change_type", StringType),
+        StructField("_commit_version", LongType),
+        StructField("_commit_timestamp", TimestampType))))
+
+  /** The one assembly every route shares: per change kind, read its
+    * distinct files once and stamp them through `mappingOf(kind)`
+    * (`(__k, __v, __ts)` rows; a file replayed at several versions —
+    * RESTORE re-adds — fans out per version, the per-version replay
+    * semantics). A file is passed as log-known when any action of the
+    * range recorded its size. */
+  private def assemble(
+      spark: SparkSession, l: DlvLog, meta: Metadata,
+      files: Seq[Replay], mappingOf: String => DataFrame): DataFrame = {
+    val parts = Seq("cdc", "insert", "delete").flatMap { kind =>
+      val byRel = files.filter(_.kind == kind).groupBy(_.rel)
+      if (byRel.isEmpty) None
+      else {
+        val rels = byRel.keys.toSeq.sorted
+        val read =
+          if (kind == "cdc") readCdcBlobs(spark, l, meta, rels)
+          else readReplays(spark, l, meta, rels, rels.flatMap(rel =>
+            byRel(rel).collectFirst { case Replay(_, _, Some(size), pv) =>
+              AddFile(rel, pv, size, 0L, dataChange = false, stats = None)
+            }), kind)
+        Some(stampJoin(read, mappingOf(kind)))
+      }
+    }
+    parts.reduceOption(_ unionByName _).getOrElse(empty(spark, meta))
   }
 
   // ── distributed range assembly ─────────────────────────────────────
@@ -175,24 +158,26 @@ object DlvChangeFeed {
     * classified IN EXECUTORS instead of on the driver. Below it, a
     * bounded driver pool reading ≤ a few dozen small objects beats a
     * Spark job's scheduling latency; above it, the driver would hold
-    * an O(files changed in range) Entry list (a `table_changes(t, 0)`
+    * an O(files changed in range) mapping (a `table_changes(t, 0)`
     * over 10⁶ changed files is ~10² MB of driver case classes) that
     * the distributed route never materializes — it collects only the
-    * distinct scan PATH strings, the same driver bound the scan's own
-    * file-listing planning imposes. Sysprop-overridable so specs can
-    * force the distributed route on tiny logs. */
+    * distinct replayed files, the same driver bound the scan's own
+    * planning imposes. Sysprop-overridable so specs can force the
+    * distributed route on tiny logs. */
   private[dlv] def distributedRangeThreshold: Long =
     sys.props.get("graft.dlv.cdfDistributedRangeThreshold")
       .map(_.toLong).getOrElse(64L)
 
-  /** One mapping row per replayable file of the range —
-    * `(kind, rel, __k, __v, __ts)` — built by parsing the range's
-    * commit JSONs in executors with the SAME [[Actions.fromJson]]
-    * parser the driver replay uses (one parser, no semantic drift).
-    * Lines parse independently; a per-version `flatMapGroups` then
-    * applies the cdc-routes-the-whole-version rule. `__ts` is null
-    * for a commit with no CommitInfo line (hand-built logs) — the
-    * caller patches those from commit mtimes, O(infoless versions). */
+  /** One mapping row per replayed file of the range —
+    * `(kind, rel, __k, __v, __ts, __size, __pv)` — built by parsing the
+    * range's commit JSONs in executors with the SAME
+    * [[Actions.fromJson]] parser the driver route uses (one parser, no
+    * semantic drift). Lines parse independently; a per-version
+    * `flatMapGroups` then applies the cdc-routes-the-whole-version
+    * rule. `__ts` is null for a commit with no CommitInfo line
+    * (hand-built logs), and `__k` for an external (absolute) path,
+    * whose key qualifies through the table's filesystem — the caller
+    * patches both on the driver. */
   private[dlv] def distributedMapping(
       spark: SparkSession, l: DlvLog, fromVersion: Long,
       to: Long): DataFrame = {
@@ -218,10 +203,10 @@ object DlvChangeFeed {
        })
       .select(input_file_name().as("f"), col("value"))
       .as[(String, String)]
-    // line-independent parse: (version, tag, rel, ts, dvFlag) raw
-    // units. The version comes from the commit FILE NAME — digits
-    // only, immune to the percent-encoding input_file_name applies to
-    // parent dirs.
+    // line-independent parse: (version, tag, rel, ts, dvFlag, size,
+    // partition values) raw units. The version comes from the commit
+    // FILE NAME — digits only, immune to the percent-encoding
+    // input_file_name applies to parent dirs.
     val raw = lines.mapPartitions { it =>
       it.flatMap { case (f, line) =>
         val name = f.substring(f.lastIndexOf('/') + 1)
@@ -232,56 +217,47 @@ object DlvChangeFeed {
         }
         if (line.trim.isEmpty) Iterator.empty
         else Actions.fromJson(line) match {
-          case Some(c: CommitInfo) => Iterator.single(
-            (v, "info", c.cdcPath.orNull, c.timestamp, false))
-          case Some(a: AddFile) if a.dataChange =>
-            Iterator.single((v, "add", a.path, -1L, a.dv.nonEmpty))
-          case Some(r: RemoveFile) if r.dataChange =>
-            Iterator.single((v, "remove", r.path, -1L, r.hadDv))
+          case Some(c: CommitInfo) => Iterator.single((v, "info",
+            c.cdcPath.orNull, c.timestamp, false, Option.empty[Long],
+            Map.empty[String, String]))
+          case Some(a: AddFile) if a.dataChange => Iterator.single((v,
+            "insert", a.path, -1L, a.dv.nonEmpty, Some(a.size),
+            a.partitionValues))
+          case Some(r: RemoveFile) if r.dataChange => Iterator.single((v,
+            "delete", r.path, -1L, r.hadDv, r.size, r.partitionValues))
           case _ => Iterator.empty
         }
       }
     }
     // per-version classification — identical rule to the driver
-    // route's `classify`: an eager CDC blob supersedes the version's
-    // add/remove replays, and the same deletion-vector guards apply.
-    // One version groups onto one task; its actions are metadata
-    // strings, linear scan.
+    // route: an eager CDC blob supersedes the version's add/remove
+    // replays, and the same deletion-vector guards apply. One version
+    // groups onto one task; its actions are metadata strings, linear
+    // scan.
     raw.groupByKey(_._1).flatMapGroups { (v, it) =>
-      var ts: Option[Long] = None
-      var cdcRel: String = null
-      var anyDvAdd = false
-      var anyDvRemove = false
-      val adds = scala.collection.mutable.ArrayBuffer.empty[String]
-      val removes = scala.collection.mutable.ArrayBuffer.empty[String]
-      it.foreach {
-        case (_, "info", rel, t, _) => ts = Some(t); cdcRel = rel
-        case (_, "add", rel, _, dvf) => adds += rel; anyDvAdd |= dvf
-        case (_, "remove", rel, _, dvf) =>
-          removes += rel; anyDvRemove |= dvf
-        case _ => ()
+      val units = it.toVector
+      val info = units.find(_._2 == "info")
+      val ts = info.map(_._4)
+      def row(kind: String, rel: String, size: Option[Long],
+          pv: Map[String, String]) = (kind, rel,
+        if (DlvLog.isAbsolutePath(rel)) null else DlvDv.encodeRel(rel),
+        v, ts, size, pv)
+      info.flatMap(u => Option(u._3)) match {
+        case Some(cdcRel) =>
+          Iterator.single(row("cdc", cdcRel, None, Map.empty))
+        case None =>
+          val files = units.filter(_._2 != "info")
+          if (files.exists(u => u._2 == "insert" && u._5)) throw dvAdd(v)
+          if (files.exists(u => u._2 == "delete" && u._5)) throw dvRemove(v)
+          files.iterator.map(u => row(u._2, u._3, u._6, u._7))
       }
-      def row(kind: String, rel: String) =
-        (kind, rel, encodeSegment(keyOf(rel)), v, ts)
-      if (cdcRel != null) Iterator.single(row("cdc", cdcRel))
-      else {
-        if (anyDvAdd) throw new IllegalStateException(
-          s"table_changes: version $v is a deletion-vector commit " +
-            "without a CDC blob — enable change data feed alongside " +
-            "deletion vectors")
-        if (anyDvRemove) throw new IllegalStateException(
-          s"table_changes: version $v removes a vector-bearing file " +
-            "without a CDC blob — enable change data feed alongside " +
-            "deletion vectors")
-        adds.iterator.map(row("insert", _)) ++
-          removes.iterator.map(row("delete", _))
-      }
-    }.toDF("kind", "rel", "__k", "__v", "__ts")
+    }.toDF("kind", "rel", "__k", "__v", "__ts", "__size", "__pv")
   }
 
   private def assembleDistributed(
       spark: SparkSession, l: DlvLog, meta: Metadata,
       fromVersion: Long, to: Long): DataFrame = {
+    import spark.implicits._
     val mapping0 = distributedMapping(spark, l, fromVersion, to)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -289,7 +265,7 @@ object DlvChangeFeed {
       // driver lookups, patched in with a tiny literal map
       val missing = mapping0.filter(col("__ts").isNull)
         .select("__v").distinct().collect().map(_.getLong(0))
-      val mapping =
+      val withTs =
         if (missing.isEmpty) mapping0
         else {
           val fixes = missing.flatMap(v =>
@@ -297,139 +273,44 @@ object DlvChangeFeed {
           mapping0.withColumn("__ts", coalesce(
             col("__ts"), element_at(map(fixes.toSeq: _*), col("__v"))))
         }
-      // collision guard, distributed: two DISTINCT rel paths of one
-      // kind sharing a terminal-segment key would let the stamp join
-      // mis-attribute rows — degrade to the per-version driver route
-      // (pathological: only non-UUID file names can collide)
-      val collision = !mapping.groupBy("kind", "__k")
-        .agg(countDistinct("rel").as("n")).filter(col("n") > 1).isEmpty
-      if (collision)
-        return assembleDriver(spark, l, meta, fromVersion, to)
-
-      if (mapping.count() <= stampBroadcastLimit) {
-        // the mapping fits the same driver budget the narrow-range
-        // route already broadcasts under: collect it ONCE (the
-        // executor-side classification still spared the driver the
-        // 10⁴ commit parses) and hand the driver readers their
-        // entries — after this, nothing depends on the cached
-        // Dataset, so the unpersist in `finally` costs no recompute
-        val byKind = mapping.select("kind", "rel", "__v", "__ts")
-          .collect()
-          .map(r => (r.getString(0),
-            Entry(r.getString(1), r.getLong(2), r.getLong(3))))
-          .groupBy(_._1)
-        def entriesOf(kind: String): Seq[Entry] =
-          byKind.getOrElse(kind, Array.empty).map(_._2)
-            .sortBy(e => (e.version, e.rel)).toSeq
-        val parts: Seq[DataFrame] =
-          readCdcBlobs(spark, l, meta, entriesOf("cdc")).toSeq ++
-            readReplays(spark, l, meta, entriesOf("insert"), "insert") ++
-            readReplays(spark, l, meta, entriesOf("delete"), "delete")
-        return parts.reduceOption(_ unionByName _)
-          .getOrElse(empty(spark, meta))
-      }
-
-      // past the broadcast budget: the mapping must stay distributed.
-      // Only the SCAN PATHS are collected — compact strings, the same
-      // driver bound the parquet scan's planning holds anyway; sorted
-      // for a deterministic multi-path relation.
-      def pathsOf(kind: String): Seq[String] =
-        mapping.filter(col("kind") === kind).select("rel").distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-      def mappingOf(kind: String): DataFrame =
-        mapping.filter(col("kind") === kind)
-          .select("__k", "__v", "__ts")
-
-      val cdcPaths = pathsOf("cdc")
-      val cdc: Option[DataFrame] =
-        if (cdcPaths.isEmpty) None
-        else {
-          val schema = org.apache.spark.sql.types.StructType(
-            meta.schema.fields :+ org.apache.spark.sql.types.StructField(
-              "_change_type", org.apache.spark.sql.types.StringType))
-          val raw = spark.read.schema(schema)
-            .parquet(cdcPaths.map(l.resolveQualified): _*)
-          Some(stampJoin(raw,
-            element_at(split(input_file_name(), "/"), -2),
-            mappingOf("cdc")))
-        }
-      def replays(kind: String, changeType: String): Option[DataFrame] = {
-        val ps = pathsOf(kind)
-        if (ps.isEmpty) None
-        else {
-          val raw = spark.read
-            .schema(meta.schema)
-            .option("basePath", l.tableQualified)
-            .parquet(ps.map(l.resolveQualified): _*)
-          val projected = raw
-            .select(meta.schema.map(f => col(f.name)): _*)
-            .withColumn("_change_type", lit(changeType))
-          Some(stampJoin(projected,
-            element_at(split(input_file_name(), "/"), -1),
-            mappingOf(kind)))
-        }
-      }
-      val parts = cdc.toSeq ++ replays("insert", "insert") ++
-        replays("delete", "delete")
-      parts.reduceOption(_ unionByName _).getOrElse(empty(spark, meta))
+      // the distinct replayed files — compact rows, the driver bound
+      // the scan's planning holds anyway (a sized and a size-less
+      // action of one path may both appear; assemble prefers the size)
+      val files = withTs
+        .select("kind", "rel", "__size", "__pv")
+        .dropDuplicates("kind", "rel", "__size")
+        .collect().toSeq.map(r => Replay(r.getString(0), r.getString(1),
+          if (r.isNullAt(2)) None else Some(r.getLong(2)),
+          r.getMap[String, String](3).toMap))
+      val external = files.map(_.rel).filter(DlvLog.isAbsolutePath).distinct
+      val mapping =
+        if (external.isEmpty) withTs
+        else withTs
+          .join(external.map(r => (r, DlvDv.keyOf(l, r))).toDF("rel", "__xk"),
+            Seq("rel"), "left")
+          .withColumn("__k", coalesce(col("__k"), col("__xk")))
+      assemble(spark, l, meta, files, kind =>
+        mapping.filter(col("kind") === kind).select("__k", "__v", "__ts"))
     } finally {
-      // past-the-budget results re-derive the mapping when they run
-      // (each action re-reads the commit range, bounded-parallel in
-      // executors — the cost delta's CDCReader pays unconditionally
-      // on EVERY call); pinning executor memory for a DataFrame the
-      // caller may hold indefinitely would be worse. Callers looping
-      // actions over a 10⁶-file feed should persist the RESULT.
+      // the result re-derives the mapping when it runs (each action
+      // re-reads the commit range, bounded-parallel in executors — the
+      // cost delta's CDCReader pays unconditionally on EVERY call);
+      // pinning executor memory for a DataFrame the caller may hold
+      // indefinitely would be worse. Callers looping actions over a
+      // 10⁶-file feed should persist the RESULT.
       mapping0.unpersist(blocking = false)
       ()
     }
   }
 
-  /** Mapping rows above this count skip the broadcast hint: at 10^6
-    * changed files the (key, version, ts) map is ~10^2 MB — shipping
-    * it to every executor is the wrong side of the broadcast
-    * trade-off; the mapping parallelizes instead and the planner
-    * shuffles the join. This is the DRIVER route's knob; ranges at or
-    * above [[distributedRangeThreshold]] versions never build the
-    * driver mapping at all ([[distributedMapping]] — delta's
-    * CDCReader keeps the driver bound unconditionally; a
-    * checkpoint-routed replay can't replace either route because
-    * checkpoints drop removed files and carry no per-version
-    * attribution). Sysprop-overridable so specs can force the
-    * shuffled join at test scale. */
-  private[dlv] def stampBroadcastLimit: Int =
-    sys.props.get("graft.dlv.cdfStampBroadcastLimit")
-      .map(_.toInt).getOrElse(100000)
-
-  /** Join the per-file key against a driver-built mapping to stamp
-    * `_commit_version`/`_commit_timestamp` — broadcast below
-    * [[stampBroadcastLimit]], parallelized + shuffled join above it. */
-  private def stampByKey(
-      spark: SparkSession, df: DataFrame, keyCol: org.apache.spark.sql.Column,
-      entries: Seq[Entry]): DataFrame = {
-    import spark.implicits._
-    val rows = entries
-      .map(e => (encodeSegment(keyOf(e.rel)), e.version, e.tsMs))
-    val mapping =
-      if (rows.size <= stampBroadcastLimit)
-        broadcast(rows.toDF("__k", "__v", "__ts"))
-      else
-        spark.sparkContext.parallelize(rows,
-            math.max(1, rows.size / 50000))
-          .toDF("__k", "__v", "__ts")
-    stampJoin(df, keyCol, mapping)
-  }
-
-  /** The stamp join itself, over any `(__k, __v, __ts)` mapping —
-    * driver-built rows or the distributed-range Dataset alike. */
-  private def stampJoin(
-      df: DataFrame, keyCol: org.apache.spark.sql.Column,
-      mapping: DataFrame): DataFrame = {
-    df.withColumn("__k", keyCol)
-      .join(mapping, Seq("__k"), "left")
+  /** Stamp `_commit_version`/`_commit_timestamp` on a read carrying
+    * its file key in `__k`, over any `(__k, __v, __ts)` mapping. */
+  private def stampJoin(df: DataFrame, mapping: DataFrame): DataFrame =
+    df.join(mapping, Seq("__k"), "left")
       // LEFT + loud guard: a scan row whose key matched no mapping row
       // means the stamp table doesn't know a file the scan surfaced —
-      // the old INNER join turned exactly that (an encoding mismatch)
-      // into silently-missing change rows; fail the read instead
+      // an INNER join would turn exactly that (a key mismatch) into
+      // silently-missing change rows; fail the read instead
       .withColumn("_commit_version",
         when(col("__v").isNull, raise_error(concat(
           lit("change-feed stamp miss (scan file key not in commit " +
@@ -438,126 +319,42 @@ object DlvChangeFeed {
       .withColumn("_commit_timestamp",
         (col("__ts") / 1000).cast("timestamp"))
       .drop("__k", "__v", "__ts")
-  }
 
-  /** All CDC blobs of the range in ONE read, stamped by blob-dir uuid.
-    * The read takes an EXPLICIT schema (the log is authoritative:
-    * evolution only adds/drops columns) — no footer sweep at planning
-    * time, and a blob written before ADD COLUMNS reads the new columns
-    * as typed nulls natively; columns the current schema dropped are
-    * simply not requested. */
+  /** All CDC blobs of the range in ONE read, keyed by blob dir (the
+    * file key minus its part-file name). The read takes an EXPLICIT
+    * schema (the log is authoritative: evolution only adds/drops
+    * columns) — no footer sweep at planning time, and a blob written
+    * before ADD COLUMNS reads the new columns as typed nulls natively;
+    * columns the current schema dropped are simply not requested.
+    * Blobs are on-disk bytes → PHYSICAL lexicon ([[DlvColMap]]):
+    * request physical names and rename back to logical above the
+    * read. */
   private def readCdcBlobs(
       spark: SparkSession, l: DlvLog, meta: Metadata,
-      entries: Seq[Entry]): Option[DataFrame] = {
-    if (entries.isEmpty) return None
-    // blobs are on-disk bytes → PHYSICAL lexicon ([[DlvColMap]]);
-    // request physical names and rename back to logical above the read
-    val schema = org.apache.spark.sql.types.StructType(
+      rels: Seq[String]): DataFrame = {
+    val schema = StructType(
       meta.schema.fields.map(f =>
         f.copy(name = DlvColMap.physicalOf(meta, f.name))) :+
-        org.apache.spark.sql.types.StructField(
-          "_change_type", org.apache.spark.sql.types.StringType))
-    def logical(df: DataFrame): DataFrame =
-      DlvColMap.toLogical(df, meta)
-    if (hasKeyCollision(entries))
-      // two distinct blob dirs share a terminal segment — the batched
-      // stamp would fan rows out across both versions; read each
-      // version's blob separately (same fallback as readReplays)
-      return Some(entries.groupBy(e => (e.version, e.tsMs)).toSeq
-        .sortBy(_._1).map { case ((v, ts), es) =>
-          logical(spark.read.schema(schema)
-            .parquet(es.map(e => l.resolveQualified(e.rel)): _*))
-            .withColumn("_commit_version", lit(v))
-            .withColumn("_commit_timestamp",
-              (lit(ts) / 1000).cast("timestamp"))
-        }.reduce(_ unionByName _))
-    val raw = logical(spark.read.schema(schema)
-      .parquet(entries.map(e => l.resolveQualified(e.rel)): _*))
-    // parent dir segment of each part file = the blob-dir uuid
-    Some(stampByKey(spark, raw,
-      element_at(split(input_file_name(), "/"), -2), entries))
+        StructField("_change_type", StringType))
+    val raw = spark.read.schema(schema)
+      .parquet(rels.map(l.resolveQualified): _*)
+      .withColumn("__k", regexp_replace(
+        DlvDv.relFileExpr(l, col("_metadata.file_path")), "/[^/]*$", ""))
+    DlvColMap.toLogical(raw, meta)
   }
 
   /** All add- (or remove-) replay files of the range in ONE read,
-    * stamped by file name. A path re-added at a later version (RESTORE)
-    * appears under multiple versions — the scan reads it once and the
-    * mapping join fans the rows out per version, which is exactly the
-    * per-version replay semantics. Distinct keys mapping to distinct
-    * paths is guarded; a collision degrades to per-version reads. */
+    * keyed by file. `known` are the files the log gave a size for:
+    * when they cover every table-local path the scan plans with zero
+    * listing I/O, otherwise it takes its explicit-schema read.
+    * Historical replays want the files' rows as written, so no vector
+    * applies (the vector guards refuse the commits where one would). */
   private def readReplays(
-      spark: SparkSession, l: DlvLog, meta: Metadata,
-      entries: Seq[Entry], changeType: String): Seq[DataFrame] = {
-    if (entries.isEmpty) return Nil
-    if (hasKeyCollision(entries) ||
-        entries.exists(e => DlvLog.isAbsolutePath(e.rel)))
-      // two distinct files share a terminal segment — NOT exotic: a
-      // partitioned write names each task's file part-NNNNN-<job uuid>
-      // in EVERY partition dir it touches, so any multi-partition
-      // append collides and takes this route — or an EXTERNAL
-      // (shallow-clone) file is in the range (the batched basePath
-      // read refuses paths outside the root). Fall back to one
-      // correct-by-construction read per version; meta is the
-      // range-END version's metadata — the same schema the batched
-      // path reads with, so the fallback can't emit a different shape
-      // when the schema evolved past `to`. Local-only versions ride
-      // the known-files index (sizes via a DriverPar stat sweep — no
-      // distributed listing job for files the log already names).
-      return entries.groupBy(e => (e.version, e.tsMs)).toSeq
-        .sortBy(_._1).map { case ((v, ts), es) =>
-          val rels = es.map(_.rel).distinct
-          val known =
-            if (rels.size <= 2048 &&
-                !rels.exists(DlvLog.isAbsolutePath)) {
-              val io = l.io
-              DriverPar.map(rels) { rel =>
-                val abs = l.resolve(rel)
-                AddFile(rel, DlvDml.hivePartValues(rel), io.size(abs),
-                  io.mtimeMs(abs), dataChange = false, stats = None)
-              }
-            } else Nil
-          DlvDml.readFiles(spark, l, rels, meta.schema,
-            dvFiles = known,
-            toLogical = DlvColMap.toLogicalRenames(meta),
-            partitionCols = meta.partitionColumns)
-            .withColumn("_change_type", lit(changeType))
-            .withColumn("_commit_version", lit(v))
-            .withColumn("_commit_timestamp",
-              (lit(ts) / 1000).cast("timestamp"))
-        }
-    // explicit schema from the log: no footer/inference job at plan
-    // time; columns a file predates read as typed nulls. Data files
-    // are on-disk bytes → request PHYSICAL names, rename back above.
-    // r19: below a bounded path count the scan plans through
-    // [[KnownFilesIndex]] (sizes via a DriverPar stat sweep, partition
-    // values parsed from the hive segments) instead of
-    // `spark.read.parquet` — ≥32 leaf paths there launch a distributed
-    // "listing leaf files" job per replay batch (a ~150 ms job in
-    // every dlv_cdf-shaped read, an object-store LIST storm at scale)
-    // to discover sizes a HEAD per file answers. Past the bound the
-    // distributed listing is the right tool and stays.
-    val physFields = meta.schema.fields.map(f =>
-      f.copy(name = DlvColMap.physicalOf(meta, f.name),
-        nullable = true)).toSeq
-    val rels = entries.map(_.rel).distinct
-    val raw0 =
-      if (rels.size <= 2048) {
-        val io = l.io
-        val adds = DriverPar.map(rels) { rel =>
-          val abs = l.resolve(rel)
-          AddFile(rel, DlvDml.hivePartValues(rel), io.size(abs),
-            io.mtimeMs(abs), dataChange = false, stats = None)
-        }
-        DlvDml.knownFilesDF(spark, l, adds, physFields,
-          meta.partitionColumns)
-      } else spark.read
-        .schema(org.apache.spark.sql.types.StructType(physFields))
-        .option("basePath", l.tableQualified)
-        .parquet(rels.map(l.resolveQualified): _*)
-    val raw = DlvColMap.toLogical(raw0, meta)
-    val projected = raw
-      .select(meta.schema.map(f => col(f.name)): _*)
+      spark: SparkSession, l: DlvLog, meta: Metadata, rels: Seq[String],
+      known: Seq[AddFile], changeType: String): DataFrame =
+    DlvDml.readFiles(spark, l, rels, meta.schema, dvFiles = known,
+        toLogical = DlvColMap.toLogicalRenames(meta),
+        partitionCols = meta.partitionColumns, keepFileKey = true)
+      .withColumnRenamed("__src_file", "__k")
       .withColumn("_change_type", lit(changeType))
-    Seq(stampByKey(spark, projected,
-      element_at(split(input_file_name(), "/"), -1), entries))
-  }
 }

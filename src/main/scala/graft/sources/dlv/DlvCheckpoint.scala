@@ -37,7 +37,10 @@ object DlvCheckpoint {
     StructField("deletionTimestamp", LongType),
     StructField("partitionValues", MapType(StringType, StringType)),
     StructField("dataChange", BooleanType),
-    StructField("hadDv", BooleanType)))
+    StructField("hadDv", BooleanType),
+    // nullable tail field: tombstones written before sizes were
+    // recorded read as size = null
+    StructField("size", LongType)))
   private val metaT = StructType(Seq(
     StructField("id", StringType),
     StructField("schemaDdl", StringType),
@@ -111,7 +114,7 @@ object DlvCheckpoint {
       null, null, null, null, null)
     case r: RemoveFile => Row(null,
       Row(r.path, r.deletionTimestamp, r.partitionValues, r.dataChange,
-        r.hadDv),
+        r.hadDv, r.size.map(Long.box).orNull),
       null, null, null, null)
     case m: graft.sources.dlv.Metadata => Row(null, null,
       Row(m.id, m.schemaDdl, m.partitionColumns, m.properties,
@@ -147,7 +150,8 @@ object DlvCheckpoint {
     } else if (!r.isNullAt(1)) {
       val x = r.getStruct(1)
       RemoveFile(x.getString(0), x.getLong(1), m(x, 2), x.getBoolean(3),
-        x.size > 4 && !x.isNullAt(4) && x.getBoolean(4))
+        x.size > 4 && !x.isNullAt(4) && x.getBoolean(4),
+        if (x.size <= 5 || x.isNullAt(5)) None else Some(x.getLong(5)))
     } else if (!r.isNullAt(2)) {
       val x = r.getStruct(2)
       graft.sources.dlv.Metadata(x.getString(0), x.getString(1),

@@ -383,9 +383,7 @@ object DlvDml {
           readFiles(spark, l, doomed.map(_.path), meta.schema, doomed,
             DlvColMap.toLogicalRenames(meta), meta.partitionColumns)
             .withColumn("_change_type", lit("delete")))
-      val removes = doomed.map(f =>
-        RemoveFile(f.path, now, f.partitionValues, dataChange = true,
-          hadDv = f.dv.nonEmpty))
+      val removes = doomed.map(_.remove(now, dataChange = true))
       // whole files go: deleted rows = their stats totals minus rows
       // already dead in their vectors
       val metrics = CommitInfo.rowCount(doomed).map(rows =>
@@ -441,9 +439,7 @@ object DlvDml {
       val hit = coalesce(cond, lit(false))
       val kept = touchedDf.filter(!hit)
       val adds = DlvTable.stageFiles(spark, l, kept, meta, dataChange = true)
-      val removes = touchedAdds
-        .map(f => RemoveFile(f.path, now, f.partitionValues,
-          dataChange = true, hadDv = f.dv.nonEmpty))
+      val removes = touchedAdds.map(_.remove(now, dataChange = true))
       val cdc =
         if (!cdfEnabled(meta)) None
         else writeCdc(spark, l, meta, touchedDf.filter(hit)
@@ -550,9 +546,7 @@ object DlvDml {
               delImg.map(_.unionByName(insertImages))
                 .getOrElse(insertImages))
           }
-        val removes = doomed.map(f =>
-          RemoveFile(f.path, now, f.partitionValues, dataChange = true,
-            hadDv = f.dv.nonEmpty))
+        val removes = doomed.map(_.remove(now, dataChange = true))
         return tx.commit(DlvIdentity.advance(meta, staged).toSeq ++
           removes ++ staged ++ cdc, isBlindAppend = false)
       }
@@ -580,9 +574,7 @@ object DlvDml {
           .getOrElse(inserted)
         val staged = DlvTable.stageFiles(spark, l, out, meta,
           dataChange = true)
-        val removes = touchedAdds.map(f =>
-          RemoveFile(f.path, now, f.partitionValues, dataChange = true,
-            hadDv = f.dv.nonEmpty))
+        val removes = touchedAdds.map(_.remove(now, dataChange = true))
         val cdc =
           if (!cdfEnabled(meta)) None
           else writeCdc(spark, l, meta,
@@ -677,9 +669,7 @@ object DlvDml {
       val adds = DlvTable.stageFiles(spark, l, rewritten, meta,
         dataChange = true)
       val now = System.currentTimeMillis()
-      val removes = touchedAdds
-        .map(f => RemoveFile(f.path, now, f.partitionValues,
-          dataChange = true, hadDv = f.dv.nonEmpty))
+      val removes = touchedAdds.map(_.remove(now, dataChange = true))
       val cdc =
         if (!cdfEnabled(meta)) None
         else {
@@ -964,9 +954,7 @@ object DlvDml {
 
     try {
       val now = System.currentTimeMillis()
-      val removes = rewriteFiles
-        .map(f => RemoveFile(f.path, now, f.partitionValues,
-          dataChange = true, hadDv = f.dv.nonEmpty))
+      val removes = rewriteFiles.map(_.remove(now, dataChange = true))
       val adds =
         if (outputs.isEmpty) Nil
         else DlvTable.stageFiles(spark, l,
@@ -1242,14 +1230,15 @@ object DlvDml {
     * AddFiles being read, when the caller has them) applies their
     * deletion vectors — every REWRITE source must pass them, or a
     * rewrite would resurrect soft-deleted rows. Historical replays
-    * (CDF) deliberately pass nothing: they want the file's rows as
-    * written.
+    * (CDF) pass vector-free entries only for their log sizes: they
+    * want the file's rows as written.
     *
     * With `keepFileKey` the output carries one extra `__src_file`
-    * column — the row's source-file key (table-relative path form) —
-    * for callers that shuffle rewrites by source file (distributed
-    * REORG); it resolves per scan leg, where `input_file_name()`
-    * would refuse a multi-source (DV anti-join) plan. */
+    * column — the row's source-file key ([[DlvDv.keyOf]] form) — for
+    * callers that shuffle rewrites by source file (distributed REORG)
+    * or stamp rows by it (the change feed); it resolves per scan leg,
+    * where `input_file_name()` would refuse a multi-source (DV
+    * anti-join) plan. */
   def readFiles(
       spark: SparkSession, l: DlvLog, relPaths: Seq[String],
       schema: org.apache.spark.sql.types.StructType,

@@ -345,9 +345,7 @@ object DlvDv {
       }
       // removes describe the REPLACED entries — hadDv reflects their
       // PRIOR vector state, not the grown one
-      val removes = affected
-        .map(f => RemoveFile(f.path, now, f.partitionValues,
-          dataChange = true, hadDv = f.dv.nonEmpty))
+      val removes = affected.map(_.remove(now, dataChange = true))
       // removes FIRST: same-path remove-then-add within one commit
       // replays to the re-added (vector-bearing) entry
       removes ++ grown ++ extras

@@ -76,6 +76,24 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
     io.readLines(io.child(logDir, CommitStore.fileName(v)))
       .filter(_.nonEmpty).flatMap(Actions.fromJson)
 
+  /** Actions of every commit in `from..to`, in version order. The
+    * reads fan out over a bounded pool: each is one small object, and
+    * a 10⁴-commit range on an object store at ~20 ms/read would
+    * otherwise serialize into minutes of driver wall time. A commit
+    * missing below the newest checkpoint is the log retention horizon
+    * (DlvMaintenance.cleanupLog) — named, and probed only on failure. */
+  def commitActionsIn(from: Long, to: Long): Seq[Seq[Action]] =
+    DriverPar.map((from to to).toVector) { v =>
+      try commitActionsOf(v)
+      catch {
+        case e: Exception
+            if !io.exists(io.child(logDir, CommitStore.fileName(v))) =>
+          throw new IllegalStateException(
+            s"version $v of $tablePath predates the log retention " +
+              s"horizon (commit $v was cleaned up)", e)
+      }
+    }
+
   /** Publish `actions` as `version`; true if this writer won. Writes a
     * checkpoint afterwards when the interval divides the version.
     * The single choke point every schema change passes through —

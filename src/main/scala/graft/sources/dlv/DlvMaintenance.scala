@@ -453,9 +453,7 @@ object DlvMaintenance {
           }
         val partAdds = DlvTable.stageFiles(spark, l, arranged, meta,
           dataChange = false)
-        val partRemoves = files.map(f =>
-          RemoveFile(f.path, now, f.partitionValues, dataChange = false,
-            hadDv = f.dv.nonEmpty))
+        val partRemoves = files.map(_.remove(now, dataChange = false))
         (partAdds, partRemoves)
       }.seq
       finally pool.shutdown()
@@ -517,9 +515,7 @@ object DlvMaintenance {
         val adds = DlvTable.stageFiles(spark, l,
           df.repartition(targets, keys: _*).drop("__src_file"),
           meta, dataChange = false)
-        val removes = selected.map(f =>
-          RemoveFile(f.path, now, f.partitionValues,
-            dataChange = false, hadDv = true))
+        val removes = selected.map(_.remove(now, dataChange = false))
         Seq((adds, removes))
       } else {
         // few touched partitions: independent per-partition rewrite
@@ -541,9 +537,7 @@ object DlvMaintenance {
             (files.map(_.size).sum / targetFileBytes).toInt)
           val partAdds = DlvTable.stageFiles(spark, l,
             df.repartition(targetParts), meta, dataChange = false)
-          val partRemoves = files.map(f =>
-            RemoveFile(f.path, now, f.partitionValues,
-              dataChange = false, hadDv = true))
+          val partRemoves = files.map(_.remove(now, dataChange = false))
           (partAdds, partRemoves)
         }.seq
         finally pool.shutdown()
@@ -602,9 +596,7 @@ object DlvMaintenance {
     tx.readFilePaths = missing.map(_.path).toSet
     tx.readPartitions = Some(missing.map(_.partitionValues).toSet)
     val now = System.currentTimeMillis()
-    val removes = missing.map(f =>
-      RemoveFile(f.path, now, f.partitionValues, dataChange = true,
-        hadDv = f.dv.nonEmpty))
+    val removes = missing.map(_.remove(now, dataChange = true))
     val lostRows = CommitInfo.rowCount(missing).map(r =>
       Map("numDeletedRows" ->
         (r - missing.flatMap(_.dv).map(_.cardinality).sum).toString))

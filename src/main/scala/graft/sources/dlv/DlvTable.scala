@@ -250,9 +250,7 @@ object DlvTable {
     // dataChange=false so the feed correctly reports NOTHING for this
     // version instead of tripping the vector-replay guard
     val dataChange = !(dvCase && cdc.isEmpty)
-    val removes = old.map(f =>
-      RemoveFile(f.path, now, f.partitionValues,
-        dataChange = dataChange, hadDv = f.dv.nonEmpty))
+    val removes = old.map(_.remove(now, dataChange))
     tx.commit(DlvIdentity.advance(st.metadata, adds).toSeq ++
       removes ++ adds ++ cdc, isBlindAppend = false)
   }
@@ -588,8 +586,7 @@ object DlvTable {
         .drop("__dvk")
         .as(org.apache.spark.sql.Encoders.product[AddFile])
         .collect().toSeq
-        .map(f => RemoveFile(f.path, now, f.partitionValues,
-          dataChange = true, hadDv = f.dv.nonEmpty))
+        .map(_.remove(now, dataChange = true))
       val io = l.io
       val root = l.tablePath
       // existence covers the DV SIDECARS of re-added vector-bearing
@@ -648,8 +645,7 @@ object DlvTable {
       val adds = target.files.filterNot(f => curKeys(key(f)))
         .map(_.copy(dataChange = true))
       val removes = cur.files.filterNot(f => tgtKeys(key(f)))
-        .map(f => RemoveFile(f.path, now, f.partitionValues,
-          dataChange = true, hadDv = f.dv.nonEmpty))
+        .map(_.remove(now, dataChange = true))
       val metaAction: Seq[Action] =
         if (cur.metadata != target.metadata) Seq(target.metadata) else Nil
       // removes BEFORE adds: with (path, dv) diff identity the same

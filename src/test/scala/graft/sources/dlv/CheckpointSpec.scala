@@ -128,6 +128,16 @@ class CheckpointSpec extends SparkSpec {
         Seq("add", "commitInfo", "metaData", "protocol", "remove",
           "sidecar"))
       assert(df.filter(col("add").isNotNull).count() > 0)
+      // tombstones keep their size through the columnar codec; one
+      // written before sizes were recorded reads back as None
+      val tombstones = Seq(
+        RemoveFile("p=1/a.parquet", 5L, Map("p" -> "1"),
+          dataChange = true, hadDv = true, size = Some(1234L)),
+        RemoveFile("p=2/b.parquet", 6L, Map("p" -> "2"),
+          dataChange = false))
+      val tdir = l.io.child(path, "tombstones.parquet")
+      DlvCheckpoint.writeParquet(spark, tombstones, tdir)
+      assert(DlvCheckpoint.readParquet(spark, tdir, identity) == tombstones)
     } finally sys.props.remove(key)
   }
 }

@@ -3,12 +3,33 @@ package graft.sources.dlv
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
-class DlvDmlSpec extends SparkSpec {
+class DlvDmlSpec extends SparkSpec with DlvTestProps {
 
   private def freshDir(name: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"dlv-$name-")
     d.toFile.deleteOnExit()
     d.resolve("t").toString
+  }
+
+  /** Descriptions of the file-listing jobs `body` launched — the job
+    * Spark's InMemoryFileIndex runs to discover leaf files. */
+  private def listingJobs(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("Listing leaf files"))
+          .foreach(seen.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
   }
 
   private def orders = Tables.orders(spark, sf)
@@ -403,19 +424,34 @@ class DlvDmlSpec extends SparkSpec {
     DlvDml.update(spark, path, col("id") === 200L, Map("v" -> lit(998L)))
     val latest = DlvTable.log(path).latestVersion
     assert(latest >= 52)
-    val ch = DlvChangeFeed.changes(spark, path, 0).cache()
     // the 10⁴-commit hazard: one relation per version stalls the
     // optimizer before a byte is read — the plan must stay at one scan
-    // per change KIND (cdc / add-replay / remove-replay)
-    val scanLeaves = ch.queryExecution.optimizedPlan.collectLeaves()
-      .count {
-        case _: org.apache.spark.sql.execution.datasources.LogicalRelation
-          => true
-        case _ => false
+    // per change KIND (cdc / add-replay / remove-replay), and every
+    // replayed file is known from the log, so neither planning nor
+    // execution runs a file-listing job
+    def boundedFeed(p: String): org.apache.spark.sql.DataFrame = {
+      val versions = DlvTable.log(p).latestVersion + 1
+      var ch: org.apache.spark.sql.DataFrame = null
+      var scanLeaves = -1
+      val listings = listingJobs {
+        ch = DlvChangeFeed.changes(spark, p, 0)
+        // counted before caching: a cached frame's optimized plan is
+        // one InMemoryRelation leaf
+        scanLeaves = ch.queryExecution.optimizedPlan.collectLeaves()
+          .count {
+            case _: org.apache.spark.sql.execution.datasources.LogicalRelation
+              => true
+            case _ => false
+          }
+        ch.cache().count()
       }
-    assert(scanLeaves <= 3,
-      s"$scanLeaves scan relations for ${latest + 1} versions — " +
-        "the CDF read is planning per-version scans")
+      assert(scanLeaves <= 3,
+        s"$scanLeaves scan relations for $versions versions — " +
+          "the CDF read is planning per-version scans")
+      assert(listings.isEmpty, s"file-listing jobs ran: $listings")
+      ch
+    }
+    val ch = boundedFeed(path)
     // stamps are correct across the whole range: every append version
     // contributes exactly its 10 rows as inserts
     val perVersion = ch.filter(col("_change_type") === "insert")
@@ -436,7 +472,57 @@ class DlvDmlSpec extends SparkSpec {
       .sortBy(_._1).map(_._2)
     assert(tsByV.zip(tsByV.tail).forall { case (a, b) => a <= b })
     ch.unpersist()
+
+    // partitioned, CDF off: every append writes part-NNNNN-<job uuid>
+    // into each of its 4 partition dirs (one writer task), and the
+    // DELETE's removes replay as whole-file deletes
+    val ppath = freshDir("cdfplanpart")
+    DlvTable.create(spark, ppath, "id BIGINT, p INT", Seq("p"))
+    (1 to 10).foreach { i =>
+      DlvTable.append(spark, ppath, Seq.tabulate(8)(j =>
+        (i * 100L + j, j % 4)).toDF("id", "p").coalesce(1))
+    }
+    DlvDml.delete(spark, ppath, col("id") % 100 === 0L) // v11
+    val pch = boundedFeed(ppath)
+    val counts = pch.groupBy("_commit_version", "_change_type").count()
+      .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2))
+      .toMap
+    assert(counts == (1L to 10L).map(v => (v, "insert") -> 8L).toMap ++
+      Map((11L, "insert") -> 10L, (11L, "delete") -> 20L),
+      s"per-version change counts: $counts")
+    // partition values come from the log's remove actions
+    assert(pch.filter(col("_change_type") === "delete")
+      .filter(col("p") =!= 0).isEmpty)
+    pch.unpersist()
     ()
+  }
+
+  test("a remove written before RemoveFile.size existed still replays " +
+    "its deletes, on both routes") {
+    import spark.implicits._
+    val path = freshDir("cdflegacy")
+    DlvTable.create(spark, path, "id BIGINT, p INT", Seq("p"))
+    DlvTable.append(spark, path,
+      Seq.tabulate(6)(i => (i.toLong, i % 2)).toDF("id", "p")) // v1
+    val l = DlvTable.log(path)
+    val doomed = l.snapshot().files.filter(_.partitionValues("p") == "1")
+    // the format before sizes were recorded: no `size` on the remove
+    val removes = doomed.map(_.remove(1L, dataChange = true)
+      .copy(size = None))
+    assert(l.commit(2, removes :+ CommitInfo(2, 2L, "DELETE", Map.empty,
+      isBlindAppend = false)))
+    assert(l.io.readLines(l.io.child(l.logDir, CommitStore.fileName(2)))
+      .filter(_.contains("\"remove\"")).forall(!_.contains("\"size\"")))
+    for (threshold <- Seq("1000", "1")) {
+      withProps("graft.dlv.cdfDistributedRangeThreshold" -> threshold) {
+        val deletes = DlvChangeFeed.changes(spark, path, 0)
+          .filter(col("_change_type") === "delete")
+          .select("id", "p", "_commit_version").as[(Long, Int, Long)]
+          .collect().toSet
+        assert(deletes == Set((1L, 1, 2L), (3L, 1, 2L), (5L, 1, 2L)),
+          s"threshold $threshold: $deletes")
+      }
+    }
   }
 
   test("CDF over 10^3 versions: plan stays bounded (one scan per " +
@@ -458,25 +544,25 @@ class DlvDmlSpec extends SparkSpec {
       .find(_.toString.endsWith(".parquet")).get
     java.nio.file.Files.copy(src,
       java.nio.file.Paths.get(path, "part-shared.parquet"))
+    val size = java.nio.file.Files.size(src)
     val meta = graft.sources.dlv.Metadata(
       "cdf1k-id", "id BIGINT, v DOUBLE", Nil, Map.empty, 1L)
     val nVersions = 1000
     (0L to nVersions.toLong).foreach { v =>
       val actions: Seq[Action] =
         (if (v == 0) Seq(Protocol(), meta)
-         else Seq(AddFile("part-shared.parquet", Map.empty, 10L, v,
+         else Seq(AddFile("part-shared.parquet", Map.empty, size, v,
            dataChange = true, None))) :+
           CommitInfo(v, v, if (v == 0) "CREATE TABLE" else "WRITE",
             Map.empty, isBlindAppend = v != 0)
       assert(l.commit(v, actions))
     }
-    val old = sys.props.get("graft.dlv.cdfStampBroadcastLimit")
     val oldRange = sys.props.get("graft.dlv.cdfDistributedRangeThreshold")
-    sys.props("graft.dlv.cdfStampBroadcastLimit") = "10"
-    // pin the DRIVER route: this case asserts the driver mapping's
-    // explicit no-broadcast behavior past its limit — the distributed
-    // route (checked below) legitimately lets the planner broadcast a
-    // runtime-small mapping
+    // the planner's broadcast threshold decides the stamp join: off,
+    // the 10^3-row mapping must join shuffled
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // pin the DRIVER route first; the distributed route is checked
+    // below against it
     sys.props("graft.dlv.cdfDistributedRangeThreshold") =
       (nVersions * 2).toString
     try {
@@ -489,14 +575,14 @@ class DlvDmlSpec extends SparkSpec {
         }
       assert(scanLeaves <= 3,
         s"$scanLeaves scan relations over ${nVersions + 1} versions")
-      // 10^3 mapping rows > forced limit 10: the stamp join must NOT
-      // be a broadcast — the mapping ships as a parallelized dataset
+      // broadcast joins off: the 10^3-row stamp mapping must ship as a
+      // shuffled join, not a broadcast
       val broadcasts = ch.queryExecution.sparkPlan.collect {
         case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
           => b
       }
       assert(broadcasts.isEmpty,
-        "past the limit the stamp mapping must not broadcast")
+        "with broadcast joins off the stamp mapping must not broadcast")
       // end-to-end: every version replays the file's 5 rows as inserts
       assert(ch.count() == 5L * nVersions)
       val perV = ch.groupBy("_commit_version").count()
@@ -520,14 +606,7 @@ class DlvDmlSpec extends SparkSpec {
       assert(chD.exceptAll(ch).isEmpty && ch.exceptAll(chD).isEmpty,
         "distributed and driver CDF routes must be row-identical")
     } finally {
-      old match {
-        case Some(v) =>
-          sys.props("graft.dlv.cdfStampBroadcastLimit") = v
-          ()
-        case None =>
-          sys.props.remove("graft.dlv.cdfStampBroadcastLimit")
-          ()
-      }
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       oldRange match {
         case Some(v) =>
           sys.props("graft.dlv.cdfDistributedRangeThreshold") = v
