@@ -16,16 +16,6 @@ object DlvMaintenance {
     * none of them serially). */
   val DISTRIBUTED_LISTING_THRESHOLD = 64
 
-  /** REORG PURGE's rewrite-route switch: above this many vector-
-    * bearing PARTITIONS the rewrite runs as one distributed job keyed
-    * by (partition, source file) instead of per-partition jobs through
-    * the 8-way driver pool (which serializes thousands of touched
-    * partitions into waves of 8 job latencies). Overridable for tests
-    * via -Dgraft.dlv.reorgDistributedPartitions. */
-  def reorgDistributedPartitionThreshold: Int =
-    sys.props.get("graft.dlv.reorgDistributedPartitions")
-      .map(_.trim.toInt).getOrElse(32)
-
   /** One vacuum pass's reclamation, population by population: data
     * files deleted/kept (one candidate set) and deletion-vector
     * sidecar objects swept (a separate `_dlv_log/_dv` population —
@@ -382,12 +372,17 @@ object DlvMaintenance {
     } finally candidates.unpersist()
   }
 
-  /** Bin-pack each partition's files into ~`targetFileBytes` outputs;
-    * with `zorderBy` set, rows are clustered by interleaved-bit Morton
-    * order first so min/max ranges of the rewritten files tighten on
-    * every z-dimension. Rewrites carry `dataChange = false` — an
-    * OPTIMIZE never changes table CONTENT, so concurrent readers and
-    * CDF consumers see nothing. */
+  /** Compact each selected partition into ~`targetFileBytes` outputs
+    * through [[rewrite]]: partitions holding more than one file, or a
+    * vector-bearing file, are rewritten (with `zorderBy` set, every
+    * non-empty partition is). Plain OPTIMIZE bin-packs whole files;
+    * with `zorderBy` rows are clustered by interleaved-bit Morton order
+    * so min/max ranges of the rewritten files tighten on every
+    * z-dimension. `where` must be partition-only. Rewrites carry
+    * `dataChange = false` — an OPTIMIZE never changes table CONTENT,
+    * so concurrent readers and CDF consumers see nothing. Returns the
+    * committed version (the read version when nothing needed a
+    * rewrite). */
   def optimize(
       spark: SparkSession, path: String,
       zorderBy: Seq[String] = Nil,
@@ -414,55 +409,14 @@ object DlvMaintenance {
         st.filesWherePartition(
           DlvDml.boundPartition(aCond, meta.partitionSchema))
     }
-    val byPartition = selected.groupBy(_.partitionValues)
-    val now = System.currentTimeMillis()
-    // rewrite partitions CONCURRENTLY: each is an independent Spark job
-    // (read its files → arrange → stage), and a serial loop turns a
-    // thousand-partition table into a thousand sequential job latencies
-    // (it made OPTIMIZE the slowest scenario in the whole bench). A
-    // bounded pool keeps the scheduler fed without flooding it.
-    import scala.collection.parallel.CollectionConverters._
-    import scala.collection.parallel.ForkJoinTaskSupport
-    val pool = new java.util.concurrent.ForkJoinPool(
-      math.min(8, Runtime.getRuntime.availableProcessors()))
-    val tasks = byPartition.toSeq.filter { case (_, files) =>
-      files.size > 1 || (zorderBy.nonEmpty && files.nonEmpty) ||
-        // a lone vector-bearing file is still worth rewriting: the
-        // compaction materializes the soft-deletes and drops the
-        // sidecar dependency
-        files.exists(_.dv.nonEmpty)
-    }.par
-    tasks.tasksupport = new ForkJoinTaskSupport(pool)
-    val rewritten: Seq[(Seq[AddFile], Seq[RemoveFile])] =
-      try tasks.map { case (_, files) =>
-        // read through any deletion vectors: compaction both respects
-        // and PURGES them (the rewritten files carry no vector)
-        val df = DlvDml.readFiles(spark, l, files.map(_.path),
-          meta.schema, files, DlvColMap.toLogicalRenames(meta),
-          meta.partitionColumns)
-        val targetParts = math.max(1,
-          (files.map(_.size).sum / targetFileBytes).toInt)
-        val arranged =
-          if (zorderBy.isEmpty) df.repartition(targetParts)
-          else {
-            val z = graft.functions.ZOrder.mortonOf(df, zorderBy)
-            df.withColumn("__z", z)
-              .repartitionByRange(targetParts, col("__z"))
-              .sortWithinPartitions("__z")
-              .drop("__z")
-          }
-        val partAdds = DlvTable.stageFiles(spark, l, arranged, meta,
-          dataChange = false)
-        val partRemoves = files.map(_.remove(now, dataChange = false))
-        (partAdds, partRemoves)
-      }.seq
-      finally pool.shutdown()
-    val adds = rewritten.flatMap(_._1)
-    val removes = rewritten.flatMap(_._2)
-    tx.readFilePaths = removes.map(_.path).toSet
-    tx.readPartitions = Some(removes.map(_.partitionValues).toSet)
-    if (removes.isEmpty) tx.readVersion
-    else tx.commit((removes ++ adds).toSeq, isBlindAppend = false)
+    rewrite(spark, l, tx, meta,
+      selected.groupBy(_.partitionValues).values.toSeq.filter { files =>
+        files.size > 1 || zorderBy.nonEmpty ||
+          // a lone vector-bearing file is still worth rewriting: the
+          // compaction materializes the soft-deletes and drops the
+          // sidecar dependency
+          files.exists(_.dv.nonEmpty)
+      }, zorderBy, targetFileBytes)
   }
 
   /** `REORG TABLE .. APPLY (PURGE)` — delta's deletion-vector
@@ -471,7 +425,9 @@ object DlvMaintenance {
     * and the sidecar dependencies drop; vector-FREE files are never
     * touched. This is the cheap DV-lifecycle closer — after a year of
     * sparse deletes, purging costs a rewrite of just the touched
-    * fraction, where a full OPTIMIZE would bin-pack everything.
+    * fraction, where a full OPTIMIZE would bin-pack everything. The
+    * rewrite is [[optimize]]'s bin-packing job over the vector-bearing
+    * files, ~`targetFileBytes` per output.
     * `dataChange = false`: the logical row set is unchanged, so
     * change feeds skip the commit and streams don't re-see rows.
     * VACUUM reclaims the unreferenced sidecars afterwards. Returns
@@ -484,69 +440,103 @@ object DlvMaintenance {
     val tx = new OptimisticTransaction(l, "REORG",
       Map("apply" -> "PURGE"))
     val st = DlvDml.dmlState(spark, l, tx)
-    val meta = st.metadata
-    val selected = st.filesWithDv
-    if (selected.isEmpty) return tx.readVersion
-    val byPartition = selected.groupBy(_.partitionValues)
-    val now = System.currentTimeMillis()
-    val rewritten: Seq[(Seq[AddFile], Seq[RemoveFile])] =
-      if (byPartition.size > reorgDistributedPartitionThreshold) {
-        // MANY vector-bearing partitions: ONE distributed rewrite job
-        // instead of per-partition job submissions — the driver pool
-        // below caps at 8 concurrent jobs, so thousands of touched
-        // partitions serialize into thousands of sequential job
-        // latencies (r18 verdict item). One readFiles over the whole
-        // selection (vectors applied), shuffled by (partition values,
-        // source file) so each input file's surviving rows land
-        // together — output files track input sizing without
-        // per-partition byte math — and ONE partitioned stageFiles
-        // write. The salt is the `__src_file` key readFiles
-        // materializes per scan leg (input_file_name() refuses the DV
-        // anti-join's multi-source plan) — a pure function of the
-        // row's source file, so the shuffle assignment is
-        // retry-stable.
-        val df = DlvDml.readFiles(spark, l, selected.map(_.path),
-          meta.schema, selected, DlvColMap.toLogicalRenames(meta),
-          meta.partitionColumns, keepFileKey = true)
-        val targets = math.max(byPartition.size,
-          (selected.map(_.size).sum / targetFileBytes).toInt)
-        val keys = meta.partitionColumns.map(col) :+
-          xxhash64(col("__src_file"))
-        val adds = DlvTable.stageFiles(spark, l,
-          df.repartition(targets, keys: _*).drop("__src_file"),
-          meta, dataChange = false)
-        val removes = selected.map(_.remove(now, dataChange = false))
-        Seq((adds, removes))
-      } else {
-        // few touched partitions: independent per-partition rewrite
-        // jobs, bounded pool — the same concurrency shape as OPTIMIZE
-        // (a serial loop would pay one job latency per partition)
-        import scala.collection.parallel.CollectionConverters._
-        import scala.collection.parallel.ForkJoinTaskSupport
-        val pool = new java.util.concurrent.ForkJoinPool(
-          math.min(8, Runtime.getRuntime.availableProcessors()))
-        val tasks = byPartition.toSeq.par
-        tasks.tasksupport = new ForkJoinTaskSupport(pool)
-        try tasks.map { case (_, files) =>
-          // read THROUGH the vectors: the rewrite materializes the
-          // soft-deletes and the clean files carry no vector
-          val df = DlvDml.readFiles(spark, l, files.map(_.path),
-            meta.schema, files, DlvColMap.toLogicalRenames(meta),
-            meta.partitionColumns)
-          val targetParts = math.max(1,
-            (files.map(_.size).sum / targetFileBytes).toInt)
-          val partAdds = DlvTable.stageFiles(spark, l,
-            df.repartition(targetParts), meta, dataChange = false)
-          val partRemoves = files.map(_.remove(now, dataChange = false))
-          (partAdds, partRemoves)
-        }.seq
-        finally pool.shutdown()
+    rewrite(spark, l, tx, st.metadata,
+      st.filesWithDv.groupBy(_.partitionValues).values.toSeq, Nil,
+      targetFileBytes)
+  }
+
+  /** The one rewrite job behind OPTIMIZE, Z-ORDER and REORG PURGE
+    * (delta's bin-packing OPTIMIZE, Armbrust et al., VLDB 2020): replace
+    * exactly the files of `groups` (one group per partition) in one
+    * commit, whatever the partition count, with one read, one shuffle
+    * and one partitioned write.
+    *   - Bins are planned on the driver from the log's sizes, with no
+    *     data I/O: partition p gets `k_p = max(1, bytes_p /
+    *     targetFileBytes)` bins, and its files pack whole, largest
+    *     first into the lightest bin.
+    *   - The selection is read once, vectors applied, and each row is
+    *     tagged with its file's global bin through the shared file key
+    *     (`__src_file`, the [[DlvDv.relFileExpr]] ↔ [[DlvDv.keyOf]]
+    *     pair); one shuffle sends bin b to task b, so no task spans
+    *     two partitions.
+    *   - Z-ORDER tags the partition's first bin instead, computes the
+    *     Morton key once over the selection, moves each row up by the
+    *     number of its partition's key quantiles below it and sorts
+    *     each task by the key: a partition's files hold disjoint key
+    *     ranges.
+    * Returns the committed version (the read version when `groups`
+    * holds no file). */
+  private def rewrite(
+      spark: SparkSession, l: DlvLog, tx: OptimisticTransaction,
+      meta: Metadata, groups: Seq[Seq[AddFile]], zorderBy: Seq[String],
+      targetFileBytes: Long): Long = {
+    require(targetFileBytes > 0,
+      s"targetFileBytes must be positive, got $targetFileBytes")
+    val files = groups.flatten
+    if (files.isEmpty) return tx.readVersion
+    val bins = groups.map { fs =>
+      val k = math.max(1L, fs.map(_.size).sum / targetFileBytes)
+      // whole files pack: bins past the file count would stay empty
+      (if (zorderBy.isEmpty) math.min(k, fs.size.toLong) else k).toInt
+    }
+    val first = bins.scanLeft(0)(_ + _)
+    // file key → global bin: bin-packing puts whole files, largest
+    // first, into the partition's lightest bin; Z-ORDER tags the
+    // partition's first bin and offsets by the Morton key below
+    val binOf = spark.sparkContext.broadcast(
+      groups.zip(bins).zip(first).flatMap { case ((fs, k), b0) =>
+        if (zorderBy.nonEmpty) fs.map(f => DlvDv.keyOf(l, f.path) -> b0)
+        else {
+          val open = scala.collection.mutable.PriorityQueue(
+            (0 until k).map(b => (0L, b)): _*)(Ordering.by(-_._1))
+          fs.sortBy(-_.size).map { f =>
+            val (load, b) = open.dequeue()
+            open.enqueue((load + f.size, b))
+            DlvDv.keyOf(l, f.path) -> (b0 + b)
+          }
+        }
+      }.toMap)
+    val df = DlvDml.readFiles(spark, l, files.map(_.path), meta.schema,
+      files, DlvColMap.toLogicalRenames(meta), meta.partitionColumns,
+      keepFileKey = true)
+    val tagged = df.withColumn("__bin",
+      udf((key: String) => binOf.value(key)).apply(col("__src_file")))
+    val arranged =
+      if (zorderBy.isEmpty) tagged.repartitionById(bins.sum, col("__bin"))
+      else {
+        val z = tagged.withColumn("__z",
+          graft.functions.ZOrder.mortonOf(df, zorderBy))
+        // a partition given k > 1 bins splits at its k-quantiles of
+        // the key: one approximate-quantile aggregation over those
+        // partitions (at K-quantile resolution, K the largest k)
+        val kOf = first.zip(bins).toMap
+        val split = kOf.filter(_._2 > 1).keys.toSeq
+        val big = bins.max
+        val cuts = spark.sparkContext.broadcast(
+          if (split.isEmpty) Map.empty[Int, IndexedSeq[Long]]
+          else z.filter(col("__bin").isin(split: _*)).groupBy("__bin")
+            .agg(percentile_approx(col("__z"),
+              lit((1 until big).map(_.toDouble / big).toArray),
+              lit(10000)))
+            .collect().map { r =>
+              val (b0, qs) = (r.getInt(0), r.getSeq[Long](1))
+              b0 -> (1 until kOf(b0)).map(j => qs(j * big / kOf(b0) - 1))
+            }.toMap)
+        val keys = meta.partitionColumns.map(col) :+ col("__z")
+        z.repartitionById(bins.sum,
+            udf((b0: Int, zv: Long) => b0 + cuts.value.get(b0)
+              .fold(0)(_.search(zv).insertionPoint))
+              .apply(col("__bin"), col("__z")))
+          .sortWithinPartitions(keys: _*)
       }
-    val adds = rewritten.flatMap(_._1)
-    val removes = rewritten.flatMap(_._2)
-    tx.readFilePaths = removes.map(_.path).toSet
-    tx.readPartitions = Some(removes.map(_.partitionValues).toSet)
-    tx.commit((removes ++ adds).toSeq, isBlindAppend = false)
+    val adds = DlvTable.stageFiles(spark, l,
+      arranged.drop("__src_file", "__bin", "__z"), meta,
+      dataChange = false)
+    val now = System.currentTimeMillis()
+    tx.readFilePaths = files.map(_.path).toSet
+    tx.readPartitions = Some(files.map(_.partitionValues).toSet)
+    tx.commit(files.map(_.remove(now, dataChange = false)) ++ adds,
+      isBlindAppend = false)
   }
 
   /** delta's `FSCK REPAIR TABLE`: drop table references to physically

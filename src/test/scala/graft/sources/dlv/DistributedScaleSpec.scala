@@ -571,15 +571,14 @@ class DistributedScaleSpec extends SparkSpec with DlvTestProps {
    }
   }
 
-  test("REORG PURGE past the thresholds rewrites in ONE distributed " +
+  test("REORG PURGE rewrites in ONE distributed " +
     "job: zero driver snapshot materializations, vectors purged, " +
     "rows exact") {
    withProps(DIST -> "1", CKPT -> "1",
        // v2 (the DV delete) lands on the interval boundary, so the
        // `_last_checkpoint` hint exists (parquet-format via CKPT=1)
        // and routing goes distributed
-       "graft.dlv.checkpointInterval" -> "2",
-       "graft.dlv.reorgDistributedPartitions" -> "4") {
+       "graft.dlv.checkpointInterval" -> "2") {
     import org.apache.spark.sql.functions.{col, concat, lit, sum}
     val dir = java.nio.file.Files.createTempDirectory("dlv-reorg-dist-")
     dir.toFile.deleteOnExit()
@@ -591,7 +590,7 @@ class DistributedScaleSpec extends SparkSpec with DlvTestProps {
       Seq("p"), Map(DlvDv.PROP -> "true", DlvDml.CDF_PROP -> "true"))
     DlvTable.append(spark, path, df.repartition(col("p")))
     // soft-delete a slice of EVERY partition: 8 vector-bearing
-    // partitions > the 4-partition override → the distributed route
+    // partitions, rewritten by the one job
     DlvDml.delete(spark, path, col("id") % 5 === 0)
     val l = DlvTable.log(path)
     val idx0 = DlvDistributedFileIndex

@@ -328,6 +328,100 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps {
         s"$fullSpan")
   }
 
+  test("OPTIMIZE, ZORDER BY and REORG PURGE launch as many jobs on 16 " +
+    "partitions as on 2, replacing exactly the selected files") {
+    val sc = spark.sparkContext
+    def jobsOf(body: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      try {
+        body
+        org.apache.spark.ListenerBusDrain(sc)
+      } finally sc.removeSparkListener(listener)
+      n.get
+    }
+    // 3 single-task appends (one file per partition each), plus a DV
+    // delete that puts a vector on every file for REORG
+    def fixture(parts: Int, dv: Boolean): String = {
+      val path = freshDir(s"rw$parts")
+      DlvTable.create(spark, path, "id BIGINT, p INT", Seq("p"),
+        if (dv) Map(DlvDv.PROP -> "true") else Map.empty)
+      (1 to 3).foreach(_ => DlvTable.append(spark, path,
+        spark.range(0, 3000).coalesce(1)
+          .select(col("id"), (col("id") % parts).cast("int").as("p"))))
+      if (dv) DlvDml.delete(spark, path, col("id") % 5 === 0)
+      path
+    }
+    def run(parts: Int, op: String): Int = {
+      val path = fixture(parts, dv = op == "reorg")
+      val l = DlvTable.log(path)
+      val before = l.snapshot().files
+      assert(before.size == 3 * parts)
+      var v = -1L
+      val jobs = jobsOf {
+        v = op match {
+          case "optimize" => DlvMaintenance.optimize(spark, path)
+          case "zorder" =>
+            DlvMaintenance.optimize(spark, path, zorderBy = Seq("id"))
+          case "reorg" => DlvMaintenance.reorgPurge(spark, path)
+        }
+      }
+      val removed = l.commitActionsOf(v).collect { case r: RemoveFile => r }
+      assert(removed.map(_.path).toSet == before.map(_.path).toSet, op)
+      val after = l.snapshot().files
+      assert(after.size == parts && after.forall(_.dv.isEmpty), op)
+      val ids = (0L until 3000L)
+        .filterNot(id => op == "reorg" && id % 5 == 0)
+      val got = DlvTable.toDF(spark, path)
+        .agg(count(lit(1)), sum("id").cast("long")).head()
+      assert(got.getLong(0) == 3L * ids.size &&
+        got.getLong(1) == 3 * ids.sum, op)
+      jobs
+    }
+    Seq("optimize", "zorder", "reorg").foreach { op =>
+      val (small, large) = (run(2, op), run(16, op))
+      info(s"$op: $small jobs at 2 partitions, $large at 16")
+      assert(small == large,
+        s"$op launched $small jobs on 2 partitions, $large on 16")
+    }
+    // Z-ORDER past one bin: each partition splits into its own k files
+    // holding disjoint key ranges
+    val zp = fixture(2, dv = false)
+    val zl = DlvTable.log(zp)
+    val target = zl.snapshot().sizeInBytes / 8
+    val ks = zl.snapshot().files.groupBy(_.partitionValues)
+      .map { case (pv, fs) => pv -> fs.map(_.size).sum / target }
+    DlvMaintenance.optimize(spark, zp, zorderBy = Seq("id"),
+      targetFileBytes = target)
+    def id(j: org.json4s.JValue): Long = j match {
+      case org.json4s.JLong(v) => v
+      case org.json4s.JInt(v) => v.toLong
+      case other => fail(s"non-integral stat: $other")
+    }
+    zl.snapshot().files.groupBy(_.partitionValues).foreach { case (pv, fs) =>
+      assert(ks(pv) > 1 && fs.size == ks(pv), pv)
+      val ranges = fs.map(_.parsedStats.get)
+        .map(st => (id(st.minValues("id")), id(st.maxValues("id"))))
+        .sortBy(_._1)
+      assert(ranges.zip(ranges.tail).forall { case (a, b) => a._2 < b._1 },
+        s"$pv: $ranges")
+    }
+    // the one rewrite entry refuses a non-positive target size
+    val path = fixture(2, dv = false)
+    Seq(0L, -1L).foreach { t =>
+      intercept[IllegalArgumentException](
+        DlvMaintenance.optimize(spark, path, targetFileBytes = t))
+      intercept[IllegalArgumentException](
+        DlvMaintenance.reorgPurge(spark, path, targetFileBytes = t))
+    }
+  }
+
   test("batch readChangeFeed option: delta's reader shape returns the " +
     "change feed, never silently plain rows") {
     val path = mkTable("cdfbatch", cdf = true)
