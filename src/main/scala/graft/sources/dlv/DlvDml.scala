@@ -792,167 +792,165 @@ object DlvDml {
     // rows is not
     if (clauses.exists(!_.isInstanceOf[NotMatchedInsert]))
       checkAppendOnly(meta, "MERGE with update/delete clauses")
-    // pass 0: touched-file discovery (inner join on the merge keys —
-    // stats skipping prunes target files whose key ranges miss the
-    // source) + multi-match guard, ONE action for both. Row IDENTITY
-    // (not row equality) backs the guard — duplicate target rows are
-    // each allowed their own single match.
-    val tgtAll = discovery(spark, l, st)
-      .withColumn("__rid", monotonically_increasing_id()).alias("tgt")
-    val matches = tgtAll.join(src, on)
-    val perFile = matches
-      .groupBy(col("__file"), col("__rid"))
-      .agg(count(lit(1)).as("__m"))
-      .groupBy(col("__file")).agg(max(col("__m")).as("__mx"))
-      .collect()
-    require(perFile.forall(_.getLong(1) <= 1),
-      "MERGE: a target row matched multiple source rows")
-    val touched = perFile.map(r => relPathOfUri(l, r.getString(0))).toSet
-    tx.readFilePaths = touched
-    tx.setReadWholeTable() // inserts depend on global non-matches
-    // …but when the merge condition carries conjuncts over TARGET
-    // partition columns alone (tgt.part = 5 AND tgt.k = src.k), no
-    // row outside those partitions can ever match — concurrent adds
-    // there cannot invalidate this merge's decisions, so the
-    // whole-table ADD dependency narrows to the partition scope and
-    // merges into disjoint partitions commit concurrently (delta's
-    // behavior). BY SOURCE clauses read non-matching rows table-wide,
-    // so they keep the full dependency.
-    if (!clauses.exists(c => c.isInstanceOf[NotMatchedBySourceUpdate] ||
-        c.isInstanceOf[NotMatchedBySourceDelete]))
-      tx.addConflictFilter =
-        mergeAddConflictScope(tgtAll, src, on, meta)
-
-    val bySourceConds: Seq[Option[Column]] = clauses.collect {
-      case NotMatchedBySourceUpdate(c, _) => c
-      case NotMatchedBySourceDelete(c) => c
-    }
-    // the rewrite set is carried as the collected ADDFILES themselves:
-    // the remove enumeration at commit time reuses them, so the
-    // distributed route never re-collects (a second filesByPath over
-    // the full-table case would broadcast an O(table) path set straight
-    // back to the executors it just came from)
-    val rewriteFiles: Seq[AddFile] =
-      if (bySourceConds.isEmpty) st.filesByPath(touched)
-      else {
-        // by-source clauses can touch any NON-matching target row, but
-        // a file whose min/max prove NO row satisfies ANY clause
-        // condition cannot be changed by them — rewrite touched ∪
-        // possibly-affected instead of the whole table (at 100 TB: a
-        // partition instead of everything). An unconditional clause,
-        // or a condition that won't analyze against the target alone
-        // (they may only reference target columns — no source row
-        // exists for a by-source row), keeps the full rewrite.
-        val prunable:
-            Option[org.apache.spark.sql.catalyst.expressions.Expression] =
-          if (bySourceConds.exists(_.isEmpty)) None
-          else try {
-            val tgtView = st.df.alias("tgt")
-            Some(bySourceConds.flatten
-              .map(c => foldConstants(analyzedCond(tgtView, c)))
-              .reduce(
-                org.apache.spark.sql.catalyst.expressions.Or(_, _)))
-          } catch { case scala.util.control.NonFatal(_) => None }
-        prunable match {
-          case None => st.allFiles
-          case Some(anyClause) =>
-            val may = st.filesMayMatch(Seq(anyClause))
-            val mayPaths = may.map(_.path).toSet
-            // both collects are bounded (pruned set + touched set)
-            may ++ st.filesByPath(touched -- mayPaths)
-        }
-      }
-    val rewriteSet: Set[String] = rewriteFiles.map(_.path).toSet
-
-    // deletion-vector route: when the table opts in, MERGE marks the
-    // changed/deleted target rows dead in a sidecar and appends ONLY
-    // the updated copies and inserts — the unchanged rows of touched
-    // files stay alive in place, so a sparse merge costs O(affected
-    // rows) written instead of O(touched bytes) rewritten (the same
-    // lever as the DELETE/UPDATE twins, completing the DML triple)
-    if (DlvDv.enabled(meta) && rewriteSet.nonEmpty) {
-      require(src.columns.forall(!_.startsWith("__dv_")),
-        "MERGE source columns may not use the reserved '__dv_' prefix")
-      return mergeViaVectors(spark, l, tx, st, meta, evolved,
-        tgtCols, src, on, clauses, rewriteFiles)
-    }
-
-    // pass 1: rewrite touched files via left-outer join with source
-    val changes = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val outputs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    if (rewriteSet.nonEmpty) {
-      val tgt = readFiles(spark, l, rewriteSet.toSeq, meta.schema,
-        rewriteFiles, DlvColMap.toLogicalRenames(meta),
-        meta.partitionColumns).alias("tgt")
-      val joined = tgt.join(src, on, "left_outer")
-        .withColumn("__matched",
-          coalesce(col("src.__src_marker"), lit(false)))
-      def tcol(c: String) = col(s"tgt.$c")
-      val keepAsIs = struct(tgtCols.map(tcol): _*)
-      // fold clauses into one CASE deciding the output row (null row =
-      // delete) per semantics: first applicable clause wins
-      var out: Column = keepAsIs
-      var del: Column = lit(false)
-      // build in reverse so earlier clauses take precedence
-      clauses.reverse.foreach {
-        case MatchedUpdate(c, set) =>
-          val applies = col("__matched") && c.getOrElse(lit(true))
-          val updated = struct(tgtCols.map(n =>
-            set.getOrElse(n, tcol(n)).as(n)): _*)
-          out = when(applies, updated).otherwise(out)
-          del = when(applies, lit(false)).otherwise(del)
-        case MatchedDelete(c) =>
-          val applies = col("__matched") && c.getOrElse(lit(true))
-          del = when(applies, lit(true)).otherwise(del)
-          out = when(applies, keepAsIs).otherwise(out)
-        case NotMatchedBySourceUpdate(c, set) =>
-          val applies = !col("__matched") && c.getOrElse(lit(true))
-          val updated = struct(tgtCols.map(n =>
-            set.getOrElse(n, tcol(n)).as(n)): _*)
-          out = when(applies, updated).otherwise(out)
-          del = when(applies, lit(false)).otherwise(del)
-        case NotMatchedBySourceDelete(c) =>
-          val applies = !col("__matched") && c.getOrElse(lit(true))
-          del = when(applies, lit(true)).otherwise(del)
-        case _: NotMatchedInsert => ()
-      }
-      val resolved = joined.withColumn("__out", out)
-        .withColumn("__del", del)
-      val survivors = resolved.filter(!col("__del"))
-        .select(tgtCols.map(n => col("__out").getField(n).as(n)): _*)
-      outputs += survivors
-      val cdcDel = resolved.filter(col("__del"))
-        .select(tgtCols.map(tcol): _*)
-        .withColumn("_change_type", lit("delete"))
-      val changed = !col("__del") && !(col("__out") <=> keepAsIs)
-      val cdcPre = resolved.filter(changed)
-        .select(tgtCols.map(tcol): _*)
-        .withColumn("_change_type", lit("update_preimage"))
-      val cdcPost = resolved.filter(changed)
-        .select(tgtCols.map(n => col("__out").getField(n).as(n)): _*)
-        .withColumn("_change_type", lit("update_postimage"))
-      changes += cdcDel.unionByName(cdcPre).unionByName(cdcPost)
-    }
-
-    // pass 2: inserts = source rows matching NO target row (whole
-    // table, not just touched files)
-    var insertPinned: Option[DataFrame] = None
-    clauses.collectFirst { case i: NotMatchedInsert => i }.foreach {
-      case NotMatchedInsert(cond, values) =>
-        val tgtFull = st.df.alias("tgt")
-        val unmatched = src.join(tgtFull, on, "left_anti")
-          .filter(cond.getOrElse(lit(true)))
-        val raw = unmatched.select(tgtCols.map(n =>
-          values.getOrElse(n,
-            lit(null).cast(meta.schema(n).dataType)).as(n)): _*)
-        val inserted = pinInsertIdentity(raw, meta)
-        insertPinned = inserted._2
-        outputs += inserted._1
-        changes += inserted._1
-          .withColumn("_change_type", lit("insert"))
-    }
-
+    val insert = clauses.collectFirst { case i: NotMatchedInsert => i }
+    val matchedClauses = clauses.exists(c =>
+      c.isInstanceOf[MatchedUpdate] || c.isInstanceOf[MatchedDelete])
+    val viaVectors = DlvDv.enabled(meta)
+    // Two passes read the target, as in Delta's MERGE: pass 0 joins
+    // it with the source to find the matches, pass 1 rewrites the
+    // files holding them. The insert set and the matched clauses'
+    // change images come from pass 0's join and read no target file.
+    //
+    // pass 0: the inner join tgt ⋈ src over the routed scan (stats
+    // skipping prunes target files whose key ranges miss the source).
+    // One action feeds both the touched-file set and the multi-match
+    // guard. Row IDENTITY (not row equality) backs the guard —
+    // duplicate target rows are each allowed their own single match.
+    // Columns this merge adds read as typed nulls, as in every file
+    // read, so clause expressions over them resolve on the join.
+    val scanned = discovery(spark, l, st)
+      .withColumn("__rid", monotonically_increasing_id())
+    // …but the merge CONDITION still resolves against the unwidened
+    // scan: an added column is null on every target row, and matching
+    // on it refuses (the join analyzes eagerly)
+    if (evolved.nonEmpty) scanned.alias("tgt").join(src, on)
+    val tgtAll = nullFill(scanned, meta.schema).alias("tgt")
+    // the join is PINNED when a later step reads it — the insert set,
+    // and under CDF the matched clauses' change images on the
+    // copy-on-write route — so neither scans the target again
+    val pinned = insert.nonEmpty ||
+      (cdfEnabled(meta) && !viaVectors && matchedClauses)
+    val matches =
+      if (pinned) tgtAll.join(src, on).persist() else tgtAll.join(src, on)
+    var insertPin: Option[DataFrame] = None
     try {
+      val perFile = matches
+        .groupBy(col("__file"), col("__rid"))
+        .agg(count(lit(1)).as("__m"))
+        .groupBy(col("__file")).agg(max(col("__m")).as("__mx"))
+        .collect()
+      require(perFile.forall(_.getLong(1) <= 1),
+        "MERGE: a target row matched multiple source rows")
+      val touched =
+        perFile.map(r => relPathOfUri(l, r.getString(0))).toSet
+      tx.readFilePaths = touched
+      tx.setReadWholeTable() // inserts depend on global non-matches
+      // …but when the merge condition carries conjuncts over TARGET
+      // partition columns alone (tgt.part = 5 AND tgt.k = src.k), no
+      // row outside those partitions can ever match — concurrent adds
+      // there cannot invalidate this merge's decisions, so the
+      // whole-table ADD dependency narrows to the partition scope and
+      // merges into disjoint partitions commit concurrently (delta's
+      // behavior). BY SOURCE clauses read non-matching rows
+      // table-wide, so they keep the full dependency.
+      if (!clauses.exists(c => c.isInstanceOf[NotMatchedBySourceUpdate] ||
+          c.isInstanceOf[NotMatchedBySourceDelete]))
+        tx.addConflictFilter =
+          mergeAddConflictScope(tgtAll, src, on, meta)
+
+      val bySourceConds: Seq[Option[Column]] = clauses.collect {
+        case NotMatchedBySourceUpdate(c, _) => c
+        case NotMatchedBySourceDelete(c) => c
+      }
+      // the rewrite set is carried as the collected ADDFILES themselves:
+      // the remove enumeration at commit time reuses them, so the
+      // distributed route never re-collects (a second filesByPath over
+      // the full-table case would broadcast an O(table) path set
+      // straight back to the executors it just came from)
+      val rewriteFiles: Seq[AddFile] =
+        if (bySourceConds.isEmpty) st.filesByPath(touched)
+        else {
+          // by-source clauses can touch any NON-matching target row,
+          // but a file whose min/max prove NO row satisfies ANY clause
+          // condition cannot be changed by them — rewrite touched ∪
+          // possibly-affected instead of the whole table (at 100 TB: a
+          // partition instead of everything). An unconditional clause,
+          // or a condition that won't analyze against the target alone
+          // (they may only reference target columns — no source row
+          // exists for a by-source row), keeps the full rewrite.
+          val prunable:
+              Option[org.apache.spark.sql.catalyst.expressions.Expression] =
+            if (bySourceConds.exists(_.isEmpty)) None
+            else try {
+              val tgtView = st.df.alias("tgt")
+              Some(bySourceConds.flatten
+                .map(c => foldConstants(analyzedCond(tgtView, c)))
+                .reduce(
+                  org.apache.spark.sql.catalyst.expressions.Or(_, _)))
+            } catch { case scala.util.control.NonFatal(_) => None }
+          prunable match {
+            case None => st.allFiles
+            case Some(anyClause) =>
+              val may = st.filesMayMatch(Seq(anyClause))
+              val mayPaths = may.map(_.path).toSet
+              // both collects are bounded (pruned set + touched set)
+              may ++ st.filesByPath(touched -- mayPaths)
+          }
+        }
+      val rewriteSet: Set[String] = rewriteFiles.map(_.path).toSet
+
+      // inserts = source rows matching NO target row, computed as the
+      // anti-join against the PINNED matched target rows instead of
+      // the whole table. Exact: a source row matches some target row
+      // only if that row joined it in pass 0, so the rows outside the
+      // matched set cannot change the answer.
+      val inserted: Option[DataFrame] = insert.map {
+        case NotMatchedInsert(cond, values) =>
+          val raw = src
+            .join(matches.select(col("tgt.*")).alias("tgt"), on,
+              "left_anti")
+            .filter(cond.getOrElse(lit(true)))
+            .select(tgtCols.map(n => values.getOrElse(n,
+              lit(null).cast(meta.schema(n).dataType)).as(n)): _*)
+          val (df, pin) = pinInsertIdentity(raw, meta)
+          insertPin = pin
+          df
+      }
+
+      // deletion-vector route: when the table opts in, MERGE marks the
+      // changed/deleted target rows dead in a sidecar and appends ONLY
+      // the updated copies and inserts — the unchanged rows of touched
+      // files stay alive in place, so a sparse merge costs O(affected
+      // rows) written instead of O(touched bytes) rewritten (the same
+      // lever as the DELETE/UPDATE twins, completing the DML triple)
+      if (viaVectors && rewriteSet.nonEmpty) {
+        require(src.columns.forall(!_.startsWith("__dv_")),
+          "MERGE source columns may not use the reserved '__dv_' prefix")
+        return mergeViaVectors(spark, l, tx, st, meta, evolved,
+          tgtCols, src, on, clauses, rewriteFiles, inserted)
+      }
+
+      // pass 1: rewrite the touched files via a left-outer join with
+      // the source — the only other read of the target
+      val outputs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val changes = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      if (rewriteSet.nonEmpty) {
+        val tgt = readFiles(spark, l, rewriteSet.toSeq, meta.schema,
+          rewriteFiles, DlvColMap.toLogicalRenames(meta),
+          meta.partitionColumns).alias("tgt")
+        val resolved = resolveClauses(
+          tgt.join(src, on, "left_outer").withColumn("__matched",
+            coalesce(col("src.__src_marker"), lit(false))),
+          clauses, tgtCols)
+        outputs += resolved.filter(!col("__del"))
+          .select(tgtCols.map(n => col("__out").getField(n).as(n)): _*)
+        // by-source clauses change rows the pin does not hold
+        if (bySourceConds.nonEmpty)
+          changes += changeImages(
+            resolved.filter(!col("__matched")), tgtCols)
+        // matched clauses' images come from the pinned matches: the
+        // same rows, resolved by the same fold, without re-reading the
+        // files
+        if (cdfEnabled(meta) && matchedClauses)
+          changes += changeImages(resolveClauses(
+            matches.withColumn("__matched", lit(true)), clauses, tgtCols),
+            tgtCols)
+      }
+      inserted.foreach { df =>
+        outputs += df
+        changes += df.withColumn("_change_type", lit("insert"))
+      }
+
       val now = System.currentTimeMillis()
       val removes = rewriteFiles.map(_.remove(now, dataChange = true))
       val adds =
@@ -965,8 +963,65 @@ object DlvDml {
       tx.commit(mergeMetaActions(tx, meta, evolved, adds) ++
         removes ++ adds ++ cdc, isBlindAppend = false)
     } finally {
-      insertPinned.foreach(_.unpersist())
+      insertPin.foreach(_.unpersist())
+      if (pinned) matches.unpersist()
+      ()
     }
+  }
+
+  /** The clause fold over joined target/source rows that carry
+    * `__matched`: adds the output row `__out` (a struct over
+    * `tgtCols`, the target row itself when no clause changes it) and
+    * the delete flag `__del`. First applicable clause wins. One fold
+    * serves the rewrite, the vector mark and the pinned matches. */
+  private def resolveClauses(
+      joined: DataFrame, clauses: Seq[MergeClause],
+      tgtCols: Seq[String]): DataFrame = {
+    def tcol(c: String) = col(s"tgt.$c")
+    val keepAsIs = struct(tgtCols.map(tcol): _*)
+    var out: Column = keepAsIs
+    var del: Column = lit(false)
+    // build in reverse so earlier clauses take precedence
+    clauses.reverse.foreach {
+      case MatchedUpdate(c, set) =>
+        val applies = col("__matched") && c.getOrElse(lit(true))
+        val updated = struct(tgtCols.map(n =>
+          set.getOrElse(n, tcol(n)).as(n)): _*)
+        out = when(applies, updated).otherwise(out)
+        del = when(applies, lit(false)).otherwise(del)
+      case MatchedDelete(c) =>
+        val applies = col("__matched") && c.getOrElse(lit(true))
+        del = when(applies, lit(true)).otherwise(del)
+        out = when(applies, keepAsIs).otherwise(out)
+      case NotMatchedBySourceUpdate(c, set) =>
+        val applies = !col("__matched") && c.getOrElse(lit(true))
+        val updated = struct(tgtCols.map(n =>
+          set.getOrElse(n, tcol(n)).as(n)): _*)
+        out = when(applies, updated).otherwise(out)
+        del = when(applies, lit(false)).otherwise(del)
+      case NotMatchedBySourceDelete(c) =>
+        val applies = !col("__matched") && c.getOrElse(lit(true))
+        del = when(applies, lit(true)).otherwise(del)
+      case _: NotMatchedInsert => ()
+    }
+    joined.withColumn("__out", out).withColumn("__del", del)
+  }
+
+  /** The change rows of [[resolveClauses]] output: a deleted row as
+    * `delete`, a changed row as its `update_preimage` /
+    * `update_postimage` pair. A row an update leaves equal emits
+    * nothing. */
+  private def changeImages(
+      resolved: DataFrame, tgtCols: Seq[String]): DataFrame = {
+    val before = tgtCols.map(n => col(s"tgt.$n"))
+    val after = tgtCols.map(n => col("__out").getField(n).as(n))
+    val changed = !col("__del") && !(col("__out") <=> struct(before: _*))
+    def image(rows: Column, cols: Seq[Column], kind: String) =
+      resolved.filter(rows).select(cols: _*)
+        .withColumn("_change_type", lit(kind))
+    image(col("__del"), before, "delete")
+      .unionByName(image(changed, before, "update_preimage"))
+      .unionByName(image(changed, after, "update_postimage"))
   }
 
   /** MERGE-insert frame WRITE-NORMALIZED (generated columns computed,
@@ -1088,107 +1143,49 @@ object DlvDml {
   }
 
   /** MERGE through deletion vectors: resolve the clauses over the
-    * live rows of `rewriteFiles` (left-outer join with the source,
-    * first-applicable-clause-wins fold — IDENTICAL to the rewrite
-    * route's), mark the rows a clause deletes or changes dead via
-    * [[DlvDv.withMarkedBy]], and stage only the updated copies plus
-    * the not-matched inserts as new files. A merge that changes
-    * nothing but inserts still appends (the mark pass is empty —
-    * vectors untouched). CDC carries the same delete /
-    * update_preimage / update_postimage / insert rows the rewrite
-    * route writes. */
+    * live rows of `rewriteFiles` (left-outer join with the source and
+    * the rewrite route's [[resolveClauses]] fold), mark the rows a
+    * clause deletes or changes dead via [[DlvDv.withMarkedBy]], and
+    * stage only the updated copies plus the not-matched `inserted`
+    * rows as new files. A merge that changes nothing but inserts
+    * still appends (the mark pass is empty — vectors untouched). CDC
+    * carries the same delete / update_preimage / update_postimage /
+    * insert rows the rewrite route writes. */
   private def mergeViaVectors(
       spark: SparkSession, l: DlvLog, tx: OptimisticTransaction,
       st: DmlState, meta: Metadata, evolved: Option[Metadata],
       tgtCols: Seq[String], src: DataFrame, on: Column,
-      clauses: Seq[MergeClause], rewriteFiles: Seq[AddFile]): Long = {
+      clauses: Seq[MergeClause], rewriteFiles: Seq[AddFile],
+      inserted: Option[DataFrame]): Long = {
     val now = System.currentTimeMillis()
-
-    // inserts = source rows matching NO target row (whole table, not
-    // just touched files) — independent of the mark pass, shared by
-    // the marked and the insert-only commit shapes below. Identity
-    // values are allocated HERE (pinned via [[pinInsertIdentity]]):
-    // the frame feeds both staging and the CDC insert images, and the
-    // feed must carry the values the table actually wrote.
-    val insertedPin: Option[(DataFrame, Option[DataFrame])] =
-      clauses.collectFirst {
-        case NotMatchedInsert(cond, values) =>
-          val tgtFull = st.df.alias("tgt")
-          pinInsertIdentity(
-            src.join(tgtFull, on, "left_anti")
-              .filter(cond.getOrElse(lit(true)))
-              .select(tgtCols.map(n =>
-                values.getOrElse(n,
-                  lit(null).cast(meta.schema(n).dataType)).as(n)): _*),
-            meta)
-      }
-    val insertedOpt: Option[DataFrame] = insertedPin.map(_._1)
     def insertChanges: Option[DataFrame] =
-      insertedOpt.map(_.withColumn("_change_type", lit("insert")))
-
-    def tcol(c: String) = col(s"tgt.$c")
-    val keepAsIs = struct(tgtCols.map(tcol): _*)
+      inserted.map(_.withColumn("_change_type", lit("insert")))
+    val keepAsIs = struct(tgtCols.map(n => col(s"tgt.$n")): _*)
 
     // live rows a clause deletes or changes — carrying the resolved
     // output row (__out) and the delete flag (__del) through to the
     // staging/CDC body. Unchanged-by-update rows are NOT marked: the
     // rewrite route keeps them as survivors, this route leaves them
     // alive in place — same content, no vector growth.
-    val mark: DataFrame => DataFrame = live => {
-      val joined = live.alias("tgt").join(src, on, "left_outer")
-        .withColumn("__matched",
-          coalesce(col("src.__src_marker"), lit(false)))
-      var out: Column = keepAsIs
-      var del: Column = lit(false)
-      // build in reverse so earlier clauses take precedence
-      clauses.reverse.foreach {
-        case MatchedUpdate(c, set) =>
-          val applies = col("__matched") && c.getOrElse(lit(true))
-          val updated = struct(tgtCols.map(n =>
-            set.getOrElse(n, tcol(n)).as(n)): _*)
-          out = when(applies, updated).otherwise(out)
-          del = when(applies, lit(false)).otherwise(del)
-        case MatchedDelete(c) =>
-          val applies = col("__matched") && c.getOrElse(lit(true))
-          del = when(applies, lit(true)).otherwise(del)
-          out = when(applies, keepAsIs).otherwise(out)
-        case NotMatchedBySourceUpdate(c, set) =>
-          val applies = !col("__matched") && c.getOrElse(lit(true))
-          val updated = struct(tgtCols.map(n =>
-            set.getOrElse(n, tcol(n)).as(n)): _*)
-          out = when(applies, updated).otherwise(out)
-          del = when(applies, lit(false)).otherwise(del)
-        case NotMatchedBySourceDelete(c) =>
-          val applies = !col("__matched") && c.getOrElse(lit(true))
-          del = when(applies, lit(true)).otherwise(del)
-        case _: NotMatchedInsert => ()
-      }
-      joined.withColumn("__out", out).withColumn("__del", del)
+    val mark: DataFrame => DataFrame = live =>
+      resolveClauses(
+        live.alias("tgt").join(src, on, "left_outer").withColumn(
+          "__matched", coalesce(col("src.__src_marker"), lit(false))),
+        clauses, tgtCols)
         .filter(col("__del") || !(col("__out") <=> keepAsIs))
-    }
 
-    try {
     val dvActions = DlvDv.withMarkedBy(spark, l, meta, rewriteFiles,
         mark, now) { (marked, _) =>
       val updatedCopies = marked.filter(!col("__del"))
         .select(tgtCols.map(n => col("__out").getField(n).as(n)): _*)
       val staged = DlvTable.stageFiles(spark, l,
-        insertedOpt.map(updatedCopies.unionByName(_))
+        inserted.map(updatedCopies.unionByName(_))
           .getOrElse(updatedCopies),
         meta, dataChange = true)
       val cdc =
         if (!cdfEnabled(meta)) None
         else {
-          val cdcDel = marked.filter(col("__del"))
-            .select(tgtCols.map(tcol): _*)
-            .withColumn("_change_type", lit("delete"))
-          val cdcPre = marked.filter(!col("__del"))
-            .select(tgtCols.map(tcol): _*)
-            .withColumn("_change_type", lit("update_preimage"))
-          val cdcPost = marked.filter(!col("__del"))
-            .select(tgtCols.map(n => col("__out").getField(n).as(n)): _*)
-            .withColumn("_change_type", lit("update_postimage"))
-          val images = cdcDel.unionByName(cdcPre).unionByName(cdcPost)
+          val images = changeImages(marked, tgtCols)
           writeCdc(spark, l, meta,
             insertChanges.map(images.unionByName(_)).getOrElse(images))
         }
@@ -1202,7 +1199,7 @@ object DlvDml {
     else {
       // no live row was changed or deleted — inserts (if any) still
       // append; vectors and data files stay untouched
-      val adds = insertedOpt.map(df =>
+      val adds = inserted.map(df =>
         DlvTable.stageFiles(spark, l, df, meta, dataChange = true))
         .getOrElse(Nil)
       val cdc =
@@ -1210,9 +1207,6 @@ object DlvDml {
         else insertChanges.flatMap(writeCdc(spark, l, meta, _))
       tx.commit(mergeMetaActions(tx, meta, evolved, adds) ++
         adds ++ cdc, isBlindAppend = false)
-    }
-    } finally {
-      insertedPin.flatMap(_._2).foreach(_.unpersist())
     }
   }
 
@@ -1259,15 +1253,21 @@ object DlvDml {
       else DlvDv.antiJoinDead(spark, l, raw0, sidecars,
         dvFiles.flatMap(_.dv).map(_.cardinality).sum,
         () => Some(DlvDv.fileDirMap(l, dvFiles)))
-    val have = raw.columns.map(_.toLowerCase).toSet
-    val filled = schema.fields
-      .filterNot(f => have.contains(f.name.toLowerCase) ||
-        f.name == "__src_file")
-      .foldLeft(raw)((d, f) =>
-        d.withColumn(f.name, lit(null).cast(f.dataType)))
     val out = schema.map(f => col(f.name).cast(f.dataType)) ++
       (if (keepFileKey) Seq(col("__dv_fp").as("__src_file")) else Nil)
-    filled.select(out: _*)
+    nullFill(raw, schema).select(out: _*)
+  }
+
+  /** `df` plus every `schema` field it lacks, as a typed null: how
+    * rows written before a widened schema (ADD COLUMNS, MERGE WITH
+    * SCHEMA EVOLUTION) read. */
+  private[dlv] def nullFill(
+      df: DataFrame,
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val have = df.columns.map(_.toLowerCase).toSet
+    schema.fields.filterNot(f => have.contains(f.name.toLowerCase))
+      .foldLeft(df)((d, f) =>
+        d.withColumn(f.name, lit(null).cast(f.dataType)))
   }
 
   /** Hive path segments of an [[AddFile.path]] → decoded partition

@@ -264,11 +264,7 @@ object DlvDv {
     // schema evolution: files written before ADD COLUMNS lack the new
     // columns — fill typed nulls (the same alignment readFiles does)
     // so `cond` and the downstream projections resolve against them
-    val have = withId0.columns.map(_.toLowerCase).toSet
-    val withId = meta.schema.fields
-      .filterNot(f => have.contains(f.name.toLowerCase))
-      .foldLeft(withId0)((d, f) =>
-        d.withColumn(f.name, lit(null).cast(f.dataType)))
+    val withId = DlvDml.nullFill(withId0, meta.schema)
     val live = {
       val sidecars = sidecarsOf(touchedAdds)
       if (sidecars.isEmpty) withId

@@ -163,7 +163,8 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps {
     import DlvDml._
     import spark.implicits._
     val path = freshDir("mrgbs")
-    DlvTable.create(spark, path, "id BIGINT, v DOUBLE", Nil)
+    DlvTable.create(spark, path, "id BIGINT, v DOUBLE", Nil,
+      Map(DlvDml.CDF_PROP -> "true"))
     // four files with disjoint id ranges — the clustering stats
     // pruning exploits
     Seq(0, 100, 200, 300).foreach { lo =>
@@ -193,6 +194,13 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps {
     assert(df.filter(col("id") < 50 && col("v") =!= -1.0).count() == 0)
     assert(df.filter(col("id").between(50, 299) && col("v") < 0)
       .count() == 0)
+    // the feed: matched update images (taken from the pinned discovery
+    // join) plus the by-source deletes (taken from the rewrite)
+    val feed = DlvChangeFeed.changes(spark, path, v, Some(v))
+      .groupBy("_change_type").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(feed == Map("update_preimage" -> 50L,
+      "update_postimage" -> 50L, "delete" -> 100L), s"got $feed")
   }
 
   test("by-source MERGE with an UNCONDITIONAL clause still rewrites " +
@@ -224,6 +232,103 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps {
         on = col("tgt.o_orderkey") === col("src.o_orderkey"),
         clauses = Seq(MatchedUpdate(None,
           Map("o_totalprice" -> col("src.o_totalprice")))))
+    }
+  }
+
+  /** Rows the tasks `body` launches read from files — the per-task
+    * `inputMetrics.recordsRead` summed. A persisted frame's reads add
+    * one record per cached batch, a handful here. */
+  private def recordsRead(body: => Unit): Long = {
+    val sum = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          sum.addAndGet(m.inputMetrics.recordsRead))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    sum.get
+  }
+
+  test("MERGE reads the target at most twice: the insert set and the " +
+    "matched change images come from the pinned discovery join") {
+    import DlvDml._
+    import spark.implicits._
+    for (cdf <- Seq(false, true)) {
+      val path = freshDir(s"mrg2x-$cdf")
+      DlvTable.create(spark, path, "id BIGINT, p INT, v DOUBLE", Seq("p"),
+        if (cdf) Map(CDF_PROP -> "true") else Map.empty)
+      // N = 8000 rows in 8 partitions, one file per partition per
+      // append; the source matches rows of the first append only, so
+      // discovery reads N and the rewrite N/2
+      val n = 8000
+      for (half <- 0 until 2)
+        DlvTable.append(spark, path, (0 until n / 2)
+          .map(i => ((half * n / 2 + i).toLong, i % 8, i * 1.0))
+          .toDF("id", "p", "v").repartition(1))
+      val src = ((0L until 400L).map(i => (i * 5, -1.0)) ++
+        (n.toLong until n + 100L).map(i => (i, -2.0))).toDF("id", "v")
+      val read = recordsRead {
+        merge(spark, path, src,
+          on = col("tgt.id") === col("src.id"),
+          clauses = Seq(
+            MatchedUpdate(None, Map("v" -> col("src.v"))),
+            NotMatchedInsert(None, Map("id" -> col("src.id"),
+              "p" -> lit(0), "v" -> col("src.v")))))
+      }
+      info(s"cdf=$cdf: $read records read from an $n-row table")
+      assert(read <= 2L * n,
+        s"cdf=$cdf: the merge read $read records from an $n-row table")
+      val df = DlvTable.toDF(spark, path)
+      assert(df.count() == n + 100)
+      assert(df.filter(col("v") === -1.0).count() == 400)
+      assert(df.filter(col("v") === -2.0).count() == 100)
+      if (cdf) {
+        val v = DlvTable.log(path).latestVersion
+        val feed = DlvChangeFeed.changes(spark, path, v, Some(v))
+          .groupBy("_change_type").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(feed == Map("update_preimage" -> 400L,
+          "update_postimage" -> 400L, "insert" -> 100L), s"got $feed")
+      }
+    }
+  }
+
+  test("no cached plan outlives a MERGE: copy-on-write, deletion " +
+    "vectors, and the multi-match refusal") {
+    import DlvDml._
+    import spark.implicits._
+    def upsert(path: String, src: org.apache.spark.sql.DataFrame) =
+      merge(spark, path, src,
+        on = col("tgt.id") === col("src.id"),
+        clauses = Seq(
+          MatchedUpdate(None, Map("v" -> col("src.v"))),
+          NotMatchedInsert(None,
+            Map("id" -> col("src.id"), "v" -> col("src.v")))))
+    for (dv <- Seq(false, true)) {
+      val path = freshDir(s"mrgcache-$dv")
+      DlvTable.create(spark, path, "id BIGINT, v DOUBLE", Nil,
+        Map(CDF_PROP -> "true", DlvDv.PROP -> dv.toString))
+      DlvTable.append(spark, path,
+        (0L until 100L).map(i => (i, i * 1.0)).toDF("id", "v"))
+      val before = org.apache.spark.sql.CachedPlanCount(spark)
+      upsert(path, (90L until 110L).map(i => (i, -1.0)).toDF("id", "v"))
+      assert(org.apache.spark.sql.CachedPlanCount(spark) == before,
+        s"dv=$dv: the merge left a cached plan behind")
+      assert(DlvTable.log(path).snapshot().files.exists(_.dv.nonEmpty)
+        == dv)
+      // the guard throws after the discovery join is pinned
+      val dup = Seq((5L, 1.0), (5L, 2.0)).toDF("id", "v")
+      intercept[IllegalArgumentException](upsert(path, dup))
+      assert(org.apache.spark.sql.CachedPlanCount(spark) == before,
+        s"dv=$dv: the refused merge left a cached plan behind")
+      assert(DlvTable.toDF(spark, path).count() == 110)
     }
   }
 

@@ -76,25 +76,53 @@ class MergeEvolveSpec extends SparkSpec with DlvTestProps {
     assert(schema.fieldNames.toSeq == Seq("k", "v"))
   }
 
-  test("deletion-vector route: evolution composes with DV merge and " +
-    "CDF carries the new column") {
-    val path = mk("dv", Map(
-      DlvDv.PROP -> "true", DlvDml.CDF_PROP -> "true"))
-    val ver = runMerge(path)
-    assertEvolved(path)
-    // DV route actually taken: the pre-merge file is still live
-    val snap = DlvTable.log(path).snapshot()
-    assert(snap.files.exists(_.dv.nonEmpty),
-      "expected the merge to mark rows via a deletion vector")
-    val feed = DlvChangeFeed.changes(spark, path, ver, Some(ver))
-    val inserts = feed.filter(col("_change_type") === "insert")
-      .select("k", "tag").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(inserts == (6L until 9L).map(k => (k, s"tag$k")).toSet)
-    val posts = feed.filter(col("_change_type") === "update_postimage")
-      .select("k", "tag").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(posts == (3L until 6L).map(k => (k, s"tag$k")).toSet)
+  // the deletion-vector route takes its images from the marked rows,
+  // the copy-on-write route from the pinned discovery join — which
+  // must null-fill the added column like every file read
+  for (dv <- Seq(true, false)) {
+    val (route, how) =
+      if (dv) ("deletion-vector", "DV merge")
+      else ("copy-on-write", "the rewrite")
+    test(s"$route route: evolution composes with $how and " +
+      "CDF carries the new column") {
+      val path = mk(route, Map(
+        DlvDv.PROP -> dv.toString, DlvDml.CDF_PROP -> "true"))
+      val ver = runMerge(path)
+      assertEvolved(path)
+      // the route was actually taken: a DV merge keeps the pre-merge
+      // file live with a vector, a rewrite replaces it
+      val snap = DlvTable.log(path).snapshot()
+      assert(snap.files.exists(_.dv.nonEmpty) == dv,
+        s"expected the $route route")
+      val feed = DlvChangeFeed.changes(spark, path, ver, Some(ver))
+      def images(kind: String): Set[(Long, Option[String])] =
+        feed.filter(col("_change_type") === kind)
+          .select("k", "tag").collect()
+          .map(r => (r.getLong(0), Option(r.getString(1)))).toSet
+      assert(images("insert") ==
+        (6L until 9L).map(k => (k, Some(s"tag$k"))).toSet)
+      assert(images("update_postimage") ==
+        (3L until 6L).map(k => (k, Some(s"tag$k"))).toSet)
+      assert(images("update_preimage") ==
+        (3L until 6L).map(k => (k, None)).toSet)
+      assert(images("delete").isEmpty)
+    }
+  }
+
+  test("a merge condition over a column the merge adds still refuses") {
+    val path = mk("oncol")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      DlvDml.merge(spark, path, srcWithTag,
+        on = col("tgt.k") === col("src.k") &&
+          col("tgt.tag") === col("src.tag"),
+        clauses = Seq(DlvDml.NotMatchedInsert(None, Map(
+          "k" -> col("src.k"), "v" -> col("src.v"),
+          "tag" -> col("src.tag")))),
+        withSchemaEvolution = true)
+    }
+    assert(e.getMessage.contains("tag"), e.getMessage)
+    assert(DlvTable.log(path).snapshot().metadata.schema.fieldNames
+      .toSeq == Seq("k", "v"), "a refused merge commits nothing")
   }
 
   test("column mapping: evolution lands the new column with physical " +
