@@ -22,7 +22,8 @@ import org.apache.spark.sql.types.BooleanType
   * updated-copies, MERGE outputs and the streaming sink all funnel
   * through), piggybacking a row-level `assert_true` filter on the
   * write's own scan: NO extra pass over the data, a violating row
-  * fails the job before any file is staged or committed. OPTIMIZE /
+  * fails the job before anything is committed (the failed job deletes
+  * what its tasks wrote). OPTIMIZE /
   * Z-ORDER (`dataChange = false`) re-arrange rows that already passed
   * — they skip the check, like delta.
   *

@@ -182,7 +182,7 @@ object DlvDml {
       case Some(idx) =>
         tx.protocolOverride = Some(idx.protocol)
         // gate NOW, not at commit: a too-new-writer table must refuse
-        // before discovery scans run and stageFiles moves rewritten
+        // before discovery scans run and stageFiles writes rewritten
         // parquet into the table dir (the driver route gates at first
         // snapshot access — same point in the op's life)
         tx.ensureGated()
@@ -197,9 +197,13 @@ object DlvDml {
     *
     * Write-first: a leading `changes.isEmpty` probe would compute the
     * whole change set TWICE (the probe scan + the write) — it made
-    * `dlv_cdf` the slowest scenario in the bench. Instead write once
-    * and decide emptiness from the written footers (driver metadata
-    * reads, no data pages); an empty result is swept away. */
+    * `dlv_cdf` the slowest scenario in the bench. Instead write once,
+    * in place under a fresh blob dir (the same direct write as
+    * [[DlvTable.stageFiles]]), and decide emptiness from the row
+    * counts the write tasks return; an empty result (an empty
+    * unpartitioned write still leaves one 0-row file) is swept away.
+    * The blob is visible only through the commit that carries its
+    * path; a blob of a write that never commits is an orphan. */
   private[dlv] def writeCdc(
       spark: SparkSession, l: DlvLog, meta: Metadata,
       changes: DataFrame): Option[CommitInfo] = {
@@ -208,14 +212,10 @@ object DlvDml {
     // blobs live in the PHYSICAL lexicon like every other on-disk
     // byte ([[DlvColMap]]): a blob keyed to its commit-time LOGICAL
     // names would stop replaying after the next rename
-    DlvColMap.toPhysical(changes, meta).write.mode("overwrite").parquet(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val rows = DriverPar.map(l.io.walkFiles(dir)
-        .filter(_.name.endsWith(".parquet"))) { e =>
-        ParquetStats.rowCount(conf,
-          new org.apache.hadoop.fs.Path(l.io.qualified(
-            l.io.child(dir, e.name))))
-      }.sum
+    val files = DlvTable.writeInPlace(l, dir,
+      DlvColMap.toPhysical(changes, meta), partitionColumns = Nil,
+      indexed = Some(Set.empty), dataChange = false, name = "dlv:cdc")
+    val rows = files.map(_.parsedStats.fold(0L)(_.numRecords)).sum
     if (rows == 0L) {
       l.io.deleteRecursive(dir)
       None

@@ -11,7 +11,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * The reference's deployment substrate is an object store (its
   * validation suite drives `gs://` buckets directly), so nothing in the
   * table format may assume `java.nio` paths. Every log read/publish,
-  * checkpoint, vacuum listing and staged-file move goes through this
+  * checkpoint, vacuum listing and checkpoint move goes through this
   * trait; the DATA path (parquet read/write) already speaks Hadoop via
   * Spark itself.
   *
@@ -208,8 +208,15 @@ final class NioIo(store: CommitStore = new LinkCommitStore) extends DlvIo {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     ()
   }
-  override def delete(path: String): Boolean =
-    Files.deleteIfExists(p(path))
+  // a file written through Hadoop's checksummed local FS may carry a
+  // `.<name>.crc` sibling (a write task killed before its commit
+  // leaves one); it goes with its file, or the dir never empties
+  override def delete(path: String): Boolean = {
+    val f = p(path)
+    if (f.getFileName != null)
+      Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+    Files.deleteIfExists(f)
+  }
   override def deleteRecursive(path: String): Unit = {
     val root = p(path)
     if (Files.exists(root))
@@ -403,7 +410,12 @@ final class HadoopIo(
     if (!ok) throw new java.io.IOException(s"copy $s -> $d failed")
   }
   override def delete(path: String): Boolean = {
-    val p = hp(path); fs(p).delete(p, false)
+    val p = hp(path)
+    val f = fs(p)
+    // the pinned raw local FS leaves a checksum sibling (see NioIo)
+    if (f.getScheme == "file" && p.getParent != null)
+      f.delete(new HPath(p.getParent, s".${p.getName}.crc"), false)
+    f.delete(p, false)
   }
   override def deleteRecursive(path: String): Unit = {
     val p = hp(path)

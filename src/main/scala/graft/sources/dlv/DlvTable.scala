@@ -734,13 +734,6 @@ object DlvTable {
     0L
   }
 
-  /** Write `df` as hive-partitioned parquet files under the table root
-    * and return their AddFiles with footer-derived stats. Files land
-    * under a hidden staging dir first and MOVE into place — nothing is
-    * visible to a log replay until the commit that references it. All
-    * filesystem ops go through the log's [[DlvIo]], so staging works
-    * on object-store tables too (there "move" is the connector's
-    * copy-free rename where available). */
   val DATA_SKIP_COLS_PROP = "dlv.dataSkippingNumIndexedCols"
   val DATA_SKIP_COLS_PROP_DELTA = "delta.dataSkippingNumIndexedCols"
 
@@ -878,20 +871,28 @@ object DlvTable {
     schemaAligned(
       DlvIdentity.applied(DlvGenerated.applied(df, meta), meta), meta)
 
+  /** Write `df` as hive-partitioned parquet files at their FINAL paths
+    * under the table root and return their AddFiles, sorted by path.
+    * One Spark write job does it all ([[DirectCommitProtocol]]): each
+    * task names its files, writes them in place and returns their
+    * size, mtime and footer stats — no staging dir, no rename, no
+    * driver pass over the written files. Nothing is visible until the
+    * commit that references it: reads plan from the log, so a file of
+    * a failed or never-committed write is an orphan, and VACUUM
+    * reclaims it. */
   def stageFiles(
       spark: SparkSession, l: DlvLog, df: DataFrame, meta: Metadata,
       dataChange: Boolean): Seq[AddFile] = {
-    val io = l.io
-    val staging = l.resolve(s".staging-${java.util.UUID.randomUUID()}")
     // dataChange=false re-arrangements skip generation and identity
     // like they skip the constraints below (values already passed)
     val ordered0 =
       if (dataChange) writeNormalized(df, meta)
       else schemaAligned(df, meta)
     // writer invariants ride the write's own scan (no extra pass): a
-    // CHECK-constraint or NOT NULL violation fails the job before any
-    // file is staged. dataChange=false (OPTIMIZE/Z-ORDER) re-arranges
-    // rows that already passed — skip, like delta
+    // CHECK-constraint or NOT NULL violation fails the job, and the
+    // failed job deletes what its tasks wrote. dataChange=false
+    // (OPTIMIZE/Z-ORDER) re-arranges rows that already passed — skip,
+    // like delta
     val ordered =
       if (dataChange) DlvConstraints.enforced(ordered0, meta)
       else ordered0
@@ -900,44 +901,24 @@ object DlvTable {
     // constraint enforcement (which speak logical) — see [[DlvColMap]]
     val physical = DlvColMap.stampFieldIds(
       DlvColMap.toPhysical(ordered, meta), meta)
-    val writer = physical.write.mode("overwrite")
-    (if (meta.partitionColumns.nonEmpty)
-       writer.partitionBy(meta.partitionColumns: _*)
-     else writer).parquet(staging)
-
-    val conf = spark.sparkContext.hadoopConfiguration
-    // finalize files CONCURRENTLY: each staged file needs one rename
-    // plus one footer read — independent metadata I/O whose serial
-    // driver loop was the hidden cost of every write (a month-
-    // partitioned append pays ~#partitions round-trips; an object
-    // store pays a full RTT per file). DriverPar preserves input
-    // order so AddFile order (and the commit JSON) stays
-    // deterministic.
-    // resolved ONCE per write, BEFORE any staged file moves into the
-    // table root — a malformed property fails here, not mid-finalize
+    // resolved ONCE per write, before any task runs — a malformed
+    // property fails here, not inside the job
     val indexed = indexedStatsCols(meta)
-    val staged = io.walkFiles(staging)
-      .filter(_.name.endsWith(".parquet"))
-      .sortBy(_.name)
-    val adds = DriverPar.map(staged) { e =>
-        val rel = e.name // part dirs + filename, '/'-separated
-        val partitionValues = DlvDml.hivePartValues(rel)
-        val dst = l.resolve(rel)
-        io.move(io.child(staging, rel), dst)
-        val stats = ParquetStats.statsJson(conf,
-          new org.apache.hadoop.fs.Path(l.resolveQualified(rel)),
-          indexed)
-        AddFile(
-          path = rel,
-          partitionValues = partitionValues,
-          size = e.size, // rename preserves size/mtime
-          modificationTime = e.mtimeMs,
-          dataChange = dataChange,
-          stats = Some(stats))
-      }
-    // remove the now-empty staging skeleton
-    io.deleteRecursive(staging)
-    adds
+    writeInPlace(l, l.tablePath, physical, meta.partitionColumns,
+      indexed, dataChange, "dlv:write")
+  }
+
+  /** The one direct write under `dir` (the table root, or a CDC blob
+    * dir): [[DirectCommitProtocol]] through Spark's file writer, as the
+    * SQL execution `name`. */
+  private[dlv] def writeInPlace(
+      l: DlvLog, dir: String, df: DataFrame, partitionColumns: Seq[String],
+      indexed: Option[Set[String]], dataChange: Boolean,
+      name: String): Seq[AddFile] = {
+    val root = l.io.qualified(dir)
+    val protocol = new DirectCommitProtocol(root, indexed, dataChange)
+    GraftInternal.writeParquet(df, root, partitionColumns, protocol, name)
+    protocol.committed
   }
 
   /** Scan: current snapshot, `VERSION AS OF`, or `TIMESTAMP AS OF`. */

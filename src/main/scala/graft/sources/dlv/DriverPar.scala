@@ -1,11 +1,12 @@
 package graft.sources.dlv
 
-/** Bounded-pool driver-side parallel map for independent metadata I/O
-  * (footer reads, renames, small-object reads). Each call gets a
-  * short-lived pool — lifecycle stays local, nested callers (OPTIMIZE
-  * rewrites staging concurrently) can't starve a shared singleton —
-  * and `.par.map` preserves input order, so action lists and commit
-  * JSONs built from the result stay deterministic.
+/** Bounded-pool parallel map for independent metadata I/O (footer
+  * reads, commit-file reads, small-object reads) — on the driver, and
+  * inside a write task that closed several files. Each call gets a
+  * short-lived pool — lifecycle stays local, nested callers can't
+  * starve a shared singleton — and `.par.map` preserves input order,
+  * so action lists and commit JSONs built from the result stay
+  * deterministic.
   *
   * The width is NOT capped by CPU count: the work is latency-bound
   * I/O (an object-store RTT per item), so a 2-core driver still wants

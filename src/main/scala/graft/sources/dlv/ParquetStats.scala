@@ -11,11 +11,10 @@ import org.json4s.jackson.JsonMethods
 
 import scala.jdk.CollectionConverters._
 
-/** Per-file column statistics straight from parquet footers — the
-  * write path collects them as files land, so stats cost one footer
-  * read per file, never a second pass over the data. (At cluster scale
-  * the task that wrote the file returns these from its own writer;
-  * footer reading is the single-node equivalent.)
+/** Per-file column statistics straight from parquet footers — one
+  * footer read per file, never a second pass over the data. The write
+  * task that closed a file reads its footer ([[DirectCommitProtocol]]);
+  * CONVERT reads the footers of the files it adopts.
   *
   * Only leaf primitive columns are tracked; min/max are encoded into
   * the [[AddFile.stats]] JSON as numbers (timestamps as micros-longs,
@@ -23,13 +22,6 @@ import scala.jdk.CollectionConverters._
   * [[DlvFileIndex]]'s range pruning and [[StatsAggregates]] read back.
   */
 object ParquetStats {
-
-  /** Footer-only row count — a metadata read, no data pages touched. */
-  def rowCount(conf: Configuration, file: org.apache.hadoop.fs.Path): Long = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally reader.close()
-  }
 
   /** `indexedCols` (lowercase PHYSICAL names) restricts which columns
     * get min/max/nullCount — delta's `dataSkippingNumIndexedCols`

@@ -151,12 +151,14 @@ class DistributedScaleSpec extends SparkSpec with DlvTestProps {
     intercept[IllegalArgumentException] {
       DlvDml.delete(spark, path, col("p") === 1)
     }
-    // refused BEFORE work: nothing staged under the table root and no
-    // commit landed
+    // refused BEFORE work: no data file the log does not reference
+    // under the table root, and no commit landed
     assert(l.latestVersion == 10L, "no commit may land")
-    assert(!l.io.listEntries(l.tablePath).exists(
-      e => e.isDir && e.name.startsWith(".staging-")),
-      "refusal must precede any staging")
+    val referenced = l.snapshot().files.map(_.path).toSet
+    val stray = l.io.walkFiles(l.tablePath).map(_.name).filter(n =>
+      n.endsWith(".parquet") && !n.startsWith(DlvTable.LOG_DIR) &&
+        !referenced(n))
+    assert(stray.isEmpty, s"refusal must precede any write: $stray")
    }
   }
 

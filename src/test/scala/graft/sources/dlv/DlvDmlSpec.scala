@@ -13,14 +13,17 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps {
 
   /** Descriptions of the file-listing jobs `body` launched — the job
     * Spark's InMemoryFileIndex runs to discover leaf files. */
-  private def listingJobs(body: => Unit): Seq[String] = {
+  private def listingJobs(body: => Unit): Seq[String] =
+    jobDescriptions(body).filter(_.startsWith("Listing leaf files"))
+
+  /** Descriptions of the jobs `body` launched. */
+  private def jobDescriptions(body: => Unit): Seq[String] = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .filter(_.startsWith("Listing leaf files"))
           .foreach(seen.add)
     }
     spark.sparkContext.addSparkListener(listener)
@@ -902,5 +905,43 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps {
     // and the delete replay at v3
     assert(ch.filter(col("_change_type") === "delete" &&
       col("id") === 3L && col("_commit_version") === 3L).count() == 1)
+  }
+
+  test("a CDC blob is written in place: an empty change set leaves no " +
+    "blob dir, a non-empty blob holds exactly the feed's rows") {
+    import spark.implicits._
+    val path = freshDir("cdcblob")
+    DlvTable.create(spark, path, "id BIGINT, v BIGINT", Nil,
+      Map(DlvDml.CDF_PROP -> "true"))
+    DlvTable.append(spark, path,
+      Seq.tabulate(20)(i => (i.toLong, 0L)).toDF("id", "v"))
+    val l = DlvTable.log(path)
+    val cdcRoot = l.resolve(s"${DlvTable.LOG_DIR}/_cdc")
+    def blobDirs: Set[String] =
+      if (l.io.exists(cdcRoot)) l.io.listNames(cdcRoot).toSet else Set.empty
+    val before = blobDirs
+    // an empty unpartitioned write still leaves one 0-row file: it is
+    // swept together with its blob dir
+    val empty = DlvTable.toDF(spark, path).filter(lit(false))
+      .withColumn("_change_type", lit("insert"))
+    assert(DlvDml.writeCdc(spark, l, l.snapshot().metadata, empty).isEmpty)
+    assert(blobDirs == before, "an empty change set must leave no blob")
+    // the data and blob writes run as named SQL executions
+    val jobs = jobDescriptions {
+      DlvDml.update(spark, path, col("id") < 5L, Map("v" -> lit(9L)))
+    }
+    assert(jobs.contains("dlv:write") && jobs.contains("dlv:cdc"), jobs)
+    val v = l.latestVersion
+    val rel = l.commitActionsOf(v)
+      .collectFirst { case c: CommitInfo => c.cdcPath }.flatten
+    assert(rel.nonEmpty, "a copy-on-write UPDATE on a CDF table writes a blob")
+    def perType(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      df.groupBy("_change_type").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val blob = perType(spark.read.parquet(l.resolve(rel.get)))
+    assert(blob == Map("update_preimage" -> 5L, "update_postimage" -> 5L))
+    assert(blob == perType(DlvChangeFeed.changes(spark, path, v, Some(v))))
+    // nothing but the blob's parquet in its dir
+    assert(l.io.walkFiles(l.resolve(rel.get)).forall(_.name.endsWith(".parquet")))
   }
 }

@@ -210,4 +210,98 @@ class DlvTableSpec extends SparkSpec {
       tx3.commit(removes, isBlindAppend = false)
     }
   }
+
+  /** Every regular file under the table root outside the log. */
+  private def dataDirFiles(l: DlvLog): Seq[String] =
+    l.io.walkFiles(l.tablePath).map(_.name)
+      .filterNot(_.startsWith(DlvTable.LOG_DIR))
+
+  test("write tasks return the stats, sizes and path order a driver " +
+    "footer read gives: append, OPTIMIZE and copy-on-write UPDATE") {
+    val big = "x" * 5000 // past parquet's 4 KB footer-stats limit
+    val df = spark.range(0, 60).select(
+      (col("id") % 3).cast("int").as("p"),
+      col("id").cast("int").as("i"),
+      col("id").as("l"),
+      (col("id") - 30).cast("short").as("s"),
+      date_add(lit("2024-01-01").cast("date"), col("id").cast("int"))
+        .as("d"),
+      (col("id") / 7).cast("decimal(9,2)").as("d9"),
+      (col("id") * 1234.5678 - 9000).cast("decimal(18,4)").as("d18"),
+      (lit(BigDecimal("12345678901234567890123456.123456")) - col("id"))
+        .cast("decimal(38,6)").as("d38"),
+      when(col("id") === 5, lit(Double.NaN))
+        .when(col("id") === 6, lit(-0.0))
+        .otherwise(col("id") * 0.5 - 3).as("dbl"),
+      (col("id") * 0.25).cast("float").as("f"),
+      (col("id") % 2 === 0).as("b"),
+      when(col("id") === 7, lit(big))
+        .when(col("id") % 5 === 0, lit("ünïcødé-日本語"))
+        .otherwise(concat(lit("s"), col("id").cast("string"))).as("str"),
+      timestamp_seconds(col("id") * 3600 + 1700000000L).as("ts"),
+      col("id").cast("string").cast("binary").as("bin"),
+      lit(null).cast("string").as("nul"),
+      struct(col("id").as("a"), lit("z").as("b")).as("st"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    for (props <- Seq(Map(DlvTable.DATA_SKIP_COLS_PROP -> "4"),
+        Map.empty[String, String])) {
+      val path = freshDir("statsparity")
+      DlvTable.create(spark, path, df.schema.toDDL, Seq("p"), props)
+      // two tasks, each writing a file into every partition: the
+      // multi-file task commit is exercised
+      DlvTable.append(spark, path, df.repartition(2))
+      DlvTable.append(spark, path, df.repartition(2))
+      DlvMaintenance.optimize(spark, path)
+      DlvDml.update(spark, path, col("i") % 4 === 0,
+        Map("l" -> (col("l") + 1000)))
+      val l = DlvTable.log(path)
+      val indexed = DlvTable.indexedStatsCols(l.snapshot().metadata)
+      assert(indexed.isDefined == props.nonEmpty)
+      for (v <- 1L to l.latestVersion) {
+        val adds = l.commitActionsOf(v).collect { case a: AddFile => a }
+        assert(adds.nonEmpty, s"v$v wrote no file")
+        assert(adds.map(_.path) == adds.map(_.path).sorted,
+          s"v$v lists its files out of path order")
+        adds.foreach { a =>
+          val file = new org.apache.hadoop.fs.Path(l.resolveQualified(a.path))
+          assert(a.stats.contains(ParquetStats.statsJson(conf, file, indexed)),
+            s"v$v ${a.path}")
+          assert(a.size == java.nio.file.Files.size(
+            java.nio.file.Paths.get(l.resolve(a.path))))
+        }
+        assert(l.snapshotAt(Some(v)).files
+          .map(_.parsedStats.get.numRecords).sum ==
+          DlvTable.toDF(spark, path, version = Some(v)).count())
+      }
+      // the stats are real, not empty on both sides
+      val st = l.snapshot().files.head.parsedStats.get
+      assert(st.minValues.keySet.contains("d"))
+      assert(st.minValues.keySet.contains("d9") == props.isEmpty)
+      // only data files beside the log: no checksum or marker files
+      val stray = dataDirFiles(l).filterNot(_.endsWith(".parquet"))
+      assert(stray.isEmpty, s"non-data files in the table dir: $stray")
+    }
+  }
+
+  test("a write that fails in one task leaves nothing visible, and " +
+    "VACUUM leaves only files the log references") {
+    val path = freshDir("failwrite")
+    DlvTable.create(spark, path, "id BIGINT, p INT", Seq("p"))
+    DlvTable.append(spark, path,
+      spark.range(0, 40).select(col("id"), (col("id") % 4).cast("int").as("p")))
+    spark.sql(s"ALTER TABLE '$path' ADD CONSTRAINT small CHECK (id < 1000)")
+    val l = DlvTable.log(path)
+    val v0 = l.latestVersion
+    val n0 = DlvTable.toDF(spark, path).count()
+    // four tasks; only the last one holds the violating row
+    val bad = spark.range(100, 140, 1, 4).select(
+      when(col("id") === 139, lit(5000L)).otherwise(col("id")).as("id"),
+      (col("id") % 4).cast("int").as("p"))
+    intercept[Exception] { DlvTable.append(spark, path, bad) }
+    assert(l.latestVersion == v0)
+    assert(DlvTable.toDF(spark, path).count() == n0)
+    DlvMaintenance.vacuum(spark, path, 0L)
+    val live = l.snapshot().files.map(_.path).toSet
+    assert(dataDirFiles(l).filter(_.endsWith(".parquet")).toSet == live)
+  }
 }
