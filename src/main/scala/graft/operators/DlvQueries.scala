@@ -1013,9 +1013,11 @@ object DlvQueries {
   }
 
   /** Sharded (v2 sidecar) checkpoints end-to-end (round 18): at a
-    * forced-small interval and shard target, a table's lifecycle
-    * crosses three checkpoint boundaries — classic parquet at the
-    * first, CONVERSION to the sharded manifest + sidecar layout at the
+    * forced-small interval, shard target and at-scale threshold (the
+    * distributed-snapshot threshold, which also picks the checkpoint
+    * writer), a table's lifecycle crosses three checkpoint boundaries
+    * — classic parquet from the driver writer at the first (no hint
+    * yet), CONVERSION to the sharded manifest + sidecar layout at the
     * second, and an INCREMENTAL sharded write at the third (only the
     * shards the tail touched rewrite; the manifest carries the rest
     * forward). At 10^7 files that write is O(changed shards), the last
@@ -1031,7 +1033,7 @@ object DlvQueries {
     (s, d) =>
     val props = Seq(
       "graft.dlv.checkpointInterval" -> "3",
-      "graft.dlv.shardedCheckpointThreshold" -> "1",
+      "graft.dlv.distributedSnapshotThreshold" -> "1",
       "graft.dlv.checkpointShardTarget" -> "8",
       "graft.dlv.parquetCheckpointThreshold" -> "1")
     val prior = props.map { case (k, _) => k -> sys.props.get(k) }

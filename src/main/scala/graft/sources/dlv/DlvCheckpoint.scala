@@ -8,9 +8,18 @@ import org.apache.spark.sql.types._
   * (`add` / `remove` / `metaData` / `commitInfo` / `protocol`), maps as
   * real MapType columns. Written and read through Spark, so a 10^6-file
   * checkpoint compresses columnar and scans in parallel instead of
-  * being one driver-parsed JSON blob; the JSON format remains the
-  * small-table default and the no-session fallback (see
-  * [[DlvLog.parquetCheckpointThreshold]]).
+  * being one driver-parsed JSON blob.
+  *
+  * Two writers use it ([[DlvLog]] picks one per checkpoint):
+  *   - the driver writer's CLASSIC checkpoint ([[writeParquet]]): every
+  *     action of the replayed snapshot in one dir, for tables past
+  *     [[DlvLog.parquetCheckpointThreshold]] (the JSON format remains
+  *     the small-table default and the no-session fallback);
+  *   - the SHARDED writer's v2 shape ([[writeShards]] +
+  *     [[writeManifest]]): AddFiles in immutable per-shard sidecar dirs
+  *     and a manifest that references them, for tables past
+  *     [[DlvLog.distributedSnapshotThreshold]] — the only at-scale
+  *     writer, which never materializes the file list on the driver.
   *
   * Reference behavior anchor: delta-spark writes `.checkpoint.parquet`
   * under `_delta_log` for exactly this reason (the reference suite
@@ -180,42 +189,6 @@ object DlvCheckpoint {
       .write.mode("overwrite").parquet(dir)
   }
 
-  /** Distributed checkpoint write: the driver-small rows (protocol /
-    * metadata / history CommitInfos) union a DISTRIBUTED AddFile
-    * Dataset — the file list flows checkpoint-to-checkpoint through
-    * executors, so a 10^7-file table's interval checkpoint never
-    * materializes its state on the driver. Returns (addCount,
-    * addBytes) accumulated ON the write job — one scan, not a write
-    * plus a separate aggregate. Task retries can overcount the
-    * accumulators; the values feed the `_last_checkpoint` HINT
-    * (routing + planning estimates, never state), where an
-    * overestimate only biases toward the distributed path and away
-    * from broadcasting — the safe directions. */
-  def writeParquetDistributed(
-      spark: SparkSession, small: Seq[Action],
-      adds: org.apache.spark.sql.Dataset[AddFile],
-      dir: String): (Long, Long) = {
-    import org.apache.spark.sql.functions.{col, lit, struct}
-    val nAcc = spark.sparkContext.longAccumulator("dlv.ckpt.addCount")
-    val bAcc = spark.sparkContext.longAccumulator("dlv.ckpt.addBytes")
-    val counted = adds.map { f =>
-      nAcc.add(1L); bAcc.add(f.size); f
-    }(org.apache.spark.sql.Encoders.product[AddFile])
-    val smallDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(small.map(toRow), 1), schema)
-    val addsDf = counted.select(
-      struct(col("path"), col("partitionValues"), col("size"),
-        col("modificationTime"), col("dataChange"), col("stats"),
-        col("dv")).as("add"),
-      lit(null).cast(removeT).as("remove"),
-      lit(null).cast(metaT).as("metaData"),
-      lit(null).cast(infoT).as("commitInfo"),
-      lit(null).cast(protoT).as("protocol"),
-      lit(null).cast(sidecarT).as("sidecar"))
-    smallDf.unionByName(addsDf).write.mode("overwrite").parquet(dir)
-    (nAcc.value, bAcc.value)
-  }
-
   private def sidecarOf(r: Row): Option[SidecarRef] =
     if (r.isNullAt(5)) None
     else {
@@ -333,10 +306,13 @@ object DlvCheckpoint {
   }
 
   /** Write the DIRTY shards of a sharded checkpoint in one job:
-    * `adds` (previous dirty-shard contents minus touched paths, plus
-    * the tail's final adds) lands under `outDir/shard=<k>/`,
-    * repartitioned so each shard is one task → one part file.
-    * Returns accumulated per-shard (numFiles, sizeBytes) hints. */
+    * `adds` (previous dirty-shard contents — or, at conversion or
+    * re-shard, the whole previous checkpoint — minus touched paths,
+    * plus the tail's final adds) lands under `outDir/shard=<k>/`,
+    * repartitioned so each shard is one task → one part file. The file
+    * list flows checkpoint-to-checkpoint through executors. Returns
+    * per-shard (numFiles, sizeBytes) counted ON the write job — one
+    * scan, not a write plus a separate aggregate. */
   def writeShards(
       spark: SparkSession,
       adds: org.apache.spark.sql.Dataset[AddFile],
@@ -344,8 +320,11 @@ object DlvCheckpoint {
       : Map[Int, (Long, Long)] = {
     import org.apache.spark.sql.functions.{col, lit, struct}
     // one scalar accumulator pair per DIRTY shard (bounded by the
-    // shard count, never the file count) — counts are hints, task
-    // retries may overcount (same contract as writeParquetDistributed)
+    // shard count, never the file count). Task retries can overcount;
+    // the values feed the `_last_checkpoint` HINT (routing + planning
+    // estimates, never state), where an overestimate only biases toward
+    // the distributed path and away from broadcasting — the safe
+    // directions
     val accs: Map[Int, (org.apache.spark.util.LongAccumulator,
         org.apache.spark.util.LongAccumulator)] =
       dirty.map(k => k -> (

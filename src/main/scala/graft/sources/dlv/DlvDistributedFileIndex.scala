@@ -417,40 +417,13 @@ object DlvDistributedFileIndex {
       sizeHint: Option[Long])
 
   /** Validated LRU of light states keyed (tablePath, version) — the
-    * distributed twin of [[DlvLog]]'s snapshot cache, with the same
-    * two-stage fingerprint (version commit stat pair, then the
-    * creation commit's content hash, forced at most once): without
-    * it every plan against a past-threshold table re-reads
-    * `_last_checkpoint`, the checkpoint meta/protocol (two pruned
-    * scans) and the tail commits — ~4 object reads + 2 jobs per
-    * repeat plan at exactly the table sizes where plans are most
-    * frequent. */
+    * distributed twin of [[DlvLog]]'s snapshot cache: without it every
+    * plan against a past-threshold table re-reads `_last_checkpoint`,
+    * the checkpoint meta/protocol (two pruned scans) and the tail
+    * commits — ~4 object reads + 2 jobs per repeat plan at exactly the
+    * table sizes where plans are most frequent. */
   private val LIGHT_CACHE_MAX = 8
-  private val lightCache = new java.util.LinkedHashMap[
-      (String, Long), (DlvLog.SnapFingerprint, LightState)](
-      8, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[
-          (String, Long), (DlvLog.SnapFingerprint, LightState)])
-        : Boolean = size() > LIGHT_CACHE_MAX
-  }
-  private def cachedLight(
-      key: (String, Long), size: Long, mtimeMs: Long,
-      createKey: () => String): Option[LightState] = {
-    val entry = lightCache.synchronized(Option(lightCache.get(key)))
-    entry match {
-      case Some((fp, s)) if fp.size == size && fp.mtimeMs == mtimeMs =>
-        if (fp.createKey == createKey()) Some(s)
-        else {
-          lightCache.synchronized { lightCache.remove(key); () }
-          None
-        }
-      case Some(_) =>
-        lightCache.synchronized { lightCache.remove(key); () }
-        None
-      case None => None
-    }
-  }
+  private val lightCache = new ValidatedLru[LightState](LIGHT_CACHE_MAX)
 
   /** Count of full light-state derivations (cache misses) — the
     * assertion hook for the repeat-plan spec, mirroring
@@ -483,8 +456,8 @@ object DlvDistributedFileIndex {
       // hint first: one tiny object read decides eligibility, so the
       // common small-table case never pays an extra log LIST here
       hint <- log.lastCheckpointHint
+      if DlvLog.atScale(hint)
       n <- hint.numFiles
-      if n >= DlvLog.distributedSnapshotThreshold
       version = v match {
         case Some(x) =>
           // same range contract as snapshotAt — without it an
@@ -511,25 +484,12 @@ object DlvDistributedFileIndex {
   private def cachedOrDerive(
       spark: SparkSession, log: DlvLog, hint: DlvLog.CheckpointHint,
       n: Long, version: Long): Option[LightState] = {
-    def createKeyNow(): String = DlvLog.contentKey(log.io.readHead(
-      log.io.child(log.logDir, CommitStore.fileName(0L)),
-      DlvLog.CREATE_KEY_HEAD_BYTES))
-    val statPair: Option[(Long, Long)] =
-      try {
-        val cf = log.io.child(log.logDir, CommitStore.fileName(version))
-        Some((log.io.size(cf), log.io.mtimeMs(cf)))
-      } catch { case scala.util.control.NonFatal(_) => None }
-    statPair.flatMap { case (sz, mt) =>
-      // a racing delete between the stat and the head read must fall
-      // through to the derivation, never fail the read — NonFatal
-      // only: an interrupt (query cancel) must propagate, not be
-      // swallowed into a full state derivation
-      try cachedLight((log.tablePath, version), sz, mt, () => createKeyNow())
-      catch { case scala.util.control.NonFatal(_) => None }
-    }.filter(s =>
-      log.io.exists(log.checkpointParquetDir(s.ckptVersion)))
+    val probe = lightCache.probe(log, version)
+    probe.flatMap(lightCache.get).filter(s =>
+      log.isParquetCheckpoint(s.ckptVersion))
       .orElse(for {
-        cv <- log.parquetCheckpointAtOrBelow(version)
+        cv <- log.checkpointAtOrBelow(
+          version, log.isParquetCheckpoint, Some(hint))
         // the hint's counts describe the HINTED checkpoint's state; an
         // older parquet checkpoint (time travel below the hint) reports
         // its own add-count with one metadata-cheap job over the
@@ -575,15 +535,7 @@ object DlvDistributedFileIndex {
           // an older checkpoint's size resolves lazily (one distributed
           // sum) if join planning asks
           if (cv == hint.version) hint.sizeBytes else None)
-        statPair.foreach { case (sz, mt) =>
-          try {
-            val fp = DlvLog.SnapFingerprint(sz, mt, createKeyNow())
-            lightCache.synchronized {
-              lightCache.put((log.tablePath, version), (fp, state))
-              ()
-            }
-          } catch { case scala.util.control.NonFatal(_) => () }
-        }
+        probe.foreach(lightCache.put(_, state))
         state
       })
   }

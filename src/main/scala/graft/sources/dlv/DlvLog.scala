@@ -166,9 +166,13 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
       }
     val content = stamped.map(Actions.toJson).mkString("\n") + "\n"
     val won = io.putIfAbsent(logDir, CommitStore.fileName(version), content)
+    // the one best-effort catch of the checkpoint write: the commit is
+    // already published, and a won commit must return true — whatever
+    // the checkpoint does. A failed checkpoint only leaves this
+    // interval without one; the next interval retries.
     if (won && version > 0 && version % DlvLog.checkpointInterval == 0)
       try writeCheckpoint(version)
-      catch { case _: Throwable => () } // checkpoint is an optimization
+      catch { case _: Throwable => () }
     won
   }
 
@@ -177,75 +181,63 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
     * timestamps — DESCRIBE HISTORY, TIMESTAMP AS OF resolution — costs
     * O(CHECKPOINT_INTERVAL) object reads, not O(table age). Building
     * from the PREVIOUS checkpoint (not a from-zero replay) keeps the
-    * checkpoint write itself O(interval) too. */
+    * checkpoint write itself O(interval) too.
+    *
+    * Two routes, chosen from ONE `_last_checkpoint` read by the same
+    * evidence the read route uses
+    * ([[DlvDistributedFileIndex.forVersion]]): when the hint names an
+    * earlier PARQUET checkpoint at [[DlvLog.distributedSnapshotThreshold]]
+    * live files or more, the sharded writer builds on it and never
+    * materializes the file list; every other table goes through the
+    * driver replay. A failure of either propagates to `commit`'s one
+    * best-effort catch — no fall-through to the other route. */
   private def writeCheckpoint(version: Long): Unit = {
-    // SHARDED (v2 sidecar) route first: AddFiles live in immutable
-    // per-shard sidecar dirs; an interval checkpoint rewrites ONLY
-    // the shards the tail touched — O(changed shards), not O(file
-    // list). Best-effort like every checkpoint route: any failure
-    // falls through.
-    val handledSharded =
-      org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
-        try writeShardedCheckpoint(s, version)
-        catch { case _: Throwable => false }
-      }
-    if (handledSharded) return
-    // DISTRIBUTED route second: past the snapshot threshold the new
-    // checkpoint's file list flows from the PREVIOUS checkpoint's
-    // Dataset (plus the tail replay) straight back to parquet — the
-    // driver only handles protocol/metadata/history, so a 10^7-file
-    // table's interval checkpoint never materializes its state.
-    // Best-effort like the rest of checkpointing: any failure falls
-    // back to the driver replay below.
-    val sessionOpt = org.apache.spark.sql.SparkSession.getActiveSession
-    val idxOpt = sessionOpt.flatMap { s =>
-      try DlvDistributedFileIndex.forVersion(
-        s, this, Some(version), statsSkipping = false)
-      catch { case _: Throwable => None }
+    val session = org.apache.spark.sql.SparkSession.getActiveSession
+    val atScaleBase = lastCheckpointHint.filter(h =>
+      h.version < version && DlvLog.atScale(h) &&
+        isParquetCheckpoint(h.version))
+    (session, atScaleBase) match {
+      case (Some(spark), Some(prev)) =>
+        writeShardedCheckpoint(spark, version, prev)
+      case _ =>
+        writeDriverCheckpoint(version, session)
     }
-    idxOpt match {
-      case Some(idx) =>
-        val spark = sessionOpt.get
-        val small: Seq[Action] =
-          Seq(idx.protocol, idx.metadata) ++ historyAsc(version)
-        // hint counts accumulate ON the write job — one scan of the
-        // previous checkpoint, not a write plus a separate aggregate
-        var counts = (0L, 0L)
-        stagePublishParquet(version, tmp =>
-          counts = DlvCheckpoint.writeParquetDistributed(
-            spark, small, idx.liveFilesDS, tmp))
-        io.writeReplace(lastCheckpointFile,
-          s"""{"version":$version,"numFiles":${counts._1}""" +
-            s""","sizeBytes":${counts._2}}""")
-        return
-      case None => ()
-    }
+  }
+
+  /** The driver-replay checkpoint: the full snapshot at `version`,
+    * written by size — JSON below [[DlvLog.parquetCheckpointThreshold]]
+    * (one cheap driver read, no job latency), columnar parquet above it
+    * (10^5 AddFiles parse ~10× faster and the read can be distributed)
+    * through the active session, which necessarily exists when a table
+    * that big was just written. */
+  private def writeDriverCheckpoint(
+      version: Long,
+      session: Option[org.apache.spark.sql.SparkSession]): Unit = {
     val snap = snapshotAt(Some(version))
     val actions: Seq[Action] =
       Seq(snap.protocol, snap.metadata) ++ historyAsc(version) ++ snap.files
-    // format by size: JSON below the threshold (one cheap driver read,
-    // no job latency), columnar parquet above it (10^5+ AddFiles parse
-    // ~10× faster and the read can be distributed) — written through
-    // the active session, which necessarily exists when a table that
-    // big was just written
-    val useParquet =
-      snap.files.size >= DlvLog.parquetCheckpointThreshold &&
-        sessionOpt.isDefined
-    if (useParquet)
-      stagePublishParquet(version, tmp =>
-        DlvCheckpoint.writeParquet(
-          org.apache.spark.sql.SparkSession.active, actions, tmp))
-    else {
-      val content = actions.map(Actions.toJson).mkString("\n") + "\n"
-      io.writeReplace(checkpointFile(version), content)
+    session match {
+      case Some(spark)
+          if snap.files.size >= DlvLog.parquetCheckpointThreshold =>
+        stagePublishParquet(version, tmp =>
+          DlvCheckpoint.writeParquet(spark, actions, tmp))
+      case _ =>
+        val content = actions.map(Actions.toJson).mkString("\n") + "\n"
+        io.writeReplace(checkpointFile(version), content)
     }
-    // numFiles/sizeBytes are ROUTING/PLANNING hints (distributed-
-    // snapshot threshold, relation size estimate), not state: stale or
-    // absent → a suboptimal path choice, never a wrong answer
-    io.writeReplace(lastCheckpointFile,
-      s"""{"version":$version,"numFiles":${snap.files.size}""" +
-        s""","sizeBytes":${snap.sizeInBytes}}""")
+    writeHint(version, snap.files.size, snap.sizeInBytes)
   }
+
+  /** Point `_last_checkpoint` at a just-published checkpoint.
+    * numFiles/sizeBytes are ROUTING/PLANNING hints (distributed-
+    * snapshot threshold, checkpoint writer, relation size estimate),
+    * not state: stale or absent → a suboptimal path choice, never a
+    * wrong answer. */
+  private def writeHint(version: Long, numFiles: Long, sizeBytes: Long)
+      : Unit =
+    io.writeReplace(lastCheckpointFile,
+      s"""{"version":$version,"numFiles":$numFiles""" +
+        s""","sizeBytes":$sizeBytes}""")
 
   /** Delta-v2-shaped SHARDED checkpoint write. The version's manifest
     * (`<v>.checkpoint.parquet`, same name → all discovery logic
@@ -259,31 +251,23 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
     * worth of DML the write cost is O(interval × files-per-commit),
     * the last full-file-list object write in the lifecycle gone.
     *
-    * Eligible when a previous parquet checkpoint exists AND (it is
-    * already sharded — stickiness — or its file-count hint crossed
-    * [[DlvLog.shardedCheckpointThreshold]]). Shard count targets
+    * Builds on `prev`, the hinted parquet checkpoint (classic or
+    * sharded; a classic one converts here). Shard count targets
     * [[DlvLog.checkpointShardTargetAdds]] adds per shard and re-shards
     * (full rewrite, one interval) when the population drifts 4× out of
-    * band. Returns false to fall through to the classic routes. */
+    * band. */
   private def writeShardedCheckpoint(
-      spark: org.apache.spark.sql.SparkSession, version: Long)
-      : Boolean = {
+      spark: org.apache.spark.sql.SparkSession, version: Long,
+      prev: DlvLog.CheckpointHint): Unit = {
     import org.apache.spark.sql.{Dataset, Encoders}
     import org.apache.spark.sql.functions.col
-    val pc = parquetCheckpointAtOrBelow(version - 1) match {
-      case Some(v) => v
-      case None => return false
-    }
+    val pc = prev.version
     val prevDir = io.qualified(checkpointParquetDir(pc))
     val prevRefs = DlvCheckpoint.sidecarRefs(spark, prevDir)
     val prevSharded = prevRefs.nonEmpty
     val prevAddRefs = prevRefs.filter(_.isAdd)
-    val prevCount: Long =
-      if (prevSharded) prevAddRefs.map(_.numFiles).sum
-      else lastCheckpointHint.filter(_.version == pc)
-        .flatMap(_.numFiles).getOrElse(-1L)
-    if (!prevSharded && prevCount < DlvLog.shardedCheckpointThreshold)
-      return false
+    // the writer routes here only on a hint that carries the count
+    val prevCount: Long = prev.numFiles.getOrElse(0L)
 
     // tail replay — driver-bounded by the interval, the same bound
     // the distributed index's light-state derivation pays
@@ -308,10 +292,8 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
       metadata = metadata.orElse(m0)
       protocol = protocol.orElse(p0)
     }
-    val meta = metadata match {
-      case Some(m) => m
-      case None => return false
-    }
+    val meta = metadata.getOrElse(throw new IllegalStateException(
+      s"no metadata in checkpoint $pc or its tail at $tablePath"))
     val proto = protocol.getOrElse(Protocol())
 
     val tailAdds = touched.values.flatten.toSeq
@@ -355,8 +337,8 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
     // CommitInfos; the prev manifest's INLINE rows (pruned read, no
     // chunks); a live commit read; and — rare fallback (H changed,
     // chunks reclaimed) — the prev checkpoint's full history. A
-    // version resolvable nowhere aborts to the classic route (the
-    // caller catches), never writes a hole into an immutable chunk.
+    // version resolvable nowhere aborts the checkpoint (`commit`
+    // catches), never writes a hole into an immutable chunk.
     lazy val prevInline: Map[Long, CommitInfo] =
       if (!prevSharded) Map.empty
       else DlvCheckpoint.readManifestCommitInfos(spark, prevDir)
@@ -392,10 +374,8 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
       stagePublishParquet(version, tmp =>
         DlvCheckpoint.writeManifest(spark, small,
           prevAddRefs ++ histRefs, tmp))
-      io.writeReplace(lastCheckpointFile,
-        s"""{"version":$version,"numFiles":$prevCount""" +
-          s""","sizeBytes":${prevAddRefs.map(_.sizeBytes).sum}}""")
-      return true
+      writeHint(version, prevCount, prevAddRefs.map(_.sizeBytes).sum)
+      return
     }
 
     val refByShard = prevAddRefs.map(r => r.shardId -> r).toMap
@@ -438,11 +418,8 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
       }
     stagePublishParquet(version, tmp =>
       DlvCheckpoint.writeManifest(spark, small, addRefs ++ histRefs, tmp))
-    io.writeReplace(lastCheckpointFile,
-      s"""{"version":$version""" +
-        s""","numFiles":${addRefs.map(_.numFiles).sum}""" +
-        s""","sizeBytes":${addRefs.map(_.sizeBytes).sum}}""")
-    true
+    writeHint(version, addRefs.map(_.numFiles).sum,
+      addRefs.map(_.sizeBytes).sum)
   }
 
   /** Stage-then-rename publish for parquet checkpoints: the
@@ -465,7 +442,7 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
     io.listNames(logDir).filter(_.startsWith(".ckpt-tmp-"))
       .map(n => io.child(logDir, n))
       .filter(p => (try now - io.mtimeMs(p) catch {
-        case _: Throwable => 0L
+        case scala.util.control.NonFatal(_) => 0L
       }) > DlvLog.TMP_SWEEP_GRACE_MS)
       .foreach(io.deleteRecursive)
   }
@@ -489,7 +466,7 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
         long("version").map(v =>
           DlvLog.CheckpointHint(v, long("numFiles"), long("sizeBytes")))
       } catch {
-        case _: Throwable =>
+        case scala.util.control.NonFatal(_) =>
           // torn read (a streamed writeReplace on stores without atomic
           // replace): salvage the version — it is written FIRST — and
           // drop the counts; a hint failure must never fail a read,
@@ -499,20 +476,33 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
       }
     }
 
-  /** Newest PARQUET checkpoint at or below `v`, if any — the only
-    * checkpoint format the distributed snapshot can plan from. */
-  private[dlv] def parquetCheckpointAtOrBelow(v: Long): Option[Long] = {
-    val hinted = lastCheckpointHint.map(_.version).filter(_ <= v)
-      .filter(cv => io.exists(checkpointParquetDir(cv)))
-    hinted.orElse {
+  /** Newest checkpoint at or below `v` that passes `usable`: the hint
+    * first, then a listing fallback (the hint may be stale, absent or
+    * point past v). A caller that already read the hint passes it. */
+  private[dlv] def checkpointAtOrBelow(
+      v: Long, usable: Long => Boolean,
+      hint: Option[DlvLog.CheckpointHint] = lastCheckpointHint)
+      : Option[Long] =
+    hint.map(_.version).filter(_ <= v).filter(usable).orElse {
       if (!io.exists(logDir)) None
       else io.listNames(logDir)
         .collect { case DlvLog.CheckpointFile(cv) => cv.toLong }
-        .filter(_ <= v)
-        .filter(cv => io.exists(checkpointParquetDir(cv)))
-        .maxOption
+        .filter(_ <= v).filter(usable).maxOption
     }
-  }
+
+  /** A PARQUET checkpoint — the only format the distributed snapshot
+    * can plan from. */
+  private[dlv] def isParquetCheckpoint(cv: Long): Boolean =
+    io.exists(checkpointParquetDir(cv))
+
+  /** A checkpoint this process can read. A parquet-only checkpoint is
+    * unreadable without a SparkSession — session-less tooling falls
+    * back to a full (checkpoint-free) replay, which is slower but
+    * always correct. */
+  private def isReadableCheckpoint(cv: Long): Boolean =
+    io.exists(checkpointFile(cv)) ||
+      (isParquetCheckpoint(cv) &&
+        org.apache.spark.sql.SparkSession.getActiveSession.isDefined)
 
   // checkpoint objects are immutable once published — cache the last
   // one read so a snapshot+history pair (e.g. writeCheckpoint itself)
@@ -557,26 +547,6 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
             resolveCheckpointRef)
     }
 
-  private def lastCheckpointVersionAtOrBelow(v: Long): Option[Long] = {
-    // hint first, then a listing fallback (the hint may be stale or
-    // point past v)
-    // a parquet-only checkpoint is unreadable without a SparkSession —
-    // session-less tooling falls back to a full (checkpoint-free)
-    // replay, which is slower but always correct
-    def readable(cv: Long): Boolean =
-      io.exists(checkpointFile(cv)) ||
-        (io.exists(checkpointParquetDir(cv)) &&
-          org.apache.spark.sql.SparkSession.getActiveSession.isDefined)
-    val hinted = lastCheckpointHint.map(_.version)
-      .filter(_ <= v).filter(readable)
-    hinted.orElse {
-      if (!io.exists(logDir)) None
-      else io.listNames(logDir)
-        .collect { case DlvLog.CheckpointFile(cv) => cv.toLong }
-        .filter(_ <= v).filter(readable).maxOption
-    }
-  }
-
   def snapshot(): Snapshot = snapshotAt(None)
 
   def snapshotAt(
@@ -593,26 +563,15 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
     // instead of a checkpoint-plus-tail replay per query plan. Probed
     // only when the cache is in play (useCheckpoint=false bypasses
     // both lookup and store).
-    def createKeyNow(): String = DlvLog.contentKey(io.readHead(
-      io.child(logDir, CommitStore.fileName(0L)),
-      DlvLog.CREATE_KEY_HEAD_BYTES))
-    val statPair: Option[(Long, Long)] =
-      if (!useCheckpoint) None
-      else try {
-        val cf = io.child(logDir, CommitStore.fileName(v))
-        Some((io.size(cf), io.mtimeMs(cf)))
-      } catch { case _: Throwable => None }
-    statPair.flatMap { case (sz, mt) =>
-      // a racing delete between the stat and the head read must fall
-      // through to the replay, never fail the read
-      try DlvLog.cachedSnapshot((tablePath, v), sz, mt, () => createKeyNow())
-      catch { case _: Throwable => None }
-    } match {
+    val probe =
+      if (useCheckpoint) DlvLog.snapshotCache.probe(this, v) else None
+    probe.flatMap(DlvLog.snapshotCache.get) match {
       case Some(s) => return s
       case None => ()
     }
     val ckpt =
-      if (useCheckpoint) lastCheckpointVersionAtOrBelow(v) else None
+      if (useCheckpoint) checkpointAtOrBelow(v, isReadableCheckpoint)
+      else None
     val base: Seq[Action] = ckpt match {
       case Some(cv) => readCheckpointActions(cv)
       case None => Nil
@@ -673,11 +632,7 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
       throw new IllegalStateException(s"no metadata in log at $tablePath")),
       protocol, files.values.toSeq, ts)
     if (snap.files.size <= DlvLog.SNAPSHOT_CACHE_FILE_LIMIT)
-      statPair.foreach { case (sz, mt) =>
-        try DlvLog.cacheSnapshot((tablePath, v),
-          DlvLog.SnapFingerprint(sz, mt, createKeyNow()), snap)
-        catch { case _: Throwable => () }
-      }
+      probe.foreach(DlvLog.snapshotCache.put(_, snap))
     snap
   }
 
@@ -723,7 +678,7 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
     * reads — correctness never depends on the checkpoint's contents. */
   private def historyAsc(v: Long): Seq[CommitInfo] = {
     val fromCkpt: Map[Long, CommitInfo] =
-      lastCheckpointVersionAtOrBelow(v) match {
+      checkpointAtOrBelow(v, isReadableCheckpoint) match {
         case Some(cv) =>
           readCheckpointCommitInfos(cv).map(c => c.version -> c).toMap
         case None => Map.empty
@@ -759,17 +714,14 @@ object DlvLog {
     * path `relativize` produces. */
   private val SCHEME_RE = "^[A-Za-z][A-Za-z0-9+.-]*:/".r
 
-  /** Bounded LRU of materialized snapshots keyed by (tablePath,
-    * version). A version's state is immutable once committed, so a hit
-    * is exact — EXCEPT a table deleted and re-created at the same path,
-    * which rewrites early commits; every hit therefore re-validates
-    * against a [[SnapFingerprint]] (one stat probe + one tiny creation-
-    * commit read vs. a full checkpoint-plus-tail replay). Entry count is
-    * kept small because each entry holds a full AddFile list (the
-    * driver-side design point is ~250 MB at 10^5 files); tables past
-    * the distributed threshold never reach this cache's callers for
-    * data reads anyway ([[DlvDistributedFileIndex]]). */
+  /** Materialized snapshots of the last few (table, version) reads.
+    * Entry count is kept small because each entry holds a full AddFile
+    * list (the driver-side design point is ~250 MB at 10^5 files);
+    * tables past the distributed threshold never reach this cache's
+    * callers for data reads anyway ([[DlvDistributedFileIndex]]). */
   private val SNAPSHOT_CACHE_MAX = 4
+  private[dlv] val snapshotCache =
+    new ValidatedLru[Snapshot](SNAPSHOT_CACHE_MAX)
   /** Snapshots with more live files than this are not cached: four
     * pinned 10^5-AddFile lists would quadruple the documented
     * driver-state bound, and tables that large plan reads through the
@@ -779,64 +731,6 @@ object DlvLog {
   private[dlv] def SNAPSHOT_CACHE_FILE_LIMIT: Int =
     sys.props.get("graft.dlv.snapshotCacheFileLimit")
       .map(_.toInt).getOrElse(20000)
-  /** Validation fingerprint: the version commit's (size, mtime) — a
-    * cheap stat catching out-of-contract rewrites — plus a content hash
-    * over the HEAD of the CREATION commit, whose leading Metadata
-    * action carries the table's fresh UUID: a table deleted and
-    * re-created at the same path can match the stat pair (same schema →
-    * same byte length, coarse mtime granularity on object stores) but
-    * never the creation hash. The head bound matters: a CONVERT-adopted
-    * table's creation commit carries its whole AddFile list (can be
-    * tens of MB), and the UUID-bearing Protocol/Metadata lines come
-    * first — hashing [[CREATE_KEY_HEAD_BYTES]] captures them without an
-    * unbounded read. The hash is computed LAZILY: only when a lookup's
-    * stat pair already matches, or when a snapshot is actually stored —
-    * never-cached tables pay only the stat probe per plan. */
-  private[dlv] final case class SnapFingerprint(
-      size: Long, mtimeMs: Long, createKey: String)
-  private[dlv] val CREATE_KEY_HEAD_BYTES = 64 * 1024
-  private[dlv] def contentKey(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-    d.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-  }
-  private val snapshotCache =
-    new java.util.LinkedHashMap[(String, Long), (SnapFingerprint, Snapshot)](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long), (SnapFingerprint, Snapshot)])
-          : Boolean = size() > SNAPSHOT_CACHE_MAX
-    }
-  /** Lookup with two-stage validation: stat pair first (no IO beyond
-    * the probe the caller already paid), creation hash — `createKey`
-    * forced at most once — only when the stats match. Stale entries are
-    * evicted rather than left for the access-ordered get to promote. */
-  private[dlv] def cachedSnapshot(
-      key: (String, Long), size: Long, mtimeMs: Long,
-      createKey: () => String): Option[Snapshot] = {
-    val entry = snapshotCache.synchronized(Option(snapshotCache.get(key)))
-    entry match {
-      case Some((fp, s)) if fp.size == size && fp.mtimeMs == mtimeMs =>
-        // the head read runs OUTSIDE the lock; a racing eviction of a
-        // just-replaced entry is benign (the next call re-replays)
-        if (fp.createKey == createKey()) Some(s)
-        else {
-          snapshotCache.synchronized { snapshotCache.remove(key); () }
-          None
-        }
-      case Some(_) =>
-        snapshotCache.synchronized { snapshotCache.remove(key); () }
-        None
-      case None => None
-    }
-  }
-  private[dlv] def cacheSnapshot(
-      key: (String, Long), fingerprint: SnapFingerprint,
-      s: Snapshot): Unit =
-    snapshotCache.synchronized {
-      snapshotCache.put(key, (fingerprint, s))
-      ()
-    }
 
   /** Parsed `_last_checkpoint` contents — see
     * [[DlvLog.lastCheckpointHint]]. */
@@ -884,31 +778,27 @@ object DlvLog {
       .map(_.toLong).getOrElse(60L * 60 * 1000)
 
   /** Live-file count (from the `_last_checkpoint` hint) at or above
-    * which reads plan through the Dataset-backed
-    * [[DlvDistributedFileIndex]] instead of materializing every
-    * AddFile on the driver. The default sits above the measured
-    * driver-side design point (10^5 files ≈ 250 MB heap, SURVEY §4);
-    * sysprop-overridable so specs can force the distributed path. */
+    * which the driver no longer holds the file list: reads plan through
+    * the Dataset-backed [[DlvDistributedFileIndex]] instead of
+    * materializing every AddFile, and interval checkpoints go to the
+    * SHARDED writer ([[DlvLog.writeShardedCheckpoint]], write cost
+    * O(changed shards) instead of O(file list)). The default sits above
+    * the measured driver-side design point (10^5 files ≈ 250 MB heap,
+    * SURVEY §4); sysprop-overridable so specs can force both paths. */
   def distributedSnapshotThreshold: Long =
     sys.props.get("graft.dlv.distributedSnapshotThreshold")
       .map(_.toLong).getOrElse(200000L)
+
+  /** Does this hint describe a table past
+    * [[distributedSnapshotThreshold]]? A hint without counts does not. */
+  private[dlv] def atScale(h: CheckpointHint): Boolean =
+    h.numFiles.exists(_ >= distributedSnapshotThreshold)
 
   /** AddFile count above which checkpoints switch to columnar parquet
     * (sysprop-overridable so specs can force the parquet path). */
   def parquetCheckpointThreshold: Int =
     sys.props.get("graft.dlv.parquetCheckpointThreshold")
       .map(_.toInt).getOrElse(10000)
-
-  /** File-count hint at or above which checkpoints switch to the
-    * SHARDED sidecar format ([[DlvLog.writeShardedCheckpoint]]) —
-    * write cost O(changed shards) instead of O(file list). Defaults
-    * to the distributed-snapshot threshold: past it the driver
-    * shouldn't hold the list, so the checkpoint shouldn't rewrite it
-    * either. Sticky: once a table's checkpoint is sharded, later
-    * checkpoints stay sharded regardless of this knob. */
-  def shardedCheckpointThreshold: Long =
-    sys.props.get("graft.dlv.shardedCheckpointThreshold")
-      .map(_.toLong).getOrElse(200000L)
 
   /** Target AddFiles per sidecar shard — shard count =
     * ceil(files/target), re-sharded when the population drifts 4× out

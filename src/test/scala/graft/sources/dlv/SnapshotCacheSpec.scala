@@ -82,7 +82,7 @@ class SnapshotCacheSpec extends SparkSpec {
     // hash can now tell the entries apart. Reverting the createKey
     // validation makes the next read serve the deleted table's rows.
     val cf = l.io.child(l.logDir, CommitStore.fileName(1L))
-    DlvLog.cacheSnapshot((path, 1L), DlvLog.SnapFingerprint(
+    DlvLog.snapshotCache.put((path, 1L), ValidatedLru.Fingerprint(
       l.io.size(cf), l.io.mtimeMs(cf), "old-creation-hash"), stale)
     val got = DlvTable.toDF(spark, path, version = Some(1))
       .collect().map(_.getLong(0)).toSet
