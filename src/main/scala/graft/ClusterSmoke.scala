@@ -96,8 +96,8 @@ object ClusterSmoke {
       s"distributed-index read returned ${distRows.length} rows, not 10")
 
     // 4. the round-15 surfaces whose plans ship NEW shapes to
-    // executors: a clone's external-file scan + the partition-attach
-    // broadcast join (dlv_clone), physical→logical projections over
+    // executors: a clone's external-file scan (dlv_clone),
+    // physical→logical projections over
     // renamed files (dlv_rename_column), the identity allocation
     // expression (dlv_identity), and derived partition bounds inside
     // the scan (dlv_genpart_prune)

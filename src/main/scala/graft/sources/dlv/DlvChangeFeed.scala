@@ -33,8 +33,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * data-file replays go through [[DlvDml.readFiles]] over files the
   * log already describes (size and partition values from the add or
   * remove action), so planning lists and HEADs nothing; a remove
-  * written before [[RemoveFile.size]] existed is left to the scan's
-  * explicit-schema read. Narrow ranges build the mapping on the
+  * written before [[RemoveFile.size]] existed costs one size probe,
+  * and no listing. Narrow ranges build the mapping on the
   * driver; ranges of [[distributedRangeThreshold]]+ versions classify
   * the commits IN EXECUTORS ([[distributedMapping]]) and the driver
   * holds only the distinct replayed files — the bound the scan's own
@@ -130,8 +130,10 @@ object DlvChangeFeed {
     * distinct files once and stamp them through `mappingOf(kind)`
     * (`(__k, __v, __ts)` rows; a file replayed at several versions —
     * RESTORE re-adds — fans out per version, the per-version replay
-    * semantics). A file is passed as log-known when any action of the
-    * range recorded its size. */
+    * semantics). Each replayed file is read from an AddFile built from
+    * its action: the size any action of the range recorded, or — for a
+    * remove written before [[RemoveFile.size]] existed — one size
+    * probe. */
   private def assemble(
       spark: SparkSession, l: DlvLog, meta: Metadata,
       files: Seq[Replay], mappingOf: String => DataFrame): DataFrame = {
@@ -142,10 +144,17 @@ object DlvChangeFeed {
         val rels = byRel.keys.toSeq.sorted
         val read =
           if (kind == "cdc") readCdcBlobs(spark, l, meta, rels)
-          else readReplays(spark, l, meta, rels, rels.flatMap(rel =>
-            byRel(rel).collectFirst { case Replay(_, _, Some(size), pv) =>
-              AddFile(rel, pv, size, 0L, dataChange = false, stats = None)
-            }), kind)
+          else {
+            val probed = DriverPar.map(
+              rels.filter(byRel(_).forall(_.size.isEmpty)))(rel =>
+              rel -> l.io.size(l.resolve(rel))).toMap
+            readReplays(spark, l, meta, rels.map { rel =>
+              val rs = byRel(rel)
+              AddFile(rel, rs.head.partitionValues,
+                rs.flatMap(_.size).headOption.getOrElse(probed(rel)), 0L,
+                dataChange = false, stats = None)
+            }, kind)
+          }
         Some(stampJoin(read, mappingOf(kind)))
       }
     }
@@ -344,17 +353,14 @@ object DlvChangeFeed {
   }
 
   /** All add- (or remove-) replay files of the range in ONE read,
-    * keyed by file. `known` are the files the log gave a size for:
-    * when they cover every table-local path the scan plans with zero
-    * listing I/O, otherwise it takes its explicit-schema read.
-    * Historical replays want the files' rows as written, so no vector
-    * applies (the vector guards refuse the commits where one would). */
+    * keyed by file, planned from their AddFiles with zero listing I/O.
+    * Historical replays want the files' rows as written, so the
+    * AddFiles carry no vector (the vector guards refuse the commits
+    * where one would apply). */
   private def readReplays(
-      spark: SparkSession, l: DlvLog, meta: Metadata, rels: Seq[String],
-      known: Seq[AddFile], changeType: String): DataFrame =
-    DlvDml.readFiles(spark, l, rels, meta.schema, dvFiles = known,
-        toLogical = DlvColMap.toLogicalRenames(meta),
-        partitionCols = meta.partitionColumns, keepFileKey = true)
+      spark: SparkSession, l: DlvLog, meta: Metadata, files: Seq[AddFile],
+      changeType: String): DataFrame =
+    DlvDml.readFiles(spark, l, meta, files, keepFileKey = true)
       .withColumnRenamed("__src_file", "__k")
       .withColumn("_change_type", lit(changeType))
 }

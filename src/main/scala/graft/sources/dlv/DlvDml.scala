@@ -86,7 +86,18 @@ object DlvDml {
       * protocol witness — never the property alone (UNSET must not
       * resurrect rows). */
     def dvActive: Boolean
-    def filesByPath(paths: Set[String]): Seq[AddFile]
+    /** The live AddFiles of `paths`, every one of them: rewrite reads
+      * scan exactly the AddFiles they are given, so a path without one
+      * would drop its rows from the rewrite instead of failing. */
+    final def filesByPath(paths: Set[String]): Seq[AddFile] = {
+      val found = liveByPath(paths)
+      val missing = paths -- found.map(_.path)
+      if (missing.nonEmpty) throw new IllegalStateException(
+        "rewrite read: no live AddFile for " +
+          missing.toSeq.sorted.take(5).mkString(", "))
+      found
+    }
+    protected def liveByPath(paths: Set[String]): Seq[AddFile]
     /** Files whose partition values satisfy `bound` (an expression
       * already bound to the partition schema via [[boundPartition]])
       * — EXACT evaluation, both routes. */
@@ -121,7 +132,7 @@ object DlvDml {
     def dvFileDirs: () => Option[Map[String, Seq[String]]] =
       () => Some(DlvDv.fileDirMap(l, snap.files))
     def dvActive: Boolean = snap.files.exists(_.dv.nonEmpty)
-    def filesByPath(paths: Set[String]): Seq[AddFile] =
+    protected def liveByPath(paths: Set[String]): Seq[AddFile] =
       snap.files.filter(f => paths(f.path))
     def filesWherePartition(
         bound: org.apache.spark.sql.catalyst.expressions.Expression)
@@ -152,7 +163,7 @@ object DlvDml {
     def dvFileDirs: () => Option[Map[String, Seq[String]]] =
       () => idx.dvFileDirs(idx.dvSplitSummary._4)
     def dvActive: Boolean = DlvDv.active(idx.metadata, idx.protocol)
-    def filesByPath(paths: Set[String]): Seq[AddFile] =
+    protected def liveByPath(paths: Set[String]): Seq[AddFile] =
       idx.collectAddFiles(paths = Some(paths))
     def filesWherePartition(
         bound: org.apache.spark.sql.catalyst.expressions.Expression)
@@ -380,8 +391,7 @@ object DlvDml {
       val cdc =
         if (!cdfEnabled(meta) || doomed.isEmpty) None
         else writeCdc(spark, l, meta,
-          readFiles(spark, l, doomed.map(_.path), meta.schema, doomed,
-            DlvColMap.toLogicalRenames(meta), meta.partitionColumns)
+          readFiles(spark, l, meta, doomed)
             .withColumn("_change_type", lit("delete")))
       val removes = doomed.map(_.remove(now, dataChange = true))
       // whole files go: deleted rows = their stats totals minus rows
@@ -427,9 +437,7 @@ object DlvDml {
     // PERSISTED: under CDF the touched-file scan feeds both the
     // rewrite (kept rows) and the CDC delete image — without caching,
     // each pass re-reads the touched files from storage.
-    val touchedDf = readFiles(spark, l, touched.toSeq, meta.schema,
-      touchedAdds, DlvColMap.toLogicalRenames(meta),
-      meta.partitionColumns).persist()
+    val touchedDf = readFiles(spark, l, meta, touchedAdds).persist()
     try {
       // SQL DELETE semantics: only rows where the predicate is TRUE
       // are deleted — a NULL predicate keeps the row. `!cond` alone
@@ -538,9 +546,7 @@ object DlvDml {
           else {
             val delImg =
               if (doomed.isEmpty) None
-              else Some(readFiles(spark, l, doomed.map(_.path),
-                meta.schema, doomed, DlvColMap.toLogicalRenames(meta),
-                meta.partitionColumns)
+              else Some(readFiles(spark, l, meta, doomed)
                 .withColumn("_change_type", lit("delete")))
             writeCdc(spark, l, meta,
               delImg.map(_.unionByName(insertImages))
@@ -563,9 +569,7 @@ object DlvDml {
       tx.addConflictFilter = partitionScopeFilter(aCond, meta)
       val touchedDf =
         if (touched.isEmpty) None
-        else Some(readFiles(spark, l, touched.toSeq, meta.schema,
-          touchedAdds, DlvColMap.toLogicalRenames(meta),
-          meta.partitionColumns).persist())
+        else Some(readFiles(spark, l, meta, touchedAdds).persist())
       try {
         // only predicate-TRUE rows are replaced; NULL keeps the row
         // (same rule as DELETE)
@@ -644,9 +648,7 @@ object DlvDml {
     // Without it dlv_cdf pays ~3 redundant storage passes per UPDATE.
     // The rewrite reads THROUGH any deletion vectors (dead rows must
     // not resurrect); the clean rewritten files purge them.
-    val touchedDf = readFiles(spark, l, touched.toSeq, meta.schema,
-      touchedAdds, DlvColMap.toLogicalRenames(meta),
-      meta.partitionColumns).persist()
+    val touchedDf = readFiles(spark, l, meta, touchedAdds).persist()
     try {
       def applySet(df: DataFrame): DataFrame = {
         val afterSet = meta.schema.fieldNames.foldLeft(df) { (acc, c) =>
@@ -925,9 +927,7 @@ object DlvDml {
       val outputs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       val changes = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       if (rewriteSet.nonEmpty) {
-        val tgt = readFiles(spark, l, rewriteSet.toSeq, meta.schema,
-          rewriteFiles, DlvColMap.toLogicalRenames(meta),
-          meta.partitionColumns).alias("tgt")
+        val tgt = readFiles(spark, l, meta, rewriteFiles).alias("tgt")
         val resolved = resolveClauses(
           tgt.join(src, on, "left_outer").withColumn("__matched",
             coalesce(col("src.__src_marker"), lit(false))),
@@ -1210,52 +1210,41 @@ object DlvDml {
     }
   }
 
-  /** Read specific table files with partition columns recovered from
-    * their hive paths, projected and cast to `schema`. The schema is
-    * REQUIRED (no resolve-at-latest convenience): every caller is
-    * version-pinned (DML at the tx version, change feed at its range
-    * end, streaming at its start), and resolving at latest would both
-    * materialize a snapshot and emit a different shape than the reads
-    * beside it when the schema evolved past the pinned version.
-    * Schema-evolution aware: columns the files predate (ADD COLUMNS)
-    * come back as typed nulls; columns `schema` dropped are projected
-    * away. */
-  /** Read table files by rel path, schema-aligned. `dvFiles` (the
-    * AddFiles being read, when the caller has them) applies their
-    * deletion vectors — every REWRITE source must pass them, or a
-    * rewrite would resurrect soft-deleted rows. Historical replays
-    * (CDF) pass vector-free entries only for their log sizes: they
-    * want the file's rows as written.
+  /** Read the given table files, projected to `meta.schema`. The
+    * metadata is REQUIRED (no resolve-at-latest convenience): every
+    * caller is version-pinned (DML at the tx version, change feed at
+    * its range end, streaming at its start), and resolving at latest
+    * would both materialize a snapshot and emit a different shape than
+    * the reads beside it when the schema evolved past the pinned
+    * version. Columns a file predates (ADD COLUMNS) read as typed
+    * nulls; columns the schema dropped are not requested.
+    *
+    * The deletion vectors the AddFiles carry apply — every REWRITE
+    * source passes the live entries, or a rewrite would resurrect
+    * soft-deleted rows. Historical replays (CDF) pass vector-free
+    * entries: they want the file's rows as written.
     *
     * With `keepFileKey` the output carries one extra `__src_file`
     * column — the row's source-file key ([[DlvDv.keyOf]] form) — for
-    * callers that shuffle rewrites by source file (distributed REORG)
-    * or stamp rows by it (the change feed); it resolves per scan leg,
+    * callers that shuffle rewrites by source file (OPTIMIZE, REORG) or
+    * stamp rows by it (the change feed); it resolves inside the scan,
     * where `input_file_name()` would refuse a multi-source (DV
     * anti-join) plan. */
   def readFiles(
-      spark: SparkSession, l: DlvLog, relPaths: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
-      dvFiles: Seq[AddFile] = Nil,
-      toLogical: Map[String, String] = Map.empty,
-      partitionCols: Seq[String] = Nil,
+      spark: SparkSession, l: DlvLog, meta: Metadata, files: Seq[AddFile],
       keepFileKey: Boolean = false): DataFrame = {
     // row identity materializes INSIDE the scan when vectors apply —
-    // `_metadata` only resolves directly over a file relation, and
-    // the external (shallow-clone) leg may union/join above it
-    val sidecars = DlvDv.sidecarsOf(dvFiles)
-    val raw0 = scanFiles(spark, l, relPaths, schema,
-      withRowId = sidecars.nonEmpty || keepFileKey,
-      toLogical = toLogical,
-      partitionCols = partitionCols, knownFiles = dvFiles)
+    // `_metadata` only resolves directly over a file relation
+    val sidecars = DlvDv.sidecarsOf(files)
+    val raw0 = scanFiles(spark, l, meta, files,
+      withRowId = sidecars.nonEmpty || keepFileKey)
     val raw =
       if (sidecars.isEmpty) raw0
       else DlvDv.antiJoinDead(spark, l, raw0, sidecars,
-        dvFiles.flatMap(_.dv).map(_.cardinality).sum,
-        () => Some(DlvDv.fileDirMap(l, dvFiles)))
-    val out = schema.map(f => col(f.name).cast(f.dataType)) ++
-      (if (keepFileKey) Seq(col("__dv_fp").as("__src_file")) else Nil)
-    nullFill(raw, schema).select(out: _*)
+        files.flatMap(_.dv).map(_.cardinality).sum,
+        () => Some(DlvDv.fileDirMap(l, files)))
+    raw.select(meta.schema.fieldNames.map(col).toSeq ++
+      (if (keepFileKey) Seq(col("__dv_fp").as("__src_file")) else Nil): _*)
   }
 
   /** `df` plus every `schema` field it lacks, as a typed null: how
@@ -1283,192 +1272,56 @@ object DlvDml {
         (if (v == "__HIVE_DEFAULT_PARTITION__") null else v)
     }.toMap
 
-  /** One logical scan of specific table files with partition columns
-    * recovered and (when `withRowId`) the `__dv_fp`/`__dv_ri`
-    * row-identity columns materialized. Files under the root take the
-    * stock `basePath` hive recovery. EXTERNAL (shallow-clone) paths
-    * cannot — Spark refuses files outside `basePath` — so they read
-    * bare (leaf-file reads infer no partitions) and recover partition
-    * columns from their OWN hive path segments, parsed driver-side
-    * from the raw path (no per-file I/O) and attached through a
-    * broadcast join on the same vector key the DV machinery derives
-    * from `_metadata.file_path` — byte-exact by construction, no
-    * filename-collision caveat. Identity columns are computed on each
-    * leg's raw file relation BEFORE any union/join, because
-    * `_metadata` does not resolve above one. */
+  /** One logical scan of the given table files through a
+    * [[KnownFilesIndex]], with (when `withRowId`) the
+    * `__dv_fp`/`__dv_ri` row-identity columns materialized on the file
+    * relation itself, because `_metadata` does not resolve above one.
+    * Table-local and external (shallow-clone) files plan alike: sizes
+    * come from the AddFiles and partition values from
+    * `AddFile.partitionValues`, so planning lists, HEADs and reads no
+    * footer. The read schema is the table's on-disk lexicon: data
+    * columns under their physical (birth) names ([[DlvColMap]]),
+    * partition columns name-stable (RENAME on them is refused),
+    * everything nullable (old files may predate a widened schema);
+    * the output is renamed back to the logical names. */
   private[dlv] def scanFiles(
-      spark: SparkSession, l: DlvLog, paths: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
-      withRowId: Boolean,
-      toLogical: Map[String, String] = Map.empty,
-      partitionCols: Seq[String] = Nil,
-      knownFiles: Seq[AddFile] = Nil): DataFrame = {
-    val (ext, local) = paths.partition(DlvLog.isAbsolutePath)
-    def idCols(df: DataFrame): DataFrame = df
-      .withColumn("__dv_fp",
-        DlvDv.relFileExpr(l, col("_metadata.file_path")))
-      .withColumn("__dv_ri", col("_metadata.row_index"))
-    // KNOWN-FILES fast path (r19): every rewrite caller already holds
-    // the AddFiles it is about to read (`dvFiles` = doomed / touched /
-    // rewrite sets), so the scan can plan through a file-list-backed
-    // FileIndex with ZERO listing I/O — the same no-listing property
-    // the table's own read path has. Without it, `spark.read.parquet`
-    // over ≥32 leaf files launches a distributed "listing leaf files"
-    // job per call (r19 profile: three ~165 ms listing jobs inside one
-    // dlv_cdf run; at 100 TB each is an object-store LIST storm over
-    // files whose size/mtime the log already knows). Conditions:
-    // every local path is covered by a known AddFile, and partition
-    // columns are threaded (or the table is unpartitioned) — anything
-    // else falls back to the explicit-schema read below.
-    val knownByPath: Map[String, AddFile] =
-      knownFiles.iterator.map(f => f.path -> f).toMap
-    // the on-disk physical lexicon, shared by both local-leg routes:
-    // data columns mapped back through the column-mapping renames
-    // (birth names — immutable), partition columns name-stable
-    // (RENAME on them is refused), everything nullable (old files may
-    // predate a widened schema)
-    lazy val physicalFields = schema.fields.map { f =>
-      val phys = toLogical.collectFirst {
-        case (p, lg) if lg.equalsIgnoreCase(f.name) => p
-      }.getOrElse(f.name)
-      org.apache.spark.sql.types.StructField(
-        phys, f.dataType, nullable = true)
-    }
-    val localLeg =
-      if (local.isEmpty) None
-      else if (local.forall(knownByPath.contains) &&
-          (partitionCols.nonEmpty ||
-            knownFiles.forall(_.partitionValues.isEmpty))) {
-        val raw = knownFilesDF(spark, l, local.map(knownByPath),
-          physicalFields, partitionCols)
-        Some(if (withRowId) idCols(raw) else raw)
-      } else {
-        // EXPLICIT read schema: without one, every scanFiles call runs
-        // a footer schema-inference Spark job first (r19 profile:
-        // dlv_history alone paid 31 such 50-90 ms jobs per run — pure
-        // metadata overhead on multi-commit scenarios, and at 100 TB
-        // an extra footer pass over every rewritten file). The on-disk
-        // physical schema is derivable without I/O: data columns are
-        // the caller's logical fields mapped back through `toLogical`
-        // (physical birth names — immutable), partition columns keep
-        // their names (RENAME on them is refused) and are recovered
-        // from the hive dirs under basePath exactly as inference did,
-        // now cast to the declared type directly. Files predating a
-        // widened schema read the missing columns as typed nulls —
-        // same rows the old inference + null-fill produced. The
-        // external (shallow-clone) leg below keeps inference: its
-        // files carry the SOURCE table's physical lexicon.
-        val raw = spark.read
-          .schema(org.apache.spark.sql.types.StructType(physicalFields))
-          .option("basePath", l.tableQualified)
-          .parquet(local.map(l.resolveQualified): _*)
-        Some(if (withRowId) idCols(raw) else raw)
-      }
-    val extLeg =
-      if (ext.isEmpty) None
-      else {
-        // key → string partition values. ONLY the table's declared
-        // partition columns may be recovered from path segments — an
-        // ancestor directory of the SOURCE table's absolute path can
-        // legitimately contain 'k=v' segments (…/v=2/warehouse/…)
-        // whose key collides with a DATA column, and attaching those
-        // would silently overwrite real data during clone DML/CDF
-        // reads. When the caller didn't thread partition columns
-        // through, fall back to columns ABSENT from the files' own
-        // data (hive layout never stores partition values in the
-        // parquet): a data column present in the file is then still
-        // unclobberable.
-        val raw0 = spark.read.parquet(ext.map(l.resolveQualified): _*)
-        val bySchema = schema.fields.map(f => f.name.toLowerCase -> f).toMap
-        val allowed: String => Boolean =
-          if (partitionCols.nonEmpty) {
-            val ok = partitionCols.map(_.toLowerCase).toSet
-            k => ok.contains(k.toLowerCase)
-          } else {
-            val inData = raw0.schema.fieldNames.map(_.toLowerCase).toSet
-            k => !inData.contains(k.toLowerCase)
-          }
-        val pvals: Seq[(String, Map[String, String])] = ext.map { p =>
-          DlvDv.keyOf(l, p) -> hivePartValues(p).flatMap { case (k, v) =>
-            if (allowed(k)) bySchema.get(k.toLowerCase).map(f => f.name -> v)
-            else None
-          }
-        }
-        val partCols: Seq[org.apache.spark.sql.types.StructField] =
-          pvals.flatMap(_._2.keys).distinct.map(n => bySchema(n.toLowerCase))
-        val keyed = idCols(raw0)
-        val attached =
-          if (partCols.isEmpty) keyed
-          else {
-            val mapSchema = org.apache.spark.sql.types.StructType(
-              org.apache.spark.sql.types.StructField("__dv_fp",
-                org.apache.spark.sql.types.StringType) +:
-                partCols.map(f => org.apache.spark.sql.types.StructField(
-                  f.name, org.apache.spark.sql.types.StringType)))
-            val rows = pvals.map { case (k, vs) =>
-              org.apache.spark.sql.Row.fromSeq(
-                k +: partCols.map(f => vs.getOrElse(f.name, null)))
-            }
-            val m = spark.createDataFrame(
-              spark.sparkContext.parallelize(rows, 1), mapSchema)
-            val joined = keyed.join(broadcast(m), Seq("__dv_fp"))
-            partCols.foldLeft(joined)((d, f) =>
-              d.withColumn(f.name, col(f.name).cast(f.dataType)))
-          }
-        Some(if (withRowId) attached else attached.drop("__dv_fp", "__dv_ri"))
-      }
-    val scanned = (localLeg.toSeq ++ extLeg.toSeq)
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-    // mapped tables: physical on disk -> logical in the plan
-    // ([[DlvColMap]]); a file predating the column is a no-op rename
-    // and the caller's null-fill covers it. SIMULTANEOUS positional
-    // rename, same as DlvColMap.applyRenames — a sequential fold
-    // breaks on cross-renames/swaps (x↔y would produce a duplicate-
-    // column intermediate here too).
-    if (toLogical.isEmpty) scanned
-    else {
-      val ci = toLogical.map { case (k, v) => k.toLowerCase -> v }
-      scanned.toDF(scanned.columns.map(c =>
-        ci.getOrElse(c.toLowerCase, c)): _*)
-    }
-  }
-
-  /** Scan over an explicit AddFile list via [[KnownFilesIndex]] —
-    * zero listing/footer I/O at plan time. `physicalFields` is the
-    * full on-disk lexicon (data + partition columns); partition
-    * fields are split off by name and resolve from the AddFiles'
-    * partitionValues. Output columns: physical data fields then
-    * partition fields. */
-  private[dlv] def knownFilesDF(
-      spark: SparkSession, l: DlvLog, files: Seq[AddFile],
-      physicalFields: Seq[org.apache.spark.sql.types.StructField],
-      partitionCols: Seq[String]): DataFrame = {
-    val partNamesLower = partitionCols.map(_.toLowerCase).toSet
-    val (partFields, dataFields) = physicalFields.partition(f =>
-      partNamesLower.contains(f.name.toLowerCase))
-    val partitionSchema =
-      org.apache.spark.sql.types.StructType(partFields)
+      spark: SparkSession, l: DlvLog, meta: Metadata, files: Seq[AddFile],
+      withRowId: Boolean): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val partNames = meta.partitionColumns.map(_.toLowerCase).toSet
+    val (partFields, dataFields) = meta.schema.fields.toSeq
+      .map(f => StructField(DlvColMap.physicalOf(meta, f.name),
+        f.dataType, nullable = true))
+      .partition(f => partNames.contains(f.name.toLowerCase))
+    val partitionSchema = StructType(partFields)
     val rel = org.apache.spark.sql.execution.datasources
       .HadoopFsRelation(
         location = new KnownFilesIndex(l, files, partitionSchema),
         partitionSchema = partitionSchema,
-        dataSchema = org.apache.spark.sql.types.StructType(dataFields),
+        dataSchema = StructType(dataFields),
         bucketSpec = None,
         fileFormat = new org.apache.spark.sql.execution.datasources
           .parquet.ParquetFileFormat(),
         options = Map.empty)(
         spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-    org.apache.spark.sql.graft.GraftInternal.ofRows(spark,
+    val raw = org.apache.spark.sql.graft.GraftInternal.ofRows(spark,
       org.apache.spark.sql.execution.datasources.LogicalRelation(rel))
+    val scanned =
+      if (!withRowId) raw
+      else raw
+        .withColumn("__dv_fp",
+          DlvDv.relFileExpr(l, col("_metadata.file_path")))
+        .withColumn("__dv_ri", col("_metadata.row_index"))
+    DlvColMap.toLogical(scanned, meta)
   }
 }
 
 /** [[org.apache.spark.sql.execution.datasources.FileIndex]] over an
-  * EXPLICIT AddFile list — the scan-side of [[DlvDml.scanFiles]]'s
-  * known-files fast path. Sizes and mtimes come from the log entries,
-  * partition values from `AddFile.partitionValues` (the same values
-  * hive-path recovery would parse — they were derived from those very
-  * path segments at stage time), so planning performs no filesystem
+  * EXPLICIT AddFile list — the one route of [[DlvDml.scanFiles]], for
+  * table-local and external (shallow-clone) files alike. Sizes and
+  * mtimes come from the log entries, partition values from
+  * `AddFile.partitionValues` (derived from the file's own hive path
+  * segments when it was staged), so planning performs no filesystem
   * I/O at all. Partition filters still prune
   * ([[DlvFileIndex.pruneAndGroup]]); stats skipping is off — rewrite
   * sources must read every surviving row of the files they were

@@ -253,18 +253,11 @@ object DlvDv {
       touchedAdds: Seq[AddFile], mark: DataFrame => DataFrame,
       now: Long)(
       body: (DataFrame, Map[String, Long]) => Seq[Action]): Seq[Action] = {
-    // clone-aware scan (external touched files recover partition
-    // columns from their own hive segments), identity columns
-    // materialized inside it
-    val withId0 = DlvDml.scanFiles(spark, l, touchedAdds.map(_.path),
-      meta.schema, withRowId = true,
-      toLogical = DlvColMap.toLogicalRenames(meta),
-      partitionCols = meta.partitionColumns,
-      knownFiles = touchedAdds)
-    // schema evolution: files written before ADD COLUMNS lack the new
-    // columns — fill typed nulls (the same alignment readFiles does)
-    // so `cond` and the downstream projections resolve against them
-    val withId = DlvDml.nullFill(withId0, meta.schema)
+    // identity columns materialized inside the scan; columns a file
+    // predates (ADD COLUMNS) read as typed nulls, so `cond` and the
+    // downstream projections resolve against them
+    val withId = DlvDml.scanFiles(spark, l, meta, touchedAdds,
+      withRowId = true)
     val live = {
       val sidecars = sidecarsOf(touchedAdds)
       if (sidecars.isEmpty) withId

@@ -728,9 +728,7 @@ object DlvLog {
     * distributed index anyway — the cache exists for the many small
     * metadata re-reads (DML planning, SQL statements, history), not
     * for pinning the biggest states. */
-  private[dlv] def SNAPSHOT_CACHE_FILE_LIMIT: Int =
-    sys.props.get("graft.dlv.snapshotCacheFileLimit")
-      .map(_.toInt).getOrElse(20000)
+  private[dlv] val SNAPSHOT_CACHE_FILE_LIMIT = 20000
 
   /** Parsed `_last_checkpoint` contents — see
     * [[DlvLog.lastCheckpointHint]]. */

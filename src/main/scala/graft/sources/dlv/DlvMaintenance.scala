@@ -496,9 +496,7 @@ object DlvMaintenance {
           }
         }
       }.toMap)
-    val df = DlvDml.readFiles(spark, l, files.map(_.path), meta.schema,
-      files, DlvColMap.toLogicalRenames(meta), meta.partitionColumns,
-      keepFileKey = true)
+    val df = DlvDml.readFiles(spark, l, meta, files, keepFileKey = true)
     val tagged = df.withColumn("__bin",
       udf((key: String) => binOf.value(key)).apply(col("__src_file")))
     val arranged =

@@ -188,14 +188,10 @@ class DlvStreamingSource(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             tableSchema)
         else
-          // the AddFiles ride along so the scan takes the known-files
-          // route (no listing job per micro-batch); their dv is empty
-          // by the filter above, so no vector filtering engages
-          DlvDml.readFiles(spark, log, addFiles.map(_.path), tableSchema,
-            dvFiles = addFiles,
-            toLogical = DlvColMap.toLogicalRenames(tableMeta),
-            partitionCols = tableMeta.partitionColumns)
-            .select(tableSchema.fieldNames.map(col).toSeq: _*)
+          // the scan plans from the AddFiles (no listing job per
+          // micro-batch); their dv is empty by the filter above, so no
+          // vector filtering engages
+          DlvDml.readFiles(spark, log, tableMeta, addFiles)
       }
     GraftInternal.asStreaming(out)
   }

@@ -230,17 +230,12 @@ object DlvTable {
     val cdc: Option[CommitInfo] =
       if (!dvCase) None
       else {
-        val schema = st.metadata.schema
         val parts = Seq(
           if (old.isEmpty) None
-          else Some(DlvDml.readFiles(spark, l, old.map(_.path), schema,
-            old, DlvColMap.toLogicalRenames(st.metadata),
-            st.metadata.partitionColumns)
+          else Some(DlvDml.readFiles(spark, l, st.metadata, old)
             .withColumn("_change_type", lit("delete"))),
           if (adds.isEmpty) None
-          else Some(DlvDml.readFiles(spark, l, adds.map(_.path), schema,
-            toLogical = DlvColMap.toLogicalRenames(st.metadata),
-            partitionCols = st.metadata.partitionColumns)
+          else Some(DlvDml.readFiles(spark, l, st.metadata, adds)
             .withColumn("_change_type", lit("insert")))).flatten
         parts.reduceOption(_ unionByName _)
           .flatMap(DlvDml.writeCdc(spark, l, st.metadata, _))

@@ -8,8 +8,10 @@ import org.apache.spark.sql.functions._
   * owned table, and no operation on the clone can ever touch source
   * bytes. Deletion vectors live at clone time are carried as
   * clone-OWNED sidecars, so the source's later DV lifecycle (REORG,
-  * VACUUM) cannot break the clone. */
-class DlvCloneSpec extends SparkSpec with DlvTestProps {
+  * VACUUM) cannot break the clone. Clones also compose with identity
+  * watermarks, RESTORE, column mapping, the change feed and
+  * generated-column pruning. */
+class DlvCloneSpec extends SparkSpec with DlvTestProps with JobProbe {
 
   private def freshDir(name: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(s"clone-$name-")
@@ -117,6 +119,30 @@ class DlvCloneSpec extends SparkSpec with DlvTestProps {
     }
     assert(content(dst) == expected)
     assert(content(src) == rows)
+  }
+
+  test("DELETE on a 40-file clone rewrites every external file from " +
+    "its AddFile: source rows minus the deleted ones, no listing job") {
+    import spark.implicits._
+    val src = freshDir("wide-src")
+    DlvTable.create(spark, src, "id BIGINT, v DOUBLE", Nil)
+    DlvTable.append(spark, src, spark.range(0, 400, 1, 40)
+      .select(col("id"), (col("id") * 0.5).as("v")))
+    assert(DlvTable.log(src).snapshot().files.size == 40)
+    val dst = freshDir("wide-dst")
+    DlvClone.shallowClone(spark, src, dst)
+    // each file holds ten consecutive ids, so the predicate touches
+    // every external file and the rewrite reads all 40 of them
+    val listings = listingJobs {
+      DlvDml.delete(spark, dst, col("id") % 10 === 0)
+    }
+    assert(listings.isEmpty, s"file-listing jobs ran: $listings")
+    val files = DlvTable.log(dst).snapshot().files
+    assert(files.nonEmpty && files.forall(f => !DlvLog.isAbsolutePath(f.path)),
+      "every external file must have been rewritten")
+    val got = DlvTable.toDF(spark, dst).as[(Long, Double)].collect().toSet
+    assert(got == (0L until 400L).filter(_ % 10 != 0)
+      .map(i => (i, i * 0.5)).toSet)
   }
 
   test("clone's VACUUM cannot reclaim source bytes (external files " +
@@ -392,5 +418,99 @@ class DlvCloneSpec extends SparkSpec with DlvTestProps {
     val snap = DlvTable.log(dst).snapshot()
     assert(snap.files.forall(f => !DlvLog.isAbsolutePath(f.path)))
     assert(content(dst) == rows)
+  }
+
+  test("clone of an identity table carries the watermark: appends to " +
+    "the clone allocate beyond the source's issued values, and the " +
+    "source's own sequence is untouched") {
+    import spark.implicits._
+    val src = freshDir("id-src")
+    DlvTable.create(spark, src,
+      "row_id BIGINT GENERATED ALWAYS AS IDENTITY, v DOUBLE", Nil)
+    DlvTable.append(spark, src, (0 until 10).map(_.toDouble).toDF("v"))
+    val srcIds = DlvTable.toDF(spark, src).select("row_id")
+      .collect().map(_.getLong(0)).toSet
+    val dst = freshDir("id-dst")
+    DlvClone.shallowClone(spark, src, dst)
+    DlvTable.append(spark, dst, Seq(99.0, 98.0).toDF("v"))
+    val dstIds = DlvTable.toDF(spark, dst).select("row_id")
+      .collect().map(_.getLong(0))
+    assert(dstIds.length == 12 && dstIds.distinct.length == 12)
+    assert(dstIds.filterNot(srcIds).forall(_ > srcIds.max),
+      "clone allocations must start beyond the carried watermark")
+    // source sequence independent of the clone's
+    DlvTable.append(spark, src, Seq(1.0).toDF("v"))
+    assert(DlvTable.toDF(spark, src).count() == 11)
+    assert(DlvTable.toDF(spark, src).select("row_id").collect()
+      .map(_.getLong(0)).distinct.length == 11)
+  }
+
+  test("RESTORE on a clone reinstates dropped EXTERNAL references " +
+    "(absolute paths survive the (path, dv) diff and the existence " +
+    "guard)") {
+    import spark.implicits._
+    val src = freshDir("rst-src")
+    DlvTable.create(spark, src, "id BIGINT, part INT", Seq("part"))
+    val rows = (0 until 30).map(i => (i.toLong, i % 3))
+    DlvTable.append(spark, src,
+      rows.toDF("id", "part").repartition(col("part")))
+    val dst = freshDir("rst-dst")
+    DlvClone.shallowClone(spark, src, dst) // clone v0
+    DlvDml.delete(spark, dst, col("id") % 2 === 0) // clone v1
+    assert(DlvTable.toDF(spark, dst).count() == 15)
+    DlvTable.restore(spark, dst, 0)
+    val got = DlvTable.toDF(spark, dst).collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSet
+    assert(got == rows.toSet, "restore must reinstate the clone state")
+    assert(DlvTable.log(dst).snapshot().files
+      .forall(f => DlvLog.isAbsolutePath(f.path)))
+  }
+
+  test("CDF over a renamed clone: blobs and replays of external " +
+    "files come back in the CURRENT logical lexicon") {
+    import spark.implicits._
+    val src = freshDir("cdf-src")
+    DlvTable.create(spark, src, "id BIGINT, v DOUBLE", Nil,
+      Map(DlvColMap.MODE_PROP -> "name",
+        DlvDml.CDF_PROP -> "true"))
+    DlvTable.append(spark, src,
+      (0 until 10).map(i => (i.toLong, i * 1.0)).toDF("id", "v"))
+    DlvColMap.rename(spark, src, "v", "price")
+    val dst = freshDir("cdf-dst")
+    DlvClone.shallowClone(spark, src, dst)
+    DlvDml.delete(spark, dst, col("price") < 3.0)
+    val ch = DlvChangeFeed.changes(spark, dst, 0L)
+    assert(ch.columns.contains("price") && !ch.columns.contains("v"))
+    val inserts = ch.filter(col("_change_type") === "insert").count()
+    val deletes = ch.filter(col("_change_type") === "delete")
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert(inserts == 10, "clone commit replays external files as inserts")
+    assert(deletes == Set(0L, 1L, 2L))
+  }
+
+  test("generated-column pruning engages on a CLONE's external files " +
+    "and after OPTIMIZE mixes in local ones") {
+    import spark.implicits._
+    val src = freshDir("gp-src")
+    DlvTable.create(spark, src,
+      "id BIGINT, d DATE, month STRING GENERATED ALWAYS AS " +
+        "(date_format(d, 'yyyy-MM'))",
+      Seq("month"))
+    val rows = (0 until 90).map { i =>
+      (i.toLong, java.sql.Date.valueOf(
+        java.time.LocalDate.of(2024, 1, 1).plusDays(i)))
+    }
+    DlvTable.append(spark, src, rows.toDF("id", "d")
+      .repartition(col("d")))
+    val dst = freshDir("gp-dst")
+    DlvClone.shallowClone(spark, src, dst)
+    val total = DlvTable.log(dst).snapshot().files.size
+    val got = DlvTable.toDF(spark, dst)
+      .filter(col("d") >= lit(java.sql.Date.valueOf("2024-03-01")))
+      .collect()
+    val (_, afterPart, _) = DlvFileIndex.lastSkippingStats.get()
+    assert(afterPart < total,
+      "raw-date filter must prune the clone's generated partitions")
+    assert(got.length == rows.count(_._2.toLocalDate.getMonthValue == 3))
   }
 }

@@ -3,36 +3,12 @@ package graft.sources.dlv
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
-class DlvDmlSpec extends SparkSpec with DlvTestProps {
+class DlvDmlSpec extends SparkSpec with DlvTestProps with JobProbe {
 
   private def freshDir(name: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"dlv-$name-")
     d.toFile.deleteOnExit()
     d.resolve("t").toString
-  }
-
-  /** Descriptions of the file-listing jobs `body` launched — the job
-    * Spark's InMemoryFileIndex runs to discover leaf files. */
-  private def listingJobs(body: => Unit): Seq[String] =
-    jobDescriptions(body).filter(_.startsWith("Listing leaf files"))
-
-  /** Descriptions of the jobs `body` launched. */
-  private def jobDescriptions(body: => Unit): Seq[String] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(seen.add)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    seen.asScala.toSeq
   }
 
   private def orders = Tables.orders(spark, sf)
@@ -702,28 +678,55 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps {
   test("a remove written before RemoveFile.size existed still replays " +
     "its deletes, on both routes") {
     import spark.implicits._
+    // commits a DELETE of `doomed` in the format before sizes were
+    // recorded: no `size` on any remove
+    def sizelessDelete(l: DlvLog, doomed: Seq[AddFile]): Unit = {
+      val removes = doomed.map(_.remove(1L, dataChange = true)
+        .copy(size = None))
+      assert(l.commit(2, removes :+ CommitInfo(2, 2L, "DELETE", Map.empty,
+        isBlindAppend = false)))
+      assert(l.io.readLines(l.io.child(l.logDir, CommitStore.fileName(2)))
+        .filter(_.contains("\"remove\"")).forall(!_.contains("\"size\"")))
+    }
+    // the feed's delete rows on the route `threshold` picks; the read
+    // may run no file-listing job
+    def deletes(path: String, threshold: String,
+        cols: String*): Set[Seq[Any]] =
+      withProps("graft.dlv.cdfDistributedRangeThreshold" -> threshold) {
+        var rows = Set.empty[Seq[Any]]
+        val listings = listingJobs {
+          rows = DlvChangeFeed.changes(spark, path, 0)
+            .filter(col("_change_type") === "delete")
+            .select(cols.map(col): _*).collect().map(_.toSeq).toSet
+        }
+        assert(listings.isEmpty,
+          s"threshold $threshold: file-listing jobs ran: $listings")
+        rows
+      }
+
     val path = freshDir("cdflegacy")
     DlvTable.create(spark, path, "id BIGINT, p INT", Seq("p"))
     DlvTable.append(spark, path,
       Seq.tabulate(6)(i => (i.toLong, i % 2)).toDF("id", "p")) // v1
     val l = DlvTable.log(path)
-    val doomed = l.snapshot().files.filter(_.partitionValues("p") == "1")
-    // the format before sizes were recorded: no `size` on the remove
-    val removes = doomed.map(_.remove(1L, dataChange = true)
-      .copy(size = None))
-    assert(l.commit(2, removes :+ CommitInfo(2, 2L, "DELETE", Map.empty,
-      isBlindAppend = false)))
-    assert(l.io.readLines(l.io.child(l.logDir, CommitStore.fileName(2)))
-      .filter(_.contains("\"remove\"")).forall(!_.contains("\"size\"")))
+    sizelessDelete(l,
+      l.snapshot().files.filter(_.partitionValues("p") == "1"))
+    // 40 size-less removes: past the 32 paths at which a path-based
+    // parquet read runs a listing job
+    val wide = freshDir("cdflegacy40")
+    DlvTable.create(spark, wide, "id BIGINT", Nil)
+    DlvTable.append(spark, wide,
+      (0L until 400L).toDF("id").repartition(40)) // v1
+    val wl = DlvTable.log(wide)
+    assert(wl.snapshot().files.size == 40)
+    sizelessDelete(wl, wl.snapshot().files)
     for (threshold <- Seq("1000", "1")) {
-      withProps("graft.dlv.cdfDistributedRangeThreshold" -> threshold) {
-        val deletes = DlvChangeFeed.changes(spark, path, 0)
-          .filter(col("_change_type") === "delete")
-          .select("id", "p", "_commit_version").as[(Long, Int, Long)]
-          .collect().toSet
-        assert(deletes == Set((1L, 1, 2L), (3L, 1, 2L), (5L, 1, 2L)),
-          s"threshold $threshold: $deletes")
-      }
+      val got = deletes(path, threshold, "id", "p", "_commit_version")
+      assert(got == Set(Seq(1L, 1, 2L), Seq(3L, 1, 2L), Seq(5L, 1, 2L)),
+        s"threshold $threshold: $got")
+      val wideGot = deletes(wide, threshold, "id", "_commit_version")
+      assert(wideGot == (0L until 400L).map(i => Seq(i, 2L)).toSet,
+        s"threshold $threshold: ${wideGot.size} delete rows")
     }
   }
 
@@ -847,18 +850,20 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps {
       val actions = l.commitActionsOf(v)
       val info = actions.collectFirst { case c: CommitInfo => c }
       val ts = info.map(_.timestamp).getOrElse(l.commitTimestamp(v))
+      // columns a file predates (ADD COLUMNS) as typed nulls
+      def filled(raw: org.apache.spark.sql.DataFrame) = {
+        val have = raw.columns.map(_.toLowerCase).toSet
+        meta.schema.fields
+          .filterNot(f => have.contains(f.name.toLowerCase))
+          .foldLeft(raw)((d, f) =>
+            d.withColumn(f.name, lit(null).cast(f.dataType)))
+      }
       def stamp(df: org.apache.spark.sql.DataFrame) = df
         .withColumn("_commit_version", lit(v))
         .withColumn("_commit_timestamp", (lit(ts) / 1000).cast("timestamp"))
       info.flatMap(_.cdcPath) match {
         case Some(rel) =>
-          val raw = spark.read.parquet(l.resolve(rel))
-          val have = raw.columns.map(_.toLowerCase).toSet
-          val filled = meta.schema.fields
-            .filterNot(f => have.contains(f.name.toLowerCase))
-            .foldLeft(raw)((d, f) =>
-              d.withColumn(f.name, lit(null).cast(f.dataType)))
-          Seq(stamp(filled.select(
+          Seq(stamp(filled(spark.read.parquet(l.resolve(rel))).select(
             (meta.schema.fieldNames :+ "_change_type").map(col): _*)))
         case None =>
           val adds = actions.collect {
@@ -867,12 +872,13 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps {
           val removes = actions.collect {
             case r: RemoveFile if r.dataChange => r.path
           }
-          (if (adds.isEmpty) Nil
-           else Seq(stamp(DlvDml.readFiles(spark, l, adds, meta.schema)
-             .withColumn("_change_type", lit("insert"))))) ++
-            (if (removes.isEmpty) Nil
-             else Seq(stamp(DlvDml.readFiles(spark, l, removes, meta.schema)
-               .withColumn("_change_type", lit("delete")))))
+          def replay(rels: Seq[String], changeType: String) =
+            if (rels.isEmpty) Nil
+            else Seq(stamp(filled(
+              spark.read.parquet(rels.map(l.resolve): _*))
+              .select(meta.schema.fieldNames.map(col).toSeq: _*)
+              .withColumn("_change_type", lit(changeType))))
+          replay(adds, "insert") ++ replay(removes, "delete")
       }
     }.reduce(_ unionByName _)
 

@@ -10,10 +10,14 @@ import org.apache.spark.sql.streaming.StreamingQueryException
   * mode. */
 class DlvStreamSourceSpec extends SparkSpec {
 
-  private def mkTable(name: String, cdf: Boolean = false): (String, DataFrame) = {
+  private def freshDir(name: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(s"dlvsrc-$name-")
     dir.toFile.deleteOnExit()
-    val path = dir.resolve("t").toString
+    dir.resolve("t").toString
+  }
+
+  private def mkTable(name: String, cdf: Boolean = false): (String, DataFrame) = {
+    val path = freshDir(name)
     val df = Tables.orders(spark, sf)
     DlvTable.create(spark, path, df.schema.toDDL, Nil,
       if (cdf) Map(DlvDml.CDF_PROP -> "true") else Map.empty)
@@ -353,5 +357,29 @@ class DlvStreamSourceSpec extends SparkSpec {
     new DlvStreamSink(dst, appId = "app-2")
       .addBatch(0, Seq((4L, "d")).toDF("id", "s"))
     assert(DlvTable.toDF(spark, dst).count() == 4)
+  }
+
+  test("streaming source over a RENAMED table emits the logical " +
+    "schema with correct values (physical files translate)") {
+    import spark.implicits._
+    val path = freshDir("stream-rn")
+    DlvTable.create(spark, path,
+      "id BIGINT, v DOUBLE", Nil, Map(DlvColMap.MODE_PROP -> "name"))
+    DlvTable.append(spark, path,
+      (0 until 5).map(i => (i.toLong, i * 1.0)).toDF("id", "v"))
+    DlvColMap.rename(spark, path, "v", "price")
+    DlvTable.append(spark, path,
+      (5 until 8).map(i => (i.toLong, i * 1.0)).toDF("id", "price"))
+    val out = spark.readStream.format("dlv").option("path", path)
+      .load()
+    assert(out.columns.toSeq == Seq("id", "price"))
+    val q = out.writeStream.format("memory")
+      .queryName("dlv_stream_rn").trigger(
+        org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination(60000)
+    val got = spark.table("dlv_stream_rn").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSet
+    assert(got == (0 until 8).map(i => (i.toLong, i * 1.0)).toSet,
+      s"pre- and post-rename files must both translate, got $got")
   }
 }
