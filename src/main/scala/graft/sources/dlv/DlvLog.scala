@@ -76,22 +76,27 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
     io.readLines(io.child(logDir, CommitStore.fileName(v)))
       .filter(_.nonEmpty).flatMap(Actions.fromJson)
 
-  /** Actions of every commit in `from..to`, in version order. The
-    * reads fan out over a bounded pool: each is one small object, and
-    * a 10⁴-commit range on an object store at ~20 ms/read would
-    * otherwise serialize into minutes of driver wall time. A commit
-    * missing below the newest checkpoint is the log retention horizon
+  /** `f(v, actions)` over every commit `v` in `from..to`, results in
+    * version order. The reads fan out over a bounded pool: each is one
+    * small object, and a 10⁴-commit range on an object store at
+    * ~20 ms/read would otherwise serialize into minutes of driver wall
+    * time. `f` runs as each commit is read, so the caller keeps only
+    * what it returns, never the whole range's actions. A commit missing
+    * below the newest checkpoint is the log retention horizon
     * (DlvMaintenance.cleanupLog) — named, and probed only on failure. */
-  def commitActionsIn(from: Long, to: Long): Seq[Seq[Action]] =
+  def commitsIn[B](from: Long, to: Long)(
+      f: (Long, Seq[Action]) => B): Seq[B] =
     DriverPar.map((from to to).toVector) { v =>
-      try commitActionsOf(v)
-      catch {
-        case e: Exception
-            if !io.exists(io.child(logDir, CommitStore.fileName(v))) =>
-          throw new IllegalStateException(
-            s"version $v of $tablePath predates the log retention " +
-              s"horizon (commit $v was cleaned up)", e)
-      }
+      val actions =
+        try commitActionsOf(v)
+        catch {
+          case e: Exception
+              if !io.exists(io.child(logDir, CommitStore.fileName(v))) =>
+            throw new IllegalStateException(
+              s"version $v of $tablePath predates the log retention " +
+                s"horizon (commit $v was cleaned up)", e)
+        }
+      f(v, actions)
     }
 
   /** Publish `actions` as `version`; true if this writer won. Writes a

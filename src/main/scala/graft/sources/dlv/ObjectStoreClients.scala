@@ -342,6 +342,9 @@ object ObjectStoreClients {
     synchronized {
       if (sys.props.get(AUTO_PROP).exists(_.equalsIgnoreCase("false")))
         return Nil
+      // every Throwable reads as "absent", on purpose: a half-present
+      // SDK (the probe class there, a dependency missing) throws a
+      // LinkageError, and that SDK is as unusable as a missing one
       def available(probe: String): Boolean =
         try { Class.forName(probe, false, loader); true }
         catch { case _: Throwable => false }

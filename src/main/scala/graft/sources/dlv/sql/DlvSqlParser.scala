@@ -238,7 +238,7 @@ object DlvSqlParser {
     try {
       org.apache.spark.sql.SparkSession.getActiveSession
         .exists(s => DlvRegistry.lookup(s, name).isDefined)
-    } catch { case _: Throwable => false }
+    } catch { case scala.util.control.NonFatal(_) => false }
 
   def parse(sqlText: String): Option[LogicalPlan] = sqlText match {
     case Vacuum(path, name, retain, dry) =>

@@ -171,25 +171,14 @@ class DeletionVectorSpec extends SparkSpec with DlvTestProps {
       "the CDC blob must carry exactly the soft-deleted rows")
   }
 
-  test("CDF off: table_changes across a DV commit fails loudly on " +
-    "both the driver and the distributed route") {
+  test("CDF off: table_changes across a DV commit fails loudly") {
     val (path, _) = mk("dv-nocdf")
     DlvDml.delete(spark, path, col("id") === 0L)
     val e = intercept[Exception] {
       DlvChangeFeed.changes(spark, path, 0).collect()
     }
     assert(e.getMessage.contains("deletion-vector"),
-      s"driver route: wrong error ${e.getMessage}")
-    withProps("graft.dlv.cdfDistributedRangeThreshold" -> "1") {
-      val eD = intercept[Exception] {
-        DlvChangeFeed.changes(spark, path, 0).collect()
-      }
-      def chain(t: Throwable): Seq[String] =
-        Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-          .map(x => Option(x.getMessage).getOrElse("")).toSeq
-      assert(chain(eD).exists(_.contains("deletion-vector")),
-        s"distributed route: wrong error ${eD.getMessage}")
-    }
+      s"wrong error ${e.getMessage}")
   }
 
   test("format(\"dlv\") batch read refuses while vectors live, and " +

@@ -513,4 +513,29 @@ class DlvCloneSpec extends SparkSpec with DlvTestProps with JobProbe {
       "raw-date filter must prune the clone's generated partitions")
     assert(got.length == rows.count(_._2.toLocalDate.getMonthValue == 3))
   }
+
+  test("shallow clone of a source whose ancestor path contains a " +
+    "'col=value' segment colliding with a DATA column: DML on the " +
+    "clone never overwrites the data column from the path") {
+    import spark.implicits._
+    // the source table lives under …/v=2/… and carries a DATA column v
+    val root = java.nio.file.Paths.get(freshDir("pathcol"))
+    val srcPath = root.resolve("v=2").resolve("src").toString
+    DlvTable.create(spark, srcPath, "id BIGINT, part INT, v DOUBLE",
+      Seq("part"), Map(DlvDml.CDF_PROP -> "true"))
+    DlvTable.append(spark, srcPath,
+      (0 until 12).map(i => (i.toLong, i % 2, i * 1.5))
+        .toDF("id", "part", "v").repartition(col("part")))
+    val dstPath = root.resolve("dst").toString
+    DlvClone.shallowClone(spark, srcPath, dstPath)
+    // DELETE triggers the external-file scan (readFiles over absolute
+    // source paths) — survivors must keep their real v, not 2.0
+    DlvDml.delete(spark, dstPath, col("id") < 4L)
+    val rows = DlvTable.toDF(spark, dstPath).select("id", "part", "v")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
+      .toSet
+    assert(rows == (4 until 12)
+      .map(i => (i.toLong, i % 2, i * 1.5)).toSet,
+      s"clone DML must not clobber data column v from the path, got $rows")
+  }
 }

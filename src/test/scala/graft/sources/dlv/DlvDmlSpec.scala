@@ -676,7 +676,7 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps with JobProbe {
   }
 
   test("a remove written before RemoveFile.size existed still replays " +
-    "its deletes, on both routes") {
+    "its deletes") {
     import spark.implicits._
     // commits a DELETE of `doomed` in the format before sizes were
     // recorded: no `size` on any remove
@@ -688,21 +688,17 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps with JobProbe {
       assert(l.io.readLines(l.io.child(l.logDir, CommitStore.fileName(2)))
         .filter(_.contains("\"remove\"")).forall(!_.contains("\"size\"")))
     }
-    // the feed's delete rows on the route `threshold` picks; the read
-    // may run no file-listing job
-    def deletes(path: String, threshold: String,
-        cols: String*): Set[Seq[Any]] =
-      withProps("graft.dlv.cdfDistributedRangeThreshold" -> threshold) {
-        var rows = Set.empty[Seq[Any]]
-        val listings = listingJobs {
-          rows = DlvChangeFeed.changes(spark, path, 0)
-            .filter(col("_change_type") === "delete")
-            .select(cols.map(col): _*).collect().map(_.toSeq).toSet
-        }
-        assert(listings.isEmpty,
-          s"threshold $threshold: file-listing jobs ran: $listings")
-        rows
+    // the feed's delete rows; the read may run no file-listing job
+    def deletes(path: String, cols: String*): Set[Seq[Any]] = {
+      var rows = Set.empty[Seq[Any]]
+      val listings = listingJobs {
+        rows = DlvChangeFeed.changes(spark, path, 0)
+          .filter(col("_change_type") === "delete")
+          .select(cols.map(col): _*).collect().map(_.toSeq).toSet
       }
+      assert(listings.isEmpty, s"file-listing jobs ran: $listings")
+      rows
+    }
 
     val path = freshDir("cdflegacy")
     DlvTable.create(spark, path, "id BIGINT, p INT", Seq("p"))
@@ -720,14 +716,12 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps with JobProbe {
     val wl = DlvTable.log(wide)
     assert(wl.snapshot().files.size == 40)
     sizelessDelete(wl, wl.snapshot().files)
-    for (threshold <- Seq("1000", "1")) {
-      val got = deletes(path, threshold, "id", "p", "_commit_version")
-      assert(got == Set(Seq(1L, 1, 2L), Seq(3L, 1, 2L), Seq(5L, 1, 2L)),
-        s"threshold $threshold: $got")
-      val wideGot = deletes(wide, threshold, "id", "_commit_version")
-      assert(wideGot == (0L until 400L).map(i => Seq(i, 2L)).toSet,
-        s"threshold $threshold: ${wideGot.size} delete rows")
-    }
+    val got = deletes(path, "id", "p", "_commit_version")
+    assert(got == Set(Seq(1L, 1, 2L), Seq(3L, 1, 2L), Seq(5L, 1, 2L)),
+      s"$got")
+    val wideGot = deletes(wide, "id", "_commit_version")
+    assert(wideGot == (0L until 400L).map(i => Seq(i, 2L)).toSet,
+      s"${wideGot.size} delete rows")
   }
 
   test("CDF over 10^3 versions: plan stays bounded (one scan per " +
@@ -762,14 +756,9 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps with JobProbe {
             Map.empty, isBlindAppend = v != 0)
       assert(l.commit(v, actions))
     }
-    val oldRange = sys.props.get("graft.dlv.cdfDistributedRangeThreshold")
     // the planner's broadcast threshold decides the stamp join: off,
     // the 10^3-row mapping must join shuffled
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // pin the DRIVER route first; the distributed route is checked
-    // below against it
-    sys.props("graft.dlv.cdfDistributedRangeThreshold") =
-      (nVersions * 2).toString
     try {
       val ch = DlvChangeFeed.changes(spark, path, 0)
       val scanLeaves = ch.queryExecution.optimizedPlan.collectLeaves()
@@ -793,34 +782,25 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps with JobProbe {
       val perV = ch.groupBy("_commit_version").count()
         .filter(col("count") =!= 5L).count()
       assert(perV == 0, "every version must contribute exactly 5 rows")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
-      // distributed route over the same 10^3-version range: commit
-      // classification runs in executors, the plan still holds one
-      // DATA scan relation, and the feed is value-identical
-      sys.props("graft.dlv.cdfDistributedRangeThreshold") = "1"
-      val chD = DlvChangeFeed.changes(spark, path, 0)
-      val dataLeaves = chD.queryExecution.optimizedPlan.collectLeaves()
-        .count {
-          case r: org.apache.spark.sql.execution.datasources.LogicalRelation
-            => !r.relation.schema.fieldNames.sameElements(Array("value"))
-          case _ => false
-        }
-      assert(dataLeaves <= 3,
-        s"$dataLeaves data scan relations in the distributed route")
-      assert(chD.count() == 5L * nVersions)
-      assert(chD.exceptAll(ch).isEmpty && ch.exceptAll(chD).isEmpty,
-        "distributed and driver CDF routes must be row-identical")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      oldRange match {
-        case Some(v) =>
-          sys.props("graft.dlv.cdfDistributedRangeThreshold") = v
-          ()
-        case None =>
-          sys.props.remove("graft.dlv.cdfDistributedRangeThreshold")
-          ()
-      }
+    // the same range at default settings: the commits are read on the
+    // driver by path, so neither planning nor execution lists files,
+    // and the feed holds exactly the shared file's rows once per version
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val listings = listingJobs {
+      rows = DlvChangeFeed.changes(spark, path, 0)
+        .select("id", "v", "_change_type", "_commit_version").collect()
     }
+    assert(listings.isEmpty, s"file-listing jobs ran: $listings")
+    val expected = for {
+      v <- 1L to nVersions.toLong
+      i <- 0 until 5
+    } yield (i.toLong, i * 1.0, "insert", v)
+    val got = rows.toSeq.map(r =>
+      (r.getLong(0), r.getDouble(1), r.getString(2), r.getLong(3)))
+    assert(got.sorted == expected.sorted,
+      s"${got.size} rows, expected ${expected.size}")
   }
 
   test("batched change feed is row-identical to a naive per-version " +
@@ -949,5 +929,25 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps with JobProbe {
     assert(blob == perType(DlvChangeFeed.changes(spark, path, v, Some(v))))
     // nothing but the blob's parquet in its dir
     assert(l.io.walkFiles(l.resolve(rel.get)).forall(_.name.endsWith(".parquet")))
+  }
+
+  test("DELETE keeps rows whose predicate evaluates NULL (SQL " +
+    "semantics) on the rewrite route, matching the DV route") {
+    import spark.implicits._
+    val path = freshDir("delnull")
+    DlvTable.create(spark, path, "k BIGINT, v DOUBLE", Nil,
+      Map(DlvDml.CDF_PROP -> "true"))
+    DlvTable.append(spark, path,
+      Seq((1L, Some(1.0)), (2L, Some(7.0)), (3L, Option.empty[Double]))
+        .toDF("k", "v"))
+    val ver = DlvDml.delete(spark, path, col("v") >= 5.0)
+    val ks = DlvTable.toDF(spark, path).select("k").collect()
+      .map(_.getLong(0)).toSet
+    assert(ks == Set(1L, 3L),
+      s"the NULL-predicate row must survive a DELETE, got $ks")
+    val deleted = DlvChangeFeed.changes(spark, path, ver, Some(ver))
+      .filter(col("_change_type") === "delete")
+      .select("k").collect().map(_.getLong(0)).toSet
+    assert(deleted == Set(2L))
   }
 }

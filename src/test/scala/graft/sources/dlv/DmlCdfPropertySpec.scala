@@ -44,11 +44,7 @@ class DmlCdfPropertySpec extends SparkSpec with DlvTestProps {
   // DISTRIBUTED route (Dataset-backed discovery, broadcast path-set
   // touched-file lookup, interpreted partition selection) — and must
   // be indistinguishable from the driver route under the same model.
-  // The fourth forces EVERY table_changes call through the
-  // distributed-range CDF route (executor-side commit classification,
-  // DlvChangeFeed.distributedMapping) — same model, same assertions,
-  // so driver↔distributed feed equivalence rides every interleaving.
-  // The fifth variant creates the table with DELETION VECTORS (and
+  // The fourth variant creates the table with DELETION VECTORS (and
   // CDF, which vectors require for change reads) on from version 0:
   // every rewrite-shaped DELETE routes through the DV sidecar path
   // instead of the file rewrite, and the SAME model assertions must
@@ -59,8 +55,6 @@ class DmlCdfPropertySpec extends SparkSpec with DlvTestProps {
       (7, "", Nil, Map.empty),
       (42, ", distributed-routed", Seq(DIST -> "1", CKPT -> "1"),
         Map.empty),
-      (42, ", distributed-cdf",
-        Seq("graft.dlv.cdfDistributedRangeThreshold" -> "1"), Map.empty),
       (42, ", deletion-vectors", Nil,
         Map(DlvDv.PROP -> "true", DlvDml.CDF_PROP -> "true"))))
   test(s"seeded mixed DML history (seed=$seed$label" +

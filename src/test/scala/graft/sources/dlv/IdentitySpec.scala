@@ -194,4 +194,41 @@ class IdentitySpec extends SparkSpec with DlvTestProps {
         ids.forall(_ >= 100L))
     } finally spark.sql("DROP TABLE IF EXISTS id_sql_t")
   }
+
+  private def mergeInsertCdcIds(dv: Boolean): Unit = {
+    val path = freshDir(if (dv) "idcdcdv" else "idcdc")
+    val props = Map(DlvDml.CDF_PROP -> "true") ++
+      (if (dv) Map(DlvDv.PROP -> "true") else Map.empty)
+    DlvTable.create(spark, path,
+      "row_id BIGINT GENERATED ALWAYS AS IDENTITY, k BIGINT, v DOUBLE",
+      Nil, props)
+    DlvTable.append(spark, path,
+      (0L until 5L).map(k => (k, k.toDouble)).toDF("k", "v"))
+    val src = (3L until 9L).map(k => (k, k * 10.0)).toDF("k", "v")
+      .alias("src")
+    val ver = DlvDml.merge(spark, path, src,
+      on = col("tgt.k") === col("src.k"),
+      clauses = Seq(
+        DlvDml.MatchedUpdate(None, Map("v" -> col("src.v"))),
+        DlvDml.NotMatchedInsert(None,
+          Map("k" -> col("src.k"), "v" -> col("src.v")))))
+    val feed = DlvChangeFeed.changes(spark, path, ver, Some(ver))
+      .filter(col("_change_type") === "insert")
+      .select("row_id", "k").collect()
+      .map(r => (Option(r.get(0)), r.getLong(1))).toSeq
+    assert(feed.map(_._2).toSet == (5L until 9L).toSet)
+    assert(feed.forall(_._1.nonEmpty),
+      s"CDF insert images must carry allocated identity values, got $feed")
+    // and they are THE values the table wrote, not a reallocation
+    val tbl = DlvTable.toDF(spark, path).filter(col("k") >= 5L)
+      .select("row_id", "k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(feed.map(p => (p._1.get.asInstanceOf[Long], p._2)).toSet == tbl)
+  }
+
+  test("MERGE-insert CDC carries the allocated identity values " +
+    "(rewrite route)") { mergeInsertCdcIds(dv = false) }
+
+  test("MERGE-insert CDC carries the allocated identity values " +
+    "(deletion-vector route)") { mergeInsertCdcIds(dv = true) }
 }

@@ -64,28 +64,12 @@ class LogRetentionSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("retention"),
       s"wrong error: ${e.getMessage}")
-    // ... and so does a pre-horizon change feed, on both routes
+    // ... and so does a pre-horizon change feed
     val e2 = intercept[IllegalStateException] {
       DlvChangeFeed.changes(spark, path, 2, Some(5)).collect()
     }
     assert(e2.getMessage.contains("retention"),
       s"wrong feed error: ${e2.getMessage}")
-    val old = sys.props.get("graft.dlv.cdfDistributedRangeThreshold")
-    sys.props("graft.dlv.cdfDistributedRangeThreshold") = "1"
-    try {
-      val e3 = intercept[IllegalStateException] {
-        DlvChangeFeed.changes(spark, path, 2, Some(5)).collect()
-      }
-      assert(e3.getMessage.contains("retention"),
-        s"wrong distributed feed error: ${e3.getMessage}")
-    } finally {
-      old match {
-        case Some(v) =>
-          sys.props("graft.dlv.cdfDistributedRangeThreshold") = v; ()
-        case None =>
-          sys.props.remove("graft.dlv.cdfDistributedRangeThreshold"); ()
-      }
-    }
   }
 
   test("a superseded checkpoint goes only when the NEXT checkpoint is " +
