@@ -6,7 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
 import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
@@ -65,21 +65,12 @@ private[dlv] final class DirectCommitProtocol(
 
   /** Runs after the task closed its writers. A task that wrote several
     * files (one per partition it touched) reads their footers
-    * concurrently: serial reads of ~6 ms each added up to whole
-    * seconds on a wide partitioned write. */
+    * concurrently. */
   override def commitTask(ctx: TaskAttemptContext): TaskCommitMessage = {
     val conf = ctx.getConfiguration
     new TaskCommitMessage(DriverPar.map(opened.toSeq) { case (rel, full) =>
       val p = new Path(full)
-      val fs = p.getFileSystem(conf)
-      // Hadoop's checksummed local FS writes a `.<name>.crc` beside
-      // every file; live data files carry none (reads would verify it)
-      fs match {
-        case c: ChecksumFileSystem =>
-          c.getRawFileSystem.delete(c.getChecksumFile(p), false)
-        case _ => ()
-      }
-      val st = fs.getFileStatus(p)
+      val st = p.getFileSystem(conf).getFileStatus(p)
       AddFile(
         path = rel,
         partitionValues = DlvDml.hivePartValues(rel),

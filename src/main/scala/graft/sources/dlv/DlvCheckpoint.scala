@@ -186,7 +186,8 @@ object DlvCheckpoint {
     val parts = math.max(1, actions.size / 200000)
     spark.createDataFrame(
         spark.sparkContext.parallelize(actions.map(toRow), parts), schema)
-      .write.mode("overwrite").parquet(dir)
+      .write.options(LocalWriteFs.writerOptions).mode("overwrite")
+      .parquet(dir)
   }
 
   private def sidecarOf(r: Row): Option[SidecarRef] =
@@ -347,7 +348,8 @@ object DlvCheckpoint {
         lit(null).cast(infoT).as("commitInfo"),
         lit(null).cast(protoT).as("protocol"),
         lit(null).cast(sidecarT).as("sidecar"))
-      .write.partitionBy("shard").mode("overwrite").parquet(outDir)
+      .write.options(LocalWriteFs.writerOptions)
+      .partitionBy("shard").mode("overwrite").parquet(outDir)
     accs.map { case (k, (n, b)) => k -> (n.value.toLong, b.value.toLong) }
   }
 
@@ -360,5 +362,6 @@ object DlvCheckpoint {
     spark.createDataFrame(
         spark.sparkContext.parallelize(
           small.map(toRow) ++ refs.map(sidecarRow), 1), schema)
-      .write.mode("overwrite").parquet(dir)
+      .write.options(LocalWriteFs.writerOptions).mode("overwrite")
+      .parquet(dir)
 }

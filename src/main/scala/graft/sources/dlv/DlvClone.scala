@@ -258,7 +258,8 @@ object DlvClone {
       .select(col("__nk").as(FILE_COL), col(ROW_COL))
       .coalesce(DlvDv.sidecarParts(total))
       .sortWithinPartitions(FILE_COL, ROW_COL)
-      .write.parquet(dstLog.resolve(rel))
+      .write.options(LocalWriteFs.writerOptions)
+      .parquet(dstLog.resolve(rel))
     bearing.map(f => f.path ->
       DeletionVector(Seq(rel), f.dv.get.cardinality)).toMap
   }

@@ -434,41 +434,38 @@ object DlvDml {
         isBlindAppend = false)
     }
 
-    // PERSISTED: under CDF the touched-file scan feeds both the
-    // rewrite (kept rows) and the CDC delete image — without caching,
-    // each pass re-reads the touched files from storage.
-    val touchedDf = readFiles(spark, l, meta, touchedAdds).persist()
-    try {
-      // SQL DELETE semantics: only rows where the predicate is TRUE
-      // are deleted — a NULL predicate keeps the row. `!cond` alone
-      // would silently drop NULL-evaluating rows (null is not true
-      // for filter), diverging from the DV route and emitting no CDC
-      // image for the disappearance.
-      val hit = coalesce(cond, lit(false))
-      val kept = touchedDf.filter(!hit)
-      val adds = DlvTable.stageFiles(spark, l, kept, meta, dataChange = true)
-      val removes = touchedAdds.map(_.remove(now, dataChange = true))
-      val cdc =
-        if (!cdfEnabled(meta)) None
-        else writeCdc(spark, l, meta, touchedDf.filter(hit)
-          .withColumn("_change_type", lit("delete")))
-      // rewrite route: deleted = touched live rows minus rewritten
-      // survivors (touched stats minus their vectors' dead rows, both
-      // sides stats-complete or the metric is omitted)
-      val metrics = for {
-        before <- CommitInfo.rowCount(touchedAdds)
-        after <- CommitInfo.rowCount(adds)
-      } yield Map("numDeletedRows" -> (before -
-        touchedAdds.flatMap(_.dv).map(_.cardinality).sum -
-        after).toString)
-      tx.commit(DlvIdentity.advance(meta, adds).toSeq ++
-        removes ++ adds ++ cdc ++
-        CommitInfo.metricsCarrier(metrics.getOrElse(Map.empty)),
-        isBlindAppend = false)
-    } finally {
-      touchedDf.unpersist()
-      ()
-    }
+    // NOT cached: under CDF the delete image re-reads the touched
+    // files with the predicate. The files are immutable and the read
+    // applies the vectors they carry, so it sees the rows the rewrite
+    // saw; building an in-memory copy of the scan cost more than the
+    // second read.
+    val touchedDf = readFiles(spark, l, meta, touchedAdds)
+    // SQL DELETE semantics: only rows where the predicate is TRUE are
+    // deleted — a NULL predicate keeps the row. `!cond` alone would
+    // silently drop NULL-evaluating rows (null is not true for
+    // filter), diverging from the DV route and emitting no CDC image
+    // for the disappearance.
+    val hit = coalesce(cond, lit(false))
+    val kept = touchedDf.filter(!hit)
+    val adds = DlvTable.stageFiles(spark, l, kept, meta, dataChange = true)
+    val removes = touchedAdds.map(_.remove(now, dataChange = true))
+    val cdc =
+      if (!cdfEnabled(meta)) None
+      else writeCdc(spark, l, meta, touchedDf.filter(hit)
+        .withColumn("_change_type", lit("delete")))
+    // rewrite route: deleted = touched live rows minus rewritten
+    // survivors (touched stats minus their vectors' dead rows, both
+    // sides stats-complete or the metric is omitted)
+    val metrics = for {
+      before <- CommitInfo.rowCount(touchedAdds)
+      after <- CommitInfo.rowCount(adds)
+    } yield Map("numDeletedRows" -> (before -
+      touchedAdds.flatMap(_.dv).map(_.cardinality).sum -
+      after).toString)
+    tx.commit(DlvIdentity.advance(meta, adds).toSeq ++
+      removes ++ adds ++ cdc ++
+      CommitInfo.metricsCarrier(metrics.getOrElse(Map.empty)),
+      isBlindAppend = false)
   }
 
   /** delta's `replaceWhere` overwrite: ONE atomic commit that
@@ -567,31 +564,28 @@ object DlvDml {
       // scoping MERGE uses)
       tx.setReadWholeTable()
       tx.addConflictFilter = partitionScopeFilter(aCond, meta)
+      // not cached: the delete images re-read the touched files (see
+      // DELETE)
       val touchedDf =
         if (touched.isEmpty) None
-        else Some(readFiles(spark, l, meta, touchedAdds).persist())
-      try {
-        // only predicate-TRUE rows are replaced; NULL keeps the row
-        // (same rule as DELETE)
-        val hit = coalesce(cond, lit(false))
-        val out = touchedDf.map(_.filter(!hit).unionByName(inserted))
-          .getOrElse(inserted)
-        val staged = DlvTable.stageFiles(spark, l, out, meta,
-          dataChange = true)
-        val removes = touchedAdds.map(_.remove(now, dataChange = true))
-        val cdc =
-          if (!cdfEnabled(meta)) None
-          else writeCdc(spark, l, meta,
-            touchedDf.map(_.filter(hit)
-                .withColumn("_change_type", lit("delete"))
-                .unionByName(insertImages))
-              .getOrElse(insertImages))
-        tx.commit(DlvIdentity.advance(meta, staged).toSeq ++
-          removes ++ staged ++ cdc, isBlindAppend = false)
-      } finally {
-        touchedDf.foreach(_.unpersist())
-        ()
-      }
+        else Some(readFiles(spark, l, meta, touchedAdds))
+      // only predicate-TRUE rows are replaced; NULL keeps the row
+      // (same rule as DELETE)
+      val hit = coalesce(cond, lit(false))
+      val out = touchedDf.map(_.filter(!hit).unionByName(inserted))
+        .getOrElse(inserted)
+      val staged = DlvTable.stageFiles(spark, l, out, meta,
+        dataChange = true)
+      val removes = touchedAdds.map(_.remove(now, dataChange = true))
+      val cdc =
+        if (!cdfEnabled(meta)) None
+        else writeCdc(spark, l, meta,
+          touchedDf.map(_.filter(hit)
+              .withColumn("_change_type", lit("delete"))
+              .unionByName(insertImages))
+            .getOrElse(insertImages))
+      tx.commit(DlvIdentity.advance(meta, staged).toSeq ++
+        removes ++ staged ++ cdc, isBlindAppend = false)
     } finally {
       pin.foreach(_.unpersist())
       ()
@@ -642,51 +636,44 @@ object DlvDml {
         isBlindAppend = false)
     }
 
-    // PERSISTED: under CDF the touched-file scan is evaluated up to
-    // four times — rewrite, CDC preimage, CDC postimage (plus the
-    // discovery scan above) — mirroring MERGE's source persistence.
-    // Without it dlv_cdf pays ~3 redundant storage passes per UPDATE.
-    // The rewrite reads THROUGH any deletion vectors (dead rows must
-    // not resurrect); the clean rewritten files purge them.
-    val touchedDf = readFiles(spark, l, meta, touchedAdds).persist()
-    try {
-      def applySet(df: DataFrame): DataFrame = {
-        val afterSet = meta.schema.fieldNames.foldLeft(df) { (acc, c) =>
-          set.get(c) match {
-            case Some(v) => acc.withColumn(c,
-              when(cond, v).otherwise(col(c)))
-            case None => acc
-          }
+    // NOT cached: under CDF the change images re-read the touched
+    // files with the predicate (see DELETE). The rewrite reads
+    // THROUGH any deletion vectors (dead rows must not resurrect); the
+    // clean rewritten files purge them.
+    val touchedDf = readFiles(spark, l, meta, touchedAdds)
+    // the SET on the rows where `on` holds. `on` and every SET value
+    // read the row as it was before the update (as on the vector
+    // route); generated columns the SET left untouched then recompute
+    // from the POST-update row (sequential withColumn: the expressions
+    // see the applied sets) — `UPDATE .. SET ts = ..` keeps `day(ts)`
+    // consistent without the caller spelling it
+    def applySet(df: DataFrame, on: Column): DataFrame = {
+      val hit = col("__upd_hit")
+      val afterSet = df.withColumn("__upd_hit", coalesce(on, lit(false)))
+        .withColumns(meta.schema.fieldNames.toSeq.flatMap(c =>
+          set.get(c).map(v => c -> when(hit, v).otherwise(col(c)))).toMap)
+      DlvGenerated.recomputeAfterSet(meta, set)
+        .foldLeft(afterSet) { case (acc, (g, e)) =>
+          acc.withColumn(g, when(hit, e).otherwise(col(g)))
         }
-        // generated columns the SET left untouched recompute from the
-        // POST-update row (sequential withColumn: the expressions see
-        // the applied sets) — `UPDATE .. SET ts = ..` keeps `day(ts)`
-        // consistent without the caller spelling it
-        DlvGenerated.recomputeAfterSet(meta, set)
-          .foldLeft(afterSet) { case (acc, (g, e)) =>
-            acc.withColumn(g, when(cond, e).otherwise(col(g)))
-          }
-      }
-      val rewritten = applySet(touchedDf)
-      val adds = DlvTable.stageFiles(spark, l, rewritten, meta,
-        dataChange = true)
-      val now = System.currentTimeMillis()
-      val removes = touchedAdds.map(_.remove(now, dataChange = true))
-      val cdc =
-        if (!cdfEnabled(meta)) None
-        else {
-          val pre = touchedDf.filter(cond)
-            .withColumn("_change_type", lit("update_preimage"))
-          val post = applySet(touchedDf.filter(cond))
-            .withColumn("_change_type", lit("update_postimage"))
-          writeCdc(spark, l, meta, pre.unionByName(post))
-        }
-      tx.commit(DlvIdentity.advance(meta, adds).toSeq ++
-        removes ++ adds ++ cdc, isBlindAppend = false)
-    } finally {
-      touchedDf.unpersist()
-      ()
+        .drop("__upd_hit")
     }
+    val adds = DlvTable.stageFiles(spark, l, applySet(touchedDf, cond),
+      meta, dataChange = true)
+    val now = System.currentTimeMillis()
+    val removes = touchedAdds.map(_.remove(now, dataChange = true))
+    val cdc =
+      if (!cdfEnabled(meta)) None
+      else {
+        // both images from one filtered scan: each matched row fans
+        // out to its preimage and its postimage
+        val images = touchedDf.filter(cond).withColumn("_change_type",
+          explode(array(lit("update_preimage"), lit("update_postimage"))))
+        writeCdc(spark, l, meta,
+          applySet(images, col("_change_type") === "update_postimage"))
+      }
+    tx.commit(DlvIdentity.advance(meta, adds).toSeq ++
+      removes ++ adds ++ cdc, isBlindAppend = false)
   }
 
   // ── MERGE ──

@@ -299,7 +299,8 @@ object DlvDv {
       def write(df: DataFrame, rel: String, rows: Long): Unit =
         df.coalesce(sidecarParts(rows))
           .sortWithinPartitions(FILE_COL, ROW_COL)
-          .write.parquet(l.resolve(rel))
+          .write.options(LocalWriteFs.writerOptions)
+          .parquet(l.resolve(rel))
       val appendRel = if (toAppend.isEmpty) None else {
         val rel = freshRel()
         val df =

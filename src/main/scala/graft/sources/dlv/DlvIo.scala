@@ -208,9 +208,11 @@ final class NioIo(store: CommitStore = new LinkCommitStore) extends DlvIo {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     ()
   }
-  // a file written through Hadoop's checksummed local FS may carry a
-  // `.<name>.crc` sibling (a write task killed before its commit
-  // leaves one); it goes with its file, or the dir never empties
+  // dlv writes go through [[LocalWriteFs]] and leave no checksum
+  // file, but one written through Hadoop's checksummed local FS (by an
+  // older writer, or a task of one killed before its commit) may carry
+  // a `.<name>.crc` sibling; it goes with its file, or the dir never
+  // empties
   override def delete(path: String): Boolean = {
     val f = p(path)
     if (f.getFileName != null)
@@ -231,7 +233,8 @@ final class NioIo(store: CommitStore = new LinkCommitStore) extends DlvIo {
 /** Hadoop-FileSystem I/O for scheme'd paths. `confKVs` carries any
   * store credentials/endpoints and serializes to executors (the
   * `Configuration` itself does not); `file:` is pinned to
-  * RawLocalFileSystem so dlv control files don't grow `.crc` siblings.
+  * [[LocalWriteFs]], so control files get no `.crc` siblings and no
+  * write forks a `chmod`.
   */
 final class HadoopIo(
     confKVs: Map[String, String] = Map.empty,
@@ -239,11 +242,11 @@ final class HadoopIo(
 
   @transient private lazy val conf: Configuration = {
     val c = new Configuration()
-    confKVs.foreach { case (k, v) => c.set(k, v) }
-    // AFTER confKVs: the crc-sibling-free local FS pin must win even
-    // if the session conf carries its own fs.file.impl
-    c.set("fs.file.impl",
-      classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
+    // the local FS pin comes last: it wins even if the session conf
+    // carries its own fs.file.impl
+    (confKVs ++ LocalWriteFs.writerOptions).foreach { case (k, v) =>
+      c.set(k, v)
+    }
     c
   }
   override def hadoopConf: Configuration = conf
@@ -412,7 +415,8 @@ final class HadoopIo(
   override def delete(path: String): Boolean = {
     val p = hp(path)
     val f = fs(p)
-    // the pinned raw local FS leaves a checksum sibling (see NioIo)
+    // a file an older checksummed write left may carry a checksum
+    // sibling (see NioIo)
     if (f.getScheme == "file" && p.getParent != null)
       f.delete(new HPath(p.getParent, s".${p.getName}.crc"), false)
     f.delete(p, false)

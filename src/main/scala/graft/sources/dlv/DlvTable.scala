@@ -905,14 +905,15 @@ object DlvTable {
 
   /** The one direct write under `dir` (the table root, or a CDC blob
     * dir): [[DirectCommitProtocol]] through Spark's file writer, as the
-    * SQL execution `name`. */
+    * SQL execution `name`, with `file:` on [[LocalWriteFs]]. */
   private[dlv] def writeInPlace(
       l: DlvLog, dir: String, df: DataFrame, partitionColumns: Seq[String],
       indexed: Option[Set[String]], dataChange: Boolean,
       name: String): Seq[AddFile] = {
     val root = l.io.qualified(dir)
     val protocol = new DirectCommitProtocol(root, indexed, dataChange)
-    GraftInternal.writeParquet(df, root, partitionColumns, protocol, name)
+    GraftInternal.writeParquet(df, root, partitionColumns, protocol, name,
+      LocalWriteFs.writerOptions)
     protocol.committed
   }
 

@@ -44,11 +44,12 @@ object GraftInternal {
     * with the caller's commit protocol in place of the
     * `DataFrameWriter` → `FileOutputCommitter` hop. Runs as one SQL
     * execution whose description (and job description) is `name`;
-    * the caller's job description is restored afterwards. */
+    * the caller's job description is restored afterwards. `options`
+    * go into the job's Hadoop conf, as a `DataFrameWriter`'s do. */
   def writeParquet(df: org.apache.spark.sql.DataFrame, outputPath: String,
       partitionColumns: Seq[String],
       committer: org.apache.spark.internal.io.FileCommitProtocol,
-      name: String): Unit = {
+      name: String, options: Map[String, String]): Unit = {
     import org.apache.spark.sql.execution.SQLExecution
     import org.apache.spark.sql.execution.datasources.{
       BasicWriteJobStatsTracker, FileFormatWriter}
@@ -61,7 +62,7 @@ object GraftInternal {
       plan.output.find(a => resolver(a.name, c)).getOrElse(
         throw new IllegalArgumentException(
           s"partition column $c is not in ${plan.output.mkString(", ")}")))
-    val hadoopConf = spark.sessionState.newHadoopConf()
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
     val sc = spark.sparkContext
     val prior = sc.getLocalProperty(org.apache.spark.SparkContext
       .SPARK_JOB_DESCRIPTION)

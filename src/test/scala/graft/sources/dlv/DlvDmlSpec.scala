@@ -100,6 +100,33 @@ class DlvDmlSpec extends SparkSpec with DlvTestProps with JobProbe {
     assert(df.count() == orders.count())
   }
 
+  test("UPDATE reads its condition and every SET value from the " +
+    "pre-update row: copy-on-write and vector routes, table and change " +
+    "feed alike") {
+    for (props <- Seq(Map(DlvDml.CDF_PROP -> "true"),
+        Map(DlvDml.CDF_PROP -> "true", DlvDv.PROP -> "true"))) {
+      val path = freshDir("updset")
+      DlvTable.create(spark, path, "a INT, b INT, c INT", Nil, props)
+      DlvTable.append(spark, path,
+        spark.createDataFrame(Seq((1, 5, 7), (2, 6, 8))).toDF("a", "b", "c"))
+      val v = DlvTable.log(path).latestVersion
+      // the condition reads `a`, which the SET changes first
+      DlvDml.update(spark, path, col("a") === 1,
+        Map("a" -> (col("a") + 1), "b" -> col("a"), "c" -> col("b")))
+      def triples(df: org.apache.spark.sql.DataFrame) =
+        df.select("a", "b", "c").collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSet
+      assert(triples(DlvTable.toDF(spark, path)) ==
+        Set((2, 1, 5), (2, 6, 8)), props)
+      val ch = DlvChangeFeed.changes(spark, path, v + 1)
+      assert(triples(ch.filter(col("_change_type") === "update_preimage"))
+        == Set((1, 5, 7)), props)
+      assert(triples(ch.filter(col("_change_type") === "update_postimage"))
+        == Set((2, 1, 5)), props)
+      assert(ch.count() == 2, props)
+    }
+  }
+
   test("merge: conditional update, delete, insert, not-matched-by-source") {
     import DlvDml._
     val path = mkTable("mrg")

@@ -304,4 +304,59 @@ class DlvTableSpec extends SparkSpec {
     val live = l.snapshot().files.map(_.path).toSet
     assert(dataDirFiles(l).filter(_.endsWith(".parquet")).toSet == live)
   }
+
+  test("a partitioned append and a CDF UPDATE leave no checksum file " +
+    "and give files and dirs the stock local FS's modes, on bare and " +
+    "file: paths") {
+    import java.nio.file.{Files, Path => JPath}
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
+    import scala.jdk.CollectionConverters._
+    def mode(p: JPath) =
+      PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    def walk(p: JPath) =
+      Files.walk(p).iterator().asScala.toList.filterNot(_ == p)
+    // the modes stock RawLocalFileSystem gives under the same conf
+    val conf = spark.sparkContext.hadoopConfiguration
+    val probe = Files.createTempDirectory("dlv-modes-")
+    val stock = new RawLocalFileSystem()
+    stock.initialize(java.net.URI.create("file:///"), conf)
+    stock.create(new HPath(probe.resolve("d/f").toString)).close()
+    val (dirMode, fileMode) =
+      (mode(probe.resolve("d")), mode(probe.resolve("d/f")))
+    for (uri <- Seq(false, true)) {
+      val dir = freshDir(if (uri) "modes-uri" else "modes")
+      val path = if (uri) "file:" + dir else dir
+      DlvTable.create(spark, path, "id BIGINT, p INT, v STRING", Seq("p"),
+        Map(DlvDml.CDF_PROP -> "true"))
+      DlvTable.append(spark, path, spark.range(0, 40).select(col("id"),
+        (col("id") % 4).cast("int").as("p"), lit("a").as("v")))
+      DlvDml.update(spark, path, col("id") % 3 === 0, Map("v" -> lit("u")))
+      val root = java.nio.file.Paths.get(dir)
+      val all = walk(root)
+      val crc = all.filter(_.getFileName.toString.endsWith(".crc"))
+      assert(crc.isEmpty, s"checksum files under $path: $crc")
+      val blobs = walk(root.resolve(s"${DlvTable.LOG_DIR}/_cdc"))
+        .filter(_.toString.endsWith(".parquet"))
+      assert(blobs.nonEmpty, "the UPDATE wrote no CDC blob")
+      val data = all.filter(f => f.toString.endsWith(".parquet") &&
+        !root.relativize(f).startsWith(DlvTable.LOG_DIR))
+      val partDirs = all.filter(_.getFileName.toString.startsWith("p="))
+      assert(data.size >= 8 && partDirs.size == 4, s"$data $partDirs")
+      (data ++ blobs).foreach(f => assert(mode(f) == fileMode, s"$f"))
+      partDirs.foreach(d => assert(mode(d) == dirMode, s"$d"))
+      assert(DlvTable.toDF(spark, path).filter(col("v") === "u").count() ==
+        14)
+    }
+    // Hadoop applies the umask before the mode is set: 077 gives
+    // owner-only files and dirs
+    val owner = new org.apache.hadoop.conf.Configuration(conf)
+    owner.set("fs.permissions.umask-mode", "077")
+    val fs = new LocalWriteFs()
+    fs.initialize(java.net.URI.create("file:///"), owner)
+    fs.create(new HPath(probe.resolve("u/f").toString)).close()
+    assert(mode(probe.resolve("u")) == "rwx------")
+    assert(mode(probe.resolve("u/f")) == "rw-------")
+    assert(!Files.exists(probe.resolve("u/.f.crc")))
+  }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * through the exact same code path, differing only in which
   * `FileSystem` the scheme resolves to).
   */
-class HadoopIoSpec extends SparkSpec {
+class HadoopIoSpec extends SparkSpec with DlvTestProps {
 
   private def freshUri(name: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"dlv-hio-$name-")
@@ -97,5 +97,25 @@ class HadoopIoSpec extends SparkSpec {
     assert(io.putIfAbsent(uri, "00000000000000000000.json", "a\n"))
     assert(!io.putIfAbsent(uri, "00000000000000000000.json", "b\n"))
     assert(io.readString(io.child(uri, "00000000000000000000.json")) == "a\n")
+  }
+
+  test("a file: table holds no checksum file after 12 commits and a " +
+    "checkpoint, JSON or parquet") {
+    import scala.jdk.CollectionConverters._
+    for (ckpt <- Seq("1000000", "1")) withProps(CKPT -> ckpt) {
+      val uri = freshUri(s"nocrc-$ckpt")
+      DlvTable.create(spark, uri, "id BIGINT, p INT", Seq("p"))
+      for (i <- 1 to 12)
+        DlvTable.append(spark, uri, spark.range(i * 10, i * 10 + 10)
+          .select(col("id"), (col("id") % 3).cast("int").as("p")))
+      val l = DlvTable.log(uri)
+      assert(l.latestVersion == 12)
+      assert(l.io.exists(l.io.child(l.logDir, "_last_checkpoint")))
+      val root = java.nio.file.Paths.get(new java.net.URI(uri))
+      val crc = java.nio.file.Files.walk(root).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".crc")).toList
+      assert(crc.isEmpty, s"checksum files (parquet threshold $ckpt): $crc")
+      assert(DlvTable.toDF(spark, uri).count() == 120)
+    }
   }
 }
