@@ -1,47 +1,25 @@
 package graft.sources.dlv
 
-import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
+import java.nio.file.{FileAlreadyExistsException, Files, Path}
 
-/** The atomic-publish seam of the commit protocol. A dlv commit is one
-  * immutable object at `<logDir>/<%020d>.json`; whoever materializes
-  * version v first wins, and a loser must observe a fully-written
-  * object, never a partial one ("never leave a partial object
-  * visible"). Two real-world atomicity models:
+/** Commit object names. A dlv commit is one immutable object at
+  * `<logDir>/<%020d>.json`; whoever materializes version v first wins,
+  * and a loser must observe a fully-written object, never a partial
+  * one. Publishing is [[DlvIo.putIfAbsent]], which picks the arbiter
+  * from the path's scheme: [[AtomicPublish]] on a local filesystem, a
+  * registered [[ConditionalPutClient]] on an object store.
   *
-  *   - [[LinkCommitStore]]: POSIX/HDFS semantics — stage to a hidden
-  *     temp file, atomic no-replace rename. Rename is the arbiter.
-  *   - [[CasCommitStore]]: object-store conditional-PUT semantics (GCS
-  *     if-generation-match / S3 if-none-match — the reference's actual
-  *     deployment substrate per its README): no rename exists; a PUT
-  *     either creates the full object or fails. Emulated with a
-  *     JVM-wide per-logDir arbiter monitor around an exists-probe +
-  *     hard-link of fully-staged content — all-or-nothing by
-  *     construction (the content is complete before the link, and the
-  *     link either lands or throws).
-  *
-  * `latestVersion` deliberately does NOT trust directory listings
-  * alone: object-store listings are eventually consistent, so it
-  * forward-probes existence from the last listed version.
-  */
-trait CommitStore extends Serializable {
-
-  /** Publish `content` as version `version`. Returns true if this
-    * writer won the version, false if some other writer already owns
-    * it. MUST be all-or-nothing: on false/throw, no partial object may
-    * remain visible at the commit path. */
-  def commit(logDir: Path, version: Long, content: String): Boolean
-
-  // NOTE: version DISCOVERY (listing + forward-probe) lives in
-  // DlvLog.latestVersion on the DlvIo seam — the store is purely the
-  // publish arbiter.
-}
-
+  * Version DISCOVERY (listing + forward-probe) lives in
+  * `DlvLog.latestVersion`: object-store listings are eventually
+  * consistent, so it does not trust a listing alone. */
 object CommitStore {
   val CommitFile = "(\\d{20})\\.json".r
   def fileName(version: Long): String = f"$version%020d.json"
 }
 
-/** Atomic no-replace publish — the POSIX/HDFS-style commit arbiter.
+/** Atomic no-replace publish on a POSIX filesystem: the arbiter behind
+  * [[NioIo]] and [[HadoopIo]]'s `file:` branch, for commits and every
+  * other put-if-absent object.
   *
   * NOT a plain rename: POSIX `rename(2)` (what `Files.move(...,
   * ATOMIC_MOVE)` compiles down to) silently REPLACES an existing
@@ -56,20 +34,20 @@ object CommitStore {
   *
   * Filesystems WITHOUT hard links (FAT/exFAT, some NFS mounts,
   * certain container overlays) throw `UnsupportedOperationException`
-  * instead of arbitrating — on those we degrade to the
-  * [[CasCommitStore]] shape: exists-probe + ATOMIC_MOVE under a
-  * JVM-wide per-logDir monitor (same-process races stay safe; the
-  * cross-process no-replace guarantee is only as strong as the
-  * filesystem, which is the best any engine can do there). */
-final class LinkCommitStore extends CommitStore {
-  override def commit(logDir: Path, version: Long, content: String): Boolean =
-    AtomicPublish.putIfAbsent(
-      logDir, CommitStore.fileName(version), content)
-}
-
-/** The reusable hard-link publish primitive behind [[LinkCommitStore]]
-  * — also serves [[NioIo]] for non-commit put-if-absent objects. */
+  * instead of arbitrating — on those we degrade to exists-probe +
+  * ATOMIC_MOVE under a JVM-wide per-dir monitor (same-process races
+  * stay safe; the cross-process no-replace guarantee is only as strong
+  * as the filesystem, which is the best any engine can do there). */
 object AtomicPublish {
+  private val monitors =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** The JVM-wide publish monitor for one directory `key` — shared by
+    * the no-hard-link fallback here and [[HadoopIo]]'s object-store
+    * probe-and-write. */
+  private[dlv] def monitorFor(key: String): Object =
+    monitors.computeIfAbsent(key, _ => new Object)
+
   def putIfAbsent(dir: Path, name: String, content: String): Boolean = {
     Files.createDirectories(dir)
     val dst = dir.resolve(name)
@@ -83,7 +61,7 @@ object AtomicPublish {
       } catch {
         case _: FileAlreadyExistsException => false
         case _: UnsupportedOperationException =>
-          CasCommitStore.monitorFor(dir).synchronized {
+          monitorFor(dir.toAbsolutePath.toString).synchronized {
             if (Files.exists(dst)) false
             else {
               Files.move(tmp, dst,
@@ -94,46 +72,6 @@ object AtomicPublish {
       }
     } finally Files.deleteIfExists(tmp)
   }
-}
-
-/** Conditional-PUT commit arbiter (object-store semantics, no rename).
-  * The monitor emulates the store's server-side generation check; the
-  * content is staged COMPLETELY outside the monitor and made visible
-  * via hard link — an all-or-nothing operation, so a concurrent
-  * reader's exists()-probe can never observe a truncated commit. */
-final class CasCommitStore extends CommitStore {
-  override def commit(logDir: Path, version: Long, content: String): Boolean = {
-    Files.createDirectories(logDir)
-    val dst = logDir.resolve(CommitStore.fileName(version))
-    val tmp = Files.createTempFile(logDir, s".cas-$version-", ".tmp")
-    try {
-      Files.writeString(tmp, content) // fully staged before visibility
-      CasCommitStore.monitorFor(logDir).synchronized {
-        if (Files.exists(dst)) false
-        else {
-          try Files.createLink(dst, tmp) // atomic: link lands or throws
-          catch {
-            // no-hard-link filesystems: ATOMIC_MOVE is safe here — the
-            // monitor already arbitrated this process's racers
-            case _: UnsupportedOperationException =>
-              Files.move(tmp, dst,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          }
-          true
-        }
-      }
-    } catch {
-      case _: FileAlreadyExistsException => false
-    } finally Files.deleteIfExists(tmp)
-  }
-}
-
-object CasCommitStore {
-  private val monitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[dlv] def monitorFor(logDir: Path): Object =
-    monitors.computeIfAbsent(
-      logDir.toAbsolutePath.toString, _ => new Object)
 }
 
 /** Server-side conditional PUT — the capability real object stores
@@ -196,21 +134,6 @@ final class InMemoryObjectStore extends ConditionalPutClient {
     import scala.jdk.CollectionConverters._
     objects.keySet().asScala.toSeq
   }
-}
-
-/** Commit arbiter over a conditional-PUT store: ONE call — the store's
-  * precondition is the whole arbitration. No staging, no monitor, no
-  * exists-probe, and the guarantee is cross-process/cross-machine
-  * because the decision happens server-side. */
-final class ConditionalPutCommitStore(client: ConditionalPutClient)
-    extends CommitStore {
-  override def commit(
-      logDir: Path, version: Long, content: String): Boolean =
-    ConditionalPut.resolvedPut(
-      client,
-      s"${logDir.toString.stripSuffix("/")}/" +
-        CommitStore.fileName(version),
-      content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 }
 
 /** Scheme → conditional-PUT client registry. A deployment registers

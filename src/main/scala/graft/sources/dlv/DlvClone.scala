@@ -59,9 +59,8 @@ object DlvClone {
   def shallowClone(
       spark: SparkSession, srcPath: String, dstPath: String,
       version: Option[Long] = None,
-      timestampMs: Option[Long] = None,
-      store: CommitStore = new LinkCommitStore): CloneStats = {
-    val srcLog = DlvTable.log(srcPath, store)
+      timestampMs: Option[Long] = None): CloneStats = {
+    val srcLog = DlvTable.log(srcPath)
     require(srcLog.exists, s"$srcPath is not a dlv table")
     val v = (version, timestampMs) match {
       case (Some(_), Some(_)) => throw new IllegalArgumentException(
@@ -71,7 +70,7 @@ object DlvClone {
       case (None, None) => None
     }
     val snap = srcLog.snapshotAt(v)
-    val dstLog = DlvTable.log(dstPath, store)
+    val dstLog = DlvTable.log(dstPath)
     require(!dstLog.exists, s"$dstPath is already a dlv table")
 
     // NORMALIZED absolute form: the clone's AddFile.path must be the
@@ -138,9 +137,8 @@ object DlvClone {
   def deepClone(
       spark: SparkSession, srcPath: String, dstPath: String,
       version: Option[Long] = None,
-      timestampMs: Option[Long] = None,
-      store: CommitStore = new LinkCommitStore): CloneStats = {
-    val srcLog = DlvTable.log(srcPath, store)
+      timestampMs: Option[Long] = None): CloneStats = {
+    val srcLog = DlvTable.log(srcPath)
     require(srcLog.exists, s"$srcPath is not a dlv table")
     val v = (version, timestampMs) match {
       case (Some(_), Some(_)) => throw new IllegalArgumentException(
@@ -150,7 +148,7 @@ object DlvClone {
       case (None, None) => None
     }
     val snap = srcLog.snapshotAt(v)
-    val dstLog = DlvTable.log(dstPath, store)
+    val dstLog = DlvTable.log(dstPath)
     require(!dstLog.exists, s"$dstPath is already a dlv table")
 
     def escape(s: String) = org.apache.spark.sql.catalyst.catalog

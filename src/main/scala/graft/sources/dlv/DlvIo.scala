@@ -17,16 +17,16 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   *
   * Two implementations:
   *   - [[NioIo]] — local filesystem via `java.nio`, POSIX hard-link
-  *     commit arbiter ([[LinkCommitStore]]). The default for plain
-  *     local paths: exact no-replace atomicity, no Hadoop overhead.
+  *     arbiter ([[AtomicPublish]]). The default for plain local
+  *     paths: exact no-replace atomicity, no Hadoop overhead.
   *   - [[HadoopIo]] — any Hadoop scheme (`hdfs://`, `s3a://`, `gs://`,
   *     `file:`). Commit arbitration is per-scheme: a
   *     [[ConditionalPutClient]] registered for the scheme (the store's
   *     own if-none-match / if-generation-match — TRUE cross-process
   *     multi-writer safety) owns the publish outright; otherwise
-  *     `file:` borrows the POSIX hard-link arbiter, HDFS uses
+  *     `file:` takes the POSIX hard-link arbiter, HDFS uses
   *     no-replace rename (atomic there), and object stores fall back
-  *     to exists-probe + stage + rename under a JVM-wide monitor —
+  *     to exists-probe + create under a JVM-wide per-dir monitor —
   *     same-process races safe, delta-spark's documented LogStore
   *     caveat, now opt-out instead of unconditional.
   */
@@ -65,8 +65,9 @@ trait DlvIo extends Serializable {
   def readLines(path: String): Seq[String]
   /** Replace-allowed small control file (checkpoints, hints). */
   def writeReplace(path: String, content: String): Unit
-  /** THE commit arbiter: publish `content` at `dir/name` iff absent,
-    * all-or-nothing; false when another writer owns the name. */
+  /** THE commit arbiter, and the only route a commit is published
+    * by: put `content` at `dir/name` iff absent, all-or-nothing; false
+    * when another writer owns the name. */
   def putIfAbsent(dir: String, name: String, content: String): Boolean
   def listNames(dir: String): Seq[String]
   /** One level of `dir`. */
@@ -92,14 +93,13 @@ object DlvIo {
 
   /** Scheme'd URIs (including `file:`) route through Hadoop; bare
     * local paths stay on `java.nio`. */
-  def forPath(path: String,
-      store: CommitStore = new LinkCommitStore): DlvIo =
+  def forPath(path: String): DlvIo =
     if (path.matches("^[A-Za-z][A-Za-z0-9+.-]*:/.*"))
       // seed from the active session's hadoop conf when one exists:
       // object-store credentials/endpoints arrive as spark.hadoop.*
       // and a bare Configuration would not see them
-      new HadoopIo(confKVs = sessionHadoopKVs(), store = store)
-    else new NioIo(store)
+      new HadoopIo(confKVs = sessionHadoopKVs())
+    else new NioIo
 
   /** The active session's effective hadoop key/values, or empty when
     * no session exists (session-less tooling keeps default wiring). */
@@ -117,7 +117,7 @@ object DlvIo {
 }
 
 /** Local-filesystem I/O with the POSIX hard-link commit arbiter. */
-final class NioIo(store: CommitStore = new LinkCommitStore) extends DlvIo {
+final class NioIo extends DlvIo {
   private def p(s: String) = Paths.get(s)
 
   // bare local paths: the default config resolves them via the local FS
@@ -165,12 +165,7 @@ final class NioIo(store: CommitStore = new LinkCommitStore) extends DlvIo {
   }
   override def putIfAbsent(
       dir: String, name: String, content: String): Boolean =
-    name match {
-      // commit objects honor the injected arbiter (CAS vs link models)
-      case CommitStore.CommitFile(v) =>
-        store.commit(p(dir), v.toLong, content)
-      case _ => AtomicPublish.putIfAbsent(p(dir), name, content)
-    }
+    AtomicPublish.putIfAbsent(p(dir), name, content)
   // Files.list/walk return STREAMS that hold an open directory handle
   // until closed — a vacuum over a million partition dirs must not
   // leak a million descriptors
@@ -237,8 +232,7 @@ final class NioIo(store: CommitStore = new LinkCommitStore) extends DlvIo {
   * write forks a `chmod`.
   */
 final class HadoopIo(
-    confKVs: Map[String, String] = Map.empty,
-    store: CommitStore = new LinkCommitStore) extends DlvIo {
+    confKVs: Map[String, String] = Map.empty) extends DlvIo {
 
   @transient private lazy val conf: Configuration = {
     val c = new Configuration()
@@ -345,14 +339,8 @@ final class HadoopIo(
     val dst = new HPath(d, name)
     f.getScheme match {
       case "file" =>
-        // POSIX underneath: commit objects honor the injected arbiter
-        // (CAS vs link models), everything else takes the hard link
-        name match {
-          case CommitStore.CommitFile(v) =>
-            store.commit(Paths.get(d.toUri.getPath), v.toLong, content)
-          case _ => AtomicPublish.putIfAbsent(
-            Paths.get(d.toUri.getPath), name, content)
-        }
+        // POSIX underneath: the hard-link arbiter
+        AtomicPublish.putIfAbsent(Paths.get(d.toUri.getPath), name, content)
       case "hdfs" =>
         // HDFS rename is atomic and fails (false) when dst exists
         if (f.exists(dst)) return false
@@ -364,8 +352,7 @@ final class HadoopIo(
       case _ =>
         // object store through the FS API: probe + publish under a
         // JVM monitor (see class doc for the conditional-PUT caveat)
-        CasCommitStore.monitorFor(Paths.get(
-          d.toUri.getSchemeSpecificPart)).synchronized {
+        AtomicPublish.monitorFor(d.toString).synchronized {
           if (f.exists(dst)) false
           else { writeTo(dst, content, overwrite = false); true }
         }

@@ -820,6 +820,5 @@ object DlvLog {
     sys.props.get("graft.dlv.checkpointHistoryChunk")
       .map(_.toInt).getOrElse(1000)
 
-  def forTable(path: String, store: CommitStore = new LinkCommitStore)
-      : DlvLog = new DlvLog(path, DlvIo.forPath(path, store))
+  def forTable(path: String): DlvLog = new DlvLog(path, DlvIo.forPath(path))
 }

@@ -19,8 +19,7 @@ object DlvTable {
 
   val LOG_DIR = "_dlv_log"
 
-  def log(path: String, store: CommitStore = new LinkCommitStore): DlvLog =
-    DlvLog.forTable(path, store)
+  def log(path: String): DlvLog = DlvLog.forTable(path)
 
   def isDlvTable(path: String): Boolean =
     log(path).exists
@@ -80,9 +79,8 @@ object DlvTable {
   def create(
       spark: SparkSession, path: String, schemaDdl: String,
       partitionColumns: Seq[String],
-      properties: Map[String, String] = Map.empty,
-      store: CommitStore = new LinkCommitStore): Boolean = {
-    val l = log(path, store)
+      properties: Map[String, String] = Map.empty): Boolean = {
+    val l = log(path)
     if (l.exists) return false
     validateCreateProperties(properties)
     // IDENTITY first (its clause would false-match the generated-
@@ -126,9 +124,8 @@ object DlvTable {
   def createAsSelect(
       spark: SparkSession, path: String, df: DataFrame,
       partitionColumns: Seq[String],
-      properties: Map[String, String] = Map.empty,
-      store: CommitStore = new LinkCommitStore): Boolean = {
-    val l = log(path, store)
+      properties: Map[String, String] = Map.empty): Boolean = {
+    val l = log(path)
     if (l.exists) return false
     validateCreateProperties(properties)
     val props1 =
@@ -162,9 +159,8 @@ object DlvTable {
   def append(
       spark: SparkSession, path: String, df: DataFrame,
       mergeSchema: Boolean = false,
-      store: CommitStore = new LinkCommitStore,
       extraOpParams: Map[String, String] = Map.empty): Long = {
-    val l = log(path, store)
+    val l = log(path)
     ensureCreated(spark, l, df)
     val tx = new OptimisticTransaction(l, "WRITE",
       Map("mode" -> "Append") ++ extraOpParams)
@@ -200,9 +196,8 @@ object DlvTable {
 
   /** Overwrite the whole table (logical: removes every live file). */
   def overwrite(
-      spark: SparkSession, path: String, df: DataFrame,
-      store: CommitStore = new LinkCommitStore): Long = {
-    val l = log(path, store)
+      spark: SparkSession, path: String, df: DataFrame): Long = {
+    val l = log(path)
     ensureCreated(spark, l, df)
     val tx = new OptimisticTransaction(l, "WRITE",
       Map("mode" -> "Overwrite"))
@@ -549,10 +544,7 @@ object DlvTable {
     // Dataset-backed index (below-hint time travel included): the
     // two-version diff runs where the state lives and only the CHANGED
     // files land on the driver — the commit is O(diff), so the
-    // collect adds no new bound. The vacuum guard shrinks to the
-    // RE-ADD diff: a file live at BOTH versions is referenced by the
-    // current snapshot, and vacuum never deletes current-referenced
-    // files.
+    // collect adds no new bound.
     (for {
       cur <- DlvDistributedFileIndex.forVersion(
         spark, l, Some(tx.readVersion).filter(_ >= 0),
@@ -582,25 +574,7 @@ object DlvTable {
         .as(org.apache.spark.sql.Encoders.product[AddFile])
         .collect().toSeq
         .map(_.remove(now, dataChange = true))
-      val io = l.io
-      val root = l.tablePath
-      // existence covers the DV SIDECARS of re-added vector-bearing
-      // entries too (also table-root-relative): a version whose
-      // vectors were purged (OPTIMIZE) and whose sidecars were then
-      // vacuumed must refuse HERE — committing it would leave every
-      // subsequent read dying on a missing sidecar parquet
-      val needed = (adds.map(_.path) ++
-        adds.flatMap(_.dv).flatMap(_.paths)).distinct
-      val missing =
-        if (needed.isEmpty) Array.empty[String]
-        else spark.sparkContext
-          .parallelize(needed, math.min(needed.size, 256))
-          .filter(rel => !io.exists(
-            if (DlvLog.isAbsolutePath(rel)) rel else io.child(root, rel)))
-          .take(1)
-      require(missing.isEmpty,
-        s"cannot RESTORE to $version: re-added data files were " +
-          s"vacuumed (e.g. ${missing.headOption.getOrElse("")})")
+      requireRestorable(spark, l, version, adds)
       val metaAction: Seq[Action] =
         if (cur.metadata != tgt.metadata) Seq(tgt.metadata) else Nil
       // removes BEFORE adds: with (path, dv) diff identity the same
@@ -611,26 +585,6 @@ object DlvTable {
       val cur = tx.readSnapshot.get
       tx.readFilePaths = cur.files.map(_.path).toSet
       val target = l.snapshotAt(Some(version))
-      // data files AND the DV sidecars their vectors reference — a
-      // restored entry pointing at a vacuumed sidecar would fail every
-      // subsequent read (recoverable only by another RESTORE).
-      // Parallel probes + first-hit exit, same as the distributed
-      // route above: a serial per-path HEAD loop on an object store
-      // would turn this check into minutes at a few thousand files
-      val needed = (target.files.map(_.path) ++
-        target.files.flatMap(_.dv).flatMap(_.paths)).distinct
-      val io = l.io
-      val root = l.tablePath
-      val missing =
-        if (needed.isEmpty) Array.empty[String]
-        else spark.sparkContext
-          .parallelize(needed, math.min(needed.size, 256))
-          .filter(rel => !io.exists(
-            if (DlvLog.isAbsolutePath(rel)) rel else io.child(root, rel)))
-          .take(1)
-      require(missing.isEmpty,
-        s"cannot RESTORE to $version: re-added data files were " +
-          s"vacuumed (e.g. ${missing.headOption.getOrElse("")})")
       // diff identity is (path, deletion vector) — path alone would
       // leave a newer vector's soft-deletes in place after restore
       def key(f: AddFile): (String, Option[DeletionVector]) =
@@ -641,6 +595,7 @@ object DlvTable {
         .map(_.copy(dataChange = true))
       val removes = cur.files.filterNot(f => tgtKeys(key(f)))
         .map(_.remove(now, dataChange = true))
+      requireRestorable(spark, l, version, adds)
       val metaAction: Seq[Action] =
         if (cur.metadata != target.metadata) Seq(target.metadata) else Nil
       // removes BEFORE adds: with (path, dv) diff identity the same
@@ -648,6 +603,34 @@ object DlvTable {
       // land on the re-added entry, not the remove
       tx.commit(metaAction ++ removes ++ adds, isBlindAppend = false)
     }
+  }
+
+  /** RESTORE's vacuum guard: refuse up front when a file `adds`
+    * re-adds, or a DV sidecar its vector references, is gone —
+    * committing it would leave every later read dying on a missing
+    * file (a version whose vectors were purged by OPTIMIZE and whose
+    * sidecars were then vacuumed, say). Only the re-added entries need
+    * probing: a file live at both versions is referenced by the
+    * current snapshot, and VACUUM never deletes current-referenced
+    * files. Parallel probes with a first-hit exit: a serial per-path
+    * HEAD loop on an object store would take minutes at a few
+    * thousand files. */
+  private def requireRestorable(
+      spark: SparkSession, l: DlvLog, version: Long,
+      adds: Seq[AddFile]): Unit = {
+    val needed = (adds.map(_.path) ++
+      adds.flatMap(_.dv).flatMap(_.paths)).distinct
+    if (needed.isEmpty) return
+    val io = l.io
+    val root = l.tablePath
+    val missing = spark.sparkContext
+      .parallelize(needed, math.min(needed.size, 256))
+      .filter(rel => !io.exists(
+        if (DlvLog.isAbsolutePath(rel)) rel else io.child(root, rel)))
+      .take(1)
+    require(missing.isEmpty,
+      s"cannot RESTORE to $version: re-added data files were " +
+        s"vacuumed (e.g. ${missing.head})")
   }
 
   def restoreToTimestamp(
@@ -922,9 +905,8 @@ object DlvTable {
       spark: SparkSession, path: String,
       version: Option[Long] = None,
       timestampMs: Option[Long] = None,
-      statsSkipping: Boolean = true,
-      store: CommitStore = new LinkCommitStore): DataFrame = {
-    val l = log(path, store)
+      statsSkipping: Boolean = true): DataFrame = {
+    val l = log(path)
     val v = (version, timestampMs) match {
       case (Some(_), Some(_)) => throw new IllegalArgumentException(
         "specify version or timestamp, not both")

@@ -15,7 +15,7 @@ final class ConcurrentDeleteReadException(msg: String)
 final class ConcurrentDeleteDeleteException(msg: String)
   extends DlvConcurrentException(msg)
 
-/** Optimistic concurrency over the [[CommitStore]] seam: stage
+/** Optimistic concurrency over the [[DlvIo.putIfAbsent]] publish: stage
   * everything, attempt the next version, and on losing a race replay
   * the winners' commits through the conflict matrix — retry only when
   * the concurrent commit provably cannot invalidate what this

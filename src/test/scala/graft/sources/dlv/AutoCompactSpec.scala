@@ -76,4 +76,24 @@ class AutoCompactSpec extends SparkSpec with DlvTestProps {
     assert(!DlvTable.log(path).history.map(_.operation)
       .contains("OPTIMIZE"))
   }
+
+  test("malformed dlv.autoOptimize.minNumFiles fails at SET " +
+    "TBLPROPERTIES and CREATE; a hand-edited value degrades to a " +
+    "loud skip, never a failed append") {
+    val path = freshDir("acval")
+    DlvTable.create(spark, path, "id BIGINT", Nil)
+    val e = intercept[IllegalArgumentException] {
+      DlvTable.setProperties(spark, path,
+        Map(DlvTable.AUTO_COMPACT_MIN_FILES_PROP -> "fifty"))
+    }
+    assert(e.getMessage.contains("must be an integer"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      DlvTable.create(spark, freshDir("acval2"), "id BIGINT", Nil,
+        Map(DlvTable.AUTO_COMPACT_MIN_FILES_PROP -> "NaN"))
+    }
+    assert(e2.getMessage.contains("must be an integer"), e2.getMessage)
+    // integer values pass both chokepoints
+    DlvTable.setProperties(spark, path,
+      Map(DlvTable.AUTO_COMPACT_MIN_FILES_PROP -> " 7 "))
+  }
 }

@@ -8,21 +8,20 @@ import org.scalatest.funsuite.AnyFunSuite
   * "win" the same version (observed as a flaky dlv_concurrent gate:
   * two appends, one commit in the log). The arbiter must award each
   * version to EXACTLY one writer, under a race tighter than any real
-  * workload's. */
+  * workload's. Every race goes through the production publish,
+  * [[DlvIo.putIfAbsent]]: [[NioIo]] for local paths, [[HadoopIo]]
+  * with a registered conditional-put client for object stores. */
 class CommitStoreSpec extends AnyFunSuite {
 
-  private def raceOnce(store: CommitStore, writers: Int): Int = {
-    val dir = Files.createTempDirectory("commitstore-race-")
-    dir.toFile.deleteOnExit()
-    val logDir = dir.resolve("_dlv_log")
+  /** `writers` threads released together, writer w calling
+    * `publish(w)`; returns how many won. */
+  private def raceOnce(writers: Int)(publish: Int => Boolean): Int = {
     val barrier = new java.util.concurrent.CyclicBarrier(writers)
     val wins = new java.util.concurrent.atomic.AtomicInteger(0)
     val threads = (1 to writers).map { w =>
       new Thread(() => {
         barrier.await()
-        if (store.commit(logDir, 0L, s"""{"writer":$w}""")) {
-          wins.incrementAndGet(); ()
-        }
+        if (publish(w)) { wins.incrementAndGet(); () }
       })
     }
     threads.foreach(_.start())
@@ -30,14 +29,40 @@ class CommitStoreSpec extends AnyFunSuite {
     wins.get()
   }
 
-  for (store <- Seq(
-      "rename" -> new LinkCommitStore,
-      "cas" -> new CasCommitStore,
-      "conditional-put" ->
-        new ConditionalPutCommitStore(new InMemoryObjectStore))) {
-    test(s"${store._1}: exactly one writer wins a version, every race") {
+  private def freshLogDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    dir.toFile.deleteOnExit()
+    dir.resolve("_dlv_log").toString
+  }
+
+  /** Runs `body` with an in-memory conditional-put store registered
+    * for `mem://`, the route a registered bucket SDK wrapper takes. */
+  private def withMemStore[A](body: InMemoryObjectStore => A): A = {
+    val client = new InMemoryObjectStore
+    ConditionalPut.register("mem", client)
+    try body(client) finally ConditionalPut.unregister("mem")
+  }
+
+  private def freshMemLogDir(): String =
+    s"mem://bucket/${java.util.UUID.randomUUID()}/_dlv_log"
+
+  test("rename: exactly one writer wins a version, every race") {
+    val io = new NioIo
+    (1 to 50).foreach { i =>
+      val logDir = freshLogDir("commitstore-race-")
+      val winners = raceOnce(writers = 8)(w => io.putIfAbsent(
+        logDir, CommitStore.fileName(0L), s"""{"writer":$w}"""))
+      assert(winners == 1, s"race $i: $winners writers won version 0")
+    }
+  }
+
+  test("conditional-put: exactly one writer wins a version, every race") {
+    withMemStore { _ =>
+      val io = new HadoopIo()
       (1 to 50).foreach { i =>
-        val winners = raceOnce(store._2, writers = 8)
+        val logDir = freshMemLogDir()
+        val winners = raceOnce(writers = 8)(w => io.putIfAbsent(
+          logDir, CommitStore.fileName(0L), s"""{"writer":$w}"""))
         assert(winners == 1, s"race $i: $winners writers won version 0")
       }
     }
@@ -45,29 +70,29 @@ class CommitStoreSpec extends AnyFunSuite {
 
   test("conditional-put arbiter: exactly one of 32 racing writers " +
     "wins, and the winner's content is what landed") {
-    val client = new InMemoryObjectStore
-    val store = new ConditionalPutCommitStore(client)
-    (1 to 20).foreach { i =>
-      val winners = raceOnce(store, writers = 32)
-      assert(winners == 1, s"race $i: $winners of 32 writers won")
+    withMemStore { client =>
+      val io = new HadoopIo()
+      (1 to 20).foreach { i =>
+        val logDir = freshMemLogDir()
+        val winners = raceOnce(writers = 32)(w => io.putIfAbsent(
+          logDir, CommitStore.fileName(0L), s"""{"writer":$w}"""))
+        assert(winners == 1, s"race $i: $winners of 32 writers won")
+      }
+      // the arbitration is content-faithful: whoever won, their bytes
+      // are the object (no torn/merged state is even expressible —
+      // the precondition PUT is one atomic call)
+      val logDir = freshMemLogDir()
+      val name = CommitStore.fileName(7L)
+      assert(io.putIfAbsent(logDir, name, """{"writer":"me"}"""))
+      assert(!io.putIfAbsent(logDir, name, """{"writer":"late"}"""))
+      assert(client.get(s"$logDir/$name").map(new String(_))
+        .contains("""{"writer":"me"}"""))
     }
-    // the arbitration is content-faithful: whoever won, their bytes
-    // are the object (no torn/merged state is even expressible —
-    // the precondition PUT is one atomic call)
-    val dir = Files.createTempDirectory("cput-content-")
-    dir.toFile.deleteOnExit()
-    val logDir = dir.resolve("_dlv_log")
-    assert(store.commit(logDir, 7L, """{"writer":"me"}"""))
-    assert(!store.commit(logDir, 7L, """{"writer":"late"}"""))
-    val key = s"${logDir.toString}/${CommitStore.fileName(7L)}"
-    assert(client.get(key).map(new String(_)).contains("""{"writer":"me"}"""))
   }
 
   test("HadoopIo routes put-if-absent through a registered " +
     "conditional-put client; unregistered schemes keep the fallback") {
-    val client = new InMemoryObjectStore
-    ConditionalPut.register("mem", client)
-    try {
+    withMemStore { client =>
       val io = new HadoopIo()
       // no Hadoop FileSystem exists for scheme mem:// — reaching the
       // store proves the client owns the publish before FS resolution
@@ -76,7 +101,7 @@ class CommitStoreSpec extends AnyFunSuite {
       assert(!io.putIfAbsent(dir, CommitStore.fileName(0L), "{\"b\":2}"))
       assert(client.get(s"$dir/${CommitStore.fileName(0L)}")
         .map(new String(_)).contains("{\"a\":1}"))
-    } finally ConditionalPut.unregister("mem")
+    }
     // after unregistration the same scheme falls back to FileSystem
     // resolution, which (correctly) has no impl for mem://
     intercept[Exception] {
@@ -251,15 +276,12 @@ class CommitStoreSpec extends AnyFunSuite {
   }
 
   test("a loser's staged temp never remains visible in the log dir") {
-    val dir = Files.createTempDirectory("commitstore-clean-")
-    dir.toFile.deleteOnExit()
-    val logDir = dir.resolve("_dlv_log")
-    val store = new LinkCommitStore
-    assert(store.commit(logDir, 0L, "{}"))
-    assert(!store.commit(logDir, 0L, "{}"))
-    import scala.jdk.CollectionConverters._
-    val leftovers = Files.list(logDir).iterator().asScala
-      .map(_.getFileName.toString).filterNot(_.endsWith(".json")).toSeq
+    val logDir = freshLogDir("commitstore-clean-")
+    val io = new NioIo
+    assert(io.putIfAbsent(logDir, CommitStore.fileName(0L), "{}"))
+    assert(!io.putIfAbsent(logDir, CommitStore.fileName(0L), "{}"))
+    val leftovers =
+      io.listNames(logDir).filterNot(_.endsWith(".json"))
     assert(leftovers.isEmpty, s"staging leftovers: $leftovers")
   }
 }

@@ -74,4 +74,29 @@ class DataSkipColsSpec extends SparkSpec with DlvTestProps {
     val st = DlvTable.log(path).snapshot().files.head.parsedStats.get
     assert(st.minValues.keySet == Set("a", "b", "c"))
   }
+
+  test("dataSkippingNumIndexedCols counts over the DATA schema: " +
+    "a leading partition column does not consume an indexed slot") {
+    val path = freshDir("skipcols")
+    DlvTable.create(spark, path, "part INT, a BIGINT, b BIGINT",
+      Seq("part"),
+      Map(DlvTable.DATA_SKIP_COLS_PROP -> "1"))
+    val meta = DlvTable.log(path).snapshot().metadata
+    val indexed = DlvTable.indexedStatsCols(meta)
+    assert(indexed == Some(Set("a")),
+      s"first DATA column must hold the single indexed slot: $indexed")
+    // n covering every data column = no cap, partition cols ignored
+    DlvTable.setProperties(spark, path,
+      Map(DlvTable.DATA_SKIP_COLS_PROP -> "2"))
+    val meta2 = DlvTable.log(path).snapshot().metadata
+    assert(DlvTable.indexedStatsCols(meta2).isEmpty)
+    // and the skip path actually carries stats for 'a' on data files
+    DlvTable.append(spark, path,
+      (0 until 8).map(i => (i % 2, i.toLong, i.toLong * 2))
+        .toDF("part", "a", "b").repartition(col("part")))
+    val withStats = DlvTable.log(path).snapshot().files
+      .filter(f => f.stats.exists(_.contains("\"a\"")))
+    assert(withStats.nonEmpty,
+      "data files must carry min/max for the first data column")
+  }
 }

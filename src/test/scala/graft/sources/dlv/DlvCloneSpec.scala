@@ -538,4 +538,52 @@ class DlvCloneSpec extends SparkSpec with DlvTestProps with JobProbe {
       .map(i => (i.toLong, i % 2, i * 1.5)).toSet,
       s"clone DML must not clobber data column v from the path, got $rows")
   }
+
+  test("VACUUM guard: a clone-of-a-clone (v0 source = the " +
+    "intermediate clone) still blocks reclaim of BASE files it " +
+    "references") {
+    import spark.implicits._
+    val tmpMeta = java.nio.file.Files
+      .createTempDirectory("r17-vac-meta-").resolve("metastore.json")
+    val prevMeta = spark.conf.getOption(sql.DlvRegistry.METASTORE_CONF)
+    spark.conf.set(sql.DlvRegistry.METASTORE_CONF, tmpMeta.toString)
+    try {
+      val base = freshDir("vac-base")
+      DlvTable.create(spark, base, "id BIGINT, part INT", Seq("part"))
+      DlvTable.append(spark, base,
+        (0 until 40).map(i => (i.toLong, i % 3)).toDF("id", "part")
+          .repartition(col("part")))
+      val c1 = freshDir("vac-c1")
+      DlvClone.shallowClone(spark, base, c1)
+      val c2 = freshDir("vac-c2")
+      // c1's AddFiles are absolute paths into BASE; cloning c1 carries
+      // them verbatim, but c2's v0 CommitInfo names c1 as its source
+      DlvClone.shallowClone(spark, c1, c2)
+      // register ONLY the transitive clone — the direct clone must not
+      // be what saves the files
+      sql.DlvRegistry.register(spark, "r17_transitive_clone", c2)
+      // the census must attribute BASE-rooted refs to c2
+      val refs = DlvMaintenance.cloneExternalRefs(
+        spark, DlvTable.log(base))
+      assert(refs.exists(_._1 == "r17_transitive_clone"),
+        s"transitive clone missing from the census: $refs")
+      // base DML dooms every original file while c2 still points at it
+      DlvDml.delete(spark, base, col("id") >= 0L)
+      val e = intercept[IllegalStateException] {
+        DlvMaintenance.vacuum(spark, base, retentionMs = 0L)
+      }
+      assert(e.getMessage.contains("r17_transitive_clone"), e.getMessage)
+      // the transitive clone still reads its pinned content
+      assert(DlvTable.toDF(spark, c2).count() == 40L)
+      sql.DlvRegistry.drop(spark, "r17_transitive_clone")
+      val (deleted, _) =
+        DlvMaintenance.vacuum(spark, base, retentionMs = 0L)
+      assert(deleted > 0L)
+    } finally {
+      prevMeta match {
+        case Some(v) => spark.conf.set(sql.DlvRegistry.METASTORE_CONF, v)
+        case None => spark.conf.unset(sql.DlvRegistry.METASTORE_CONF)
+      }
+    }
+  }
 }

@@ -118,4 +118,56 @@ class HadoopIoSpec extends SparkSpec with DlvTestProps {
       assert(DlvTable.toDF(spark, uri).count() == 120)
     }
   }
+
+  test("object-store fallback: the monitor-guarded probe-and-write " +
+    "awards each version to exactly one of 8 racing writers") {
+    // a scheme with neither a conditional-put client nor a `file:` or
+    // `hdfs` branch takes HadoopIo's exists-probe + create under the
+    // per-dir JVM monitor
+    val io = new HadoopIo(Map(
+      s"fs.${ObjectStoreLikeFs.Scheme}.impl" ->
+        classOf[ObjectStoreLikeFs].getName))
+    val local = java.nio.file.Files.createTempDirectory("dlv-hio-monitor-")
+    local.toFile.deleteOnExit()
+    val logDir = s"${ObjectStoreLikeFs.Scheme}://$local/_dlv_log"
+    for (round <- 0 until 50) {
+      val name = CommitStore.fileName(round.toLong)
+      val barrier = new java.util.concurrent.CyclicBarrier(8)
+      val winners = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val threads = (1 to 8).map { w =>
+        new Thread(() => {
+          val content = s"""{"writer":$w,"round":$round}"""
+          barrier.await()
+          if (io.putIfAbsent(logDir, name, content)) {
+            winners.add(content); ()
+          }
+        })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      assert(winners.size == 1,
+        s"round $round: ${winners.size} writers won $name")
+      assert(java.nio.file.Files.readString(
+          local.resolve("_dlv_log").resolve(name)) == winners.peek(),
+        s"round $round: the object is not the winner's bytes")
+    }
+  }
+}
+
+/** A local file system that reports a scheme of its own, so a
+  * [[HadoopIo]] over it takes the object-store publish branch while
+  * the bytes land on local disk. */
+final class ObjectStoreLikeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = ObjectStoreLikeFs.Scheme
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${ObjectStoreLikeFs.Scheme}:///")
+  // an object store keeps no POSIX modes (and the stock call forks a
+  // `chmod` per created file)
+  override def setPermission(
+      p: org.apache.hadoop.fs.Path,
+      perm: org.apache.hadoop.fs.permission.FsPermission): Unit = ()
+}
+
+object ObjectStoreLikeFs {
+  val Scheme = "objlike"
 }

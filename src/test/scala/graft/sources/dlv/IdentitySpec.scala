@@ -231,4 +231,30 @@ class IdentitySpec extends SparkSpec with DlvTestProps {
 
   test("MERGE-insert CDC carries the allocated identity values " +
     "(deletion-vector route)") { mergeInsertCdcIds(dv = true) }
+
+  test("MERGE insert CDC images carry the exact committed rows on an " +
+    "IDENTITY-FREE table with a nondeterministic insert value") {
+    val path = freshDir("mergepin")
+    DlvTable.create(spark, path, "id BIGINT, stamp DOUBLE", Nil,
+      Map(DlvDml.CDF_PROP -> "true"))
+    DlvTable.append(spark, path,
+      (0L until 5L).map(i => (i, 0.0)).toDF("id", "stamp"))
+    val src = Seq(10L, 11L, 12L).toDF("sid")
+    // rand() re-evaluates per scan: without the full pin the staged
+    // files and the CDC blob would each roll their own values
+    val v = DlvDml.merge(spark, path, src,
+      col("id") === col("sid"),
+      Seq(DlvDml.NotMatchedInsert(None, Map(
+        "id" -> col("sid"), "stamp" -> rand()))))
+    val table = DlvTable.toDF(spark, path)
+      .filter(col("id") >= 10L).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val feed = DlvChangeFeed.changes(spark, path, v, Some(v))
+      .filter(col("_change_type") === "insert").collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[Double]("stamp")).toMap
+    assert(table.keySet == Set(10L, 11L, 12L))
+    assert(feed == table,
+      s"the change feed must carry the committed values: " +
+        s"feed=$feed table=$table")
+  }
 }

@@ -10,7 +10,7 @@ import ObjectStoreClients._
   * [[ConditionalPutConformance.verify]] against a scratch prefix at
   * deploy time (the kit is raced against the same arbiter here and
   * in CommitStoreSpec). */
-class ObjectStoreClientsSpec extends AnyFunSuite {
+class ObjectStoreClientsSpec extends AnyFunSuite with DlvTestProps {
 
   test("splitUri: bucket + object key out of s3:// and gs:// forms") {
     assert(splitUri("s3://my-bucket/tbl/_dlv_log/00000000000000000042.json")
@@ -82,5 +82,60 @@ class ObjectStoreClientsSpec extends AnyFunSuite {
     assert(out == "bytes:k:3",
       s"dispatch must pick the (String, byte[]) overload, got $out")
     intercept[NoSuchMethodException](r.call(api, "put", "k"))
+  }
+
+  test("ensureAutoRegistered: no-SDK and opted-out calls do NOT " +
+    "latch; a later call with the SDK visible registers; a foreign " +
+    "registration is never displaced") {
+    // a loader that genuinely HAS the S3 probe class (compiled here —
+    // Class.forName verifies the name, so a stub must exist; the
+    // constructor-lazy wrappers never touch the rest until first use)
+    val stubRoot = java.nio.file.Files
+      .createTempDirectory("r17-fake-sdk-")
+    val src = stubRoot.resolve(
+      "software/amazon/awssdk/services/s3/S3Client.java")
+    java.nio.file.Files.createDirectories(src.getParent)
+    java.nio.file.Files.writeString(src,
+      "package software.amazon.awssdk.services.s3;\n" +
+        "public interface S3Client {}\n")
+    val javac = javax.tools.ToolProvider.getSystemJavaCompiler
+    assert(javac.run(null, null, null,
+      "-d", stubRoot.toString, src.toString) == 0)
+    val fakeLoader = new java.net.URLClassLoader(
+      Array(stubRoot.toUri.toURL), getClass.getClassLoader)
+    val prior = Seq("s3", "s3a", "gs")
+      .map(s => s -> ConditionalPut.clientFor(s))
+    ObjectStoreClients.resetAutoRegistration()
+    try {
+      Seq("s3", "s3a", "gs").foreach(ConditionalPut.unregister)
+      // opted out: returns nothing and latches nothing
+      withProps(ObjectStoreClients.AUTO_PROP -> "false") {
+        assert(ObjectStoreClients.ensureAutoRegistered() == Nil)
+      }
+      assert(ObjectStoreClients.settledSchemes.isEmpty,
+        "an opted-out call must not latch")
+      // SDK-less loader: returns nothing and latches nothing
+      assert(ObjectStoreClients.ensureAutoRegistered(
+        new java.net.URLClassLoader(Array.empty, null)) == Nil)
+      assert(ObjectStoreClients.settledSchemes.isEmpty,
+        "a call without the SDKs visible must not latch")
+      // a foreign registration settles its scheme without displacement
+      val mine = new InMemoryObjectStore
+      ConditionalPut.register("s3", mine)
+      val got = ObjectStoreClients.ensureAutoRegistered(fakeLoader)
+      assert(got == Seq("s3a"),
+        s"only the unclaimed scheme may register: $got")
+      assert(ConditionalPut.clientFor("s3").contains(mine),
+        "a pre-registered wrapper must never be displaced")
+      assert(ObjectStoreClients.settledSchemes == Set("s3", "s3a"))
+      // settled schemes stay settled: a repeat call registers nothing
+      assert(ObjectStoreClients.ensureAutoRegistered(fakeLoader) == Nil)
+    } finally {
+      ObjectStoreClients.resetAutoRegistration()
+      prior.foreach {
+        case (s, Some(c)) => ConditionalPut.register(s, c)
+        case (s, None) => ConditionalPut.unregister(s)
+      }
+    }
   }
 }

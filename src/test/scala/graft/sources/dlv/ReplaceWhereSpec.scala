@@ -147,4 +147,28 @@ class ReplaceWhereSpec extends SparkSpec with DlvTestProps {
       Seq((501L, 2, 1.0)).toDF("k", "part", "v")) // outside region
     tx2.commit(Nil, isBlindAppend = false) // must pass
   }
+
+  test("overwriteWhere CDC: insert images carry the computed " +
+    "generated-column values when the incoming frame omits them") {
+    val path = freshDir("owgen")
+    DlvTable.create(spark, path,
+      "id BIGINT, bucket BIGINT GENERATED ALWAYS AS (id % 10)",
+      Nil, Map(DlvDml.CDF_PROP -> "true"))
+    DlvTable.append(spark, path, (0L until 20L).toDF("id"))
+    // restate id < 5 with a frame that OMITS the generated column —
+    // stageFiles computes it; the feed must carry the same values
+    val v = DlvDml.overwriteWhere(spark, path,
+      Seq(101L, 102L, 103L).toDF("id"), lit(true))
+    val feed = DlvChangeFeed.changes(spark, path, v, Some(v))
+    val inserts = feed.filter(col("_change_type") === "insert")
+      .select("id", "bucket").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(inserts == Set((101L, 1L), (102L, 2L), (103L, 3L)),
+      s"insert images diverge from the committed rows: $inserts")
+    // and the table itself agrees with the feed
+    val tbl = DlvTable.toDF(spark, path)
+      .select("id", "bucket").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(tbl == Set((101L, 1L), (102L, 2L), (103L, 3L)))
+  }
 }

@@ -415,4 +415,51 @@ class DlvCatalogSpec extends SparkSpec {
       .map(_.getString(0)).toSet
     assert(ids == Set("order_999", "order_888"))
   }
+
+  test("dropArtifacts: removes the table's own data files and log, " +
+    "leaves unrelated files at the location") {
+    import spark.implicits._
+    val (_, path) = freshName("sweep")
+    DlvTable.create(spark, path, "id BIGINT, part INT", Seq("part"))
+    DlvTable.append(spark, path,
+      (0 until 20).map(i => (i.toLong, i % 2)).toDF("id", "part"))
+    // an unrelated user file at the same location must survive
+    val stray = java.nio.file.Paths.get(path, "README.txt")
+    java.nio.file.Files.createDirectories(stray.getParent)
+    java.nio.file.Files.writeString(stray, "not table data")
+    assert(DlvTable.isDlvTable(path))
+    DlvTable.dropArtifacts(path)
+    assert(!DlvTable.isDlvTable(path), "the log dir must be gone")
+    assert(java.nio.file.Files.exists(stray),
+      "unrelated files must survive the sweep")
+    val survivors = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala
+          .filter(java.nio.file.Files.isRegularFile(_))
+          .map(_.getFileName.toString).toList
+      } finally s.close()
+    }
+    assert(survivors.forall(!_.endsWith(".parquet")),
+      s"data files must be gone: $survivors")
+    // idempotent / safe on a non-table location
+    DlvTable.dropArtifacts(path)
+  }
+
+  test("registry-using gates restore the session metastore conf " +
+    "(no leak into later gates on the shared bench session)") {
+    val sentinel = freshName("sentinel")._2 + "/meta.json"
+    val prev = spark.conf.getOption(DlvRegistry.METASTORE_CONF)
+    spark.conf.set(DlvRegistry.METASTORE_CONF, sentinel)
+    try {
+      val out = graft.SparkEntry.queries("dlv_ctas")(spark, sf)
+      assert(out.count() > 0)
+      assert(spark.conf.get(DlvRegistry.METASTORE_CONF) == sentinel,
+        "dlv_ctas leaked its temp metastore into the session")
+    } finally prev match {
+      case Some(v) => spark.conf.set(DlvRegistry.METASTORE_CONF, v)
+      case None => spark.conf.unset(DlvRegistry.METASTORE_CONF)
+    }
+  }
 }

@@ -438,4 +438,34 @@ class DlvV2CatalogSpec extends SparkSpec {
     assert(cat.table("v2cat_plain_parquet").count() == 2L)
     cat.sql("DROP TABLE v2cat_plain_parquet")
   }
+
+  test("staging catalog: REPLACE TABLE on a missing stock table " +
+    "throws NoSuchTableException instead of creating it") {
+    import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
+    // drive the staging API directly: Spark's SQL dispatch refuses
+    // V1-provider REPLACE before reaching the catalog, but other
+    // entry points (DataFrameWriterV2 createOrReplace plumbing,
+    // programmatic catalogs) land here
+    // the catalog manager (and DlvCatalog itself) resolve through
+    // the ACTIVE session — make `cat` active on this thread
+    SparkSession.setActiveSession(cat)
+    try {
+      val c = cat.sessionState.catalogManager.catalog("spark_catalog")
+        .asInstanceOf[graft.sources.dlv.catalog.DlvCatalog]
+      import org.apache.spark.sql.connector.catalog.{Column, Identifier, TableCatalog, TableInfo}
+      import org.apache.spark.sql.connector.expressions.Transform
+      import org.apache.spark.sql.types.IntegerType
+      val ident = Identifier.of(Array("default"), "r18_missing_stock")
+      val props = new java.util.HashMap[String, String]()
+      props.put(TableCatalog.PROP_PROVIDER, "parquet")
+      val info = new TableInfo.Builder()
+        .withColumns(Array(Column.create("id", IntegerType)))
+        .withPartitions(Array.empty[Transform])
+        .withProperties(props)
+        .build()
+      intercept[NoSuchTableException] { c.stageReplace(ident, info) }
+      assert(!cat.catalog.tableExists("r18_missing_stock"),
+        "REPLACE of a missing table must not silently CREATE it")
+    } finally SparkSession.setActiveSession(spark)
+  }
 }

@@ -115,4 +115,44 @@ class RegistryRaceSpec extends SparkSpec {
       assert(DlvRegistry.lookup(spark, "old2").isEmpty)
     }
   }
+
+  test("registry: scheme-qualified locations register verbatim, " +
+    "local paths still normalize") {
+    withTempStore {
+      DlvRegistry.register(spark, "r18_remote", "s3://bucket/wh/orders")
+      assert(DlvRegistry.lookup(spark, "r18_remote")
+        .contains("s3://bucket/wh/orders"),
+        "a URI location must not be mangled through java.nio")
+      assert(DlvRegistry.registerNew(
+        spark, "r18_remote2", "hdfs://nn:8020/wh/t"))
+      assert(DlvRegistry.lookup(spark, "r18_remote2")
+        .contains("hdfs://nn:8020/wh/t"))
+      // scheme-less paths keep absolute-normalizing (relative refs
+      // must not depend on the process working dir)
+      DlvRegistry.register(spark, "r18_local", "rel/dir/../t")
+      val got = DlvRegistry.lookup(spark, "r18_local").get
+      assert(got.startsWith("/") && got.endsWith("/rel/t"), got)
+    }
+  }
+
+  test("registry: a name dropped while a legacy whole-map file is " +
+    "present does not resurrect from it") {
+    withTempStore {
+      // seed per-name entries (migration already happened)…
+      DlvRegistry.register(spark, "r18_keep", "/data/keep")
+      DlvRegistry.register(spark, "r18_gone", "/data/gone")
+      // …then simulate a FAILED legacy delete: the whole-map file
+      // reappears holding both names
+      val store = java.nio.file.Paths.get(
+        spark.conf.get(DlvRegistry.METASTORE_CONF))
+      java.nio.file.Files.writeString(store,
+        """{"r18_keep":"/data/keep","r18_gone":"/data/stale"}""")
+      assert(DlvRegistry.drop(spark, "r18_gone"))
+      assert(DlvRegistry.lookup(spark, "r18_gone").isEmpty,
+        "dropped name resurrected from the stale legacy file")
+      assert(DlvRegistry.lookup(spark, "r18_keep")
+        .contains("/data/keep"))
+      assert(!DlvRegistry.list(spark).exists(_._1 == "r18_gone"))
+    }
+  }
 }
