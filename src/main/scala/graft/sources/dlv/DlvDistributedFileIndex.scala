@@ -147,56 +147,25 @@ final class DlvDistributedFileIndex private (
   def liveFilesDS: Dataset[AddFile] = liveFiles
 
   /** Live deletion-vector summary — (distinct sidecar rel paths,
-    * total dead rows) — as ONE aggregation over the distributed
-    * state; only sidecar PATH strings land on the driver (bounded by
-    * DV-writing commits, not files). Consulted only when the table's
-    * DV property is on, so plain tables never pay the job. */
-  def dvSummary: (Seq[String], Long) = {
-    val (s, c, _, _) = dvSplitSummary
-    (s, c)
-  }
-
-  /** [[dvSummary]] plus the counts of vector-FREE and vector-BEARING
-    * live files, in the same single aggregation — the split read plan
-    * skips its plain branch entirely when every live file bears a
-    * vector, and sizes the per-file reader-filter map off the bearing
-    * count. */
-  private[dlv] def dvSplitSummary: (Seq[String], Long, Long, Long) = {
+    * total dead rows, vector-FREE live files) — as ONE aggregation
+    * over the distributed state; only sidecar PATH strings land on the
+    * driver (bounded by DV-writing commits, not files). The split read
+    * plan skips its plain branch entirely when every live file bears a
+    * vector. Consulted only when the table's DV property is on, so
+    * plain tables never pay the job. */
+  private[dlv] def dvSplitSummary: (Seq[String], Long, Long) = {
     import org.apache.spark.sql.functions._
     val r = liveFiles
       .agg(
         coalesce(sum(col("dv.cardinality")), lit(0L)),
         coalesce(array_distinct(flatten(collect_list(col("dv.paths")))),
           array().cast("array<string>")),
-        sum(when(col("dv").isNull, 1L).otherwise(0L)),
-        sum(when(col("dv").isNull, 0L).otherwise(1L)))
+        sum(when(col("dv").isNull, 1L).otherwise(0L)))
       .head()
     (Option(r.getSeq[String](1)).map(_.toSeq).getOrElse(Nil).sorted,
       r.getLong(0),
-      if (r.isNullAt(2)) 0L else r.getLong(2),
-      if (r.isNullAt(3)) 0L else r.getLong(3))
+      if (r.isNullAt(2)) 0L else r.getLong(2))
   }
-
-  /** The per-file `encoded path → its vector's sidecar dirs` map the
-    * reader filter broadcasts ([[DvFileMap]]) — collected as a SLIM
-    * two-column projection (never whole AddFiles with stats), and only
-    * up to [[DlvDv.fileMapLimit]] bearing files; above it, None (the
-    * filter falls back to the all-dirs lookup, keeping driver memory
-    * out of the failure domain at any scale). */
-  private[dlv] def dvFileDirs(
-      dvFileCount: Long): Option[Map[String, Seq[String]]] =
-    if (dvFileCount > DlvDv.fileMapLimit) None
-    else {
-      import org.apache.spark.sql.functions.col
-      Some(liveFiles
-        .filter(col("dv").isNotNull)
-        .select(col("path"), col("dv.paths"))
-        .collect()
-        .iterator
-        .map(r => DlvDv.keyOf(log, r.getString(0)) ->
-          r.getSeq[String](1).map(log.resolve).toSeq)
-        .toMap)
-    }
 
   // ---- pruning ------------------------------------------------------
 
@@ -244,7 +213,7 @@ final class DlvDistributedFileIndex private (
     // idempotent and cheap at survivor scale.
     val (dirs, (_, afterPart, afterStats)) = DlvFileIndex.pruneAndGroup(
       survivors, partitionFilters0, dataFilters, partitionSchema,
-      statsSkipping, absolute)
+      statsSkipping, log)
     // total from the accumulator (best-effort: task retries can
     // overcount; observability only)
     DlvFileIndex.lastSkippingStats.set(

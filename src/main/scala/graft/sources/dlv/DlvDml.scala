@@ -76,12 +76,10 @@ object DlvDml {
       * (file identity for DV-aware discovery). */
     def scanPlan: DataFrame
     /** Live deletion-vector summary: (sidecar rel paths, total dead
-      * rows). Only consulted when [[dvActive]]. */
+      * rows) — all a DV read needs, since each file's own sidecar
+      * dirs ride on its scan row ([[DlvParquetFileFormat]]). Only
+      * consulted when [[dvActive]]. */
     def dvSidecars: (Seq[String], Long)
-    /** Per-file sidecar-dir map thunk for the reader-filter path —
-      * evaluated only past the broadcast limit ([[DlvDv.DvFileMap]]).
-      * None = fall back to the all-dirs lookup. */
-    def dvFileDirs: () => Option[Map[String, Seq[String]]]
     /** Must reads through this state consider vectors? Property OR
       * protocol witness — never the property alone (UNSET must not
       * resurrect rows). */
@@ -129,8 +127,6 @@ object DlvDml {
     def dvSidecars: (Seq[String], Long) =
       (DlvDv.sidecarsOf(snap.files),
         snap.files.flatMap(_.dv).map(_.cardinality).sum)
-    def dvFileDirs: () => Option[Map[String, Seq[String]]] =
-      () => Some(DlvDv.fileDirMap(l, snap.files))
     def dvActive: Boolean = snap.files.exists(_.dv.nonEmpty)
     protected def liveByPath(paths: Set[String]): Seq[AddFile] =
       snap.files.filter(f => paths(f.path))
@@ -159,9 +155,10 @@ object DlvDml {
     def scanPlan: DataFrame = org.apache.spark.sql.graft.GraftInternal
       .ofRows(spark, org.apache.spark.sql.execution.datasources
         .LogicalRelation(DlvTable.relationForIndex(spark, idx)))
-    def dvSidecars: (Seq[String], Long) = idx.dvSummary
-    def dvFileDirs: () => Option[Map[String, Seq[String]]] =
-      () => idx.dvFileDirs(idx.dvSplitSummary._4)
+    def dvSidecars: (Seq[String], Long) = {
+      val (sidecars, card, _) = idx.dvSplitSummary
+      (sidecars, card)
+    }
     def dvActive: Boolean = DlvDv.active(idx.metadata, idx.protocol)
     protected def liveByPath(paths: Set[String]): Seq[AddFile] =
       idx.collectAddFiles(paths = Some(paths))
@@ -273,7 +270,7 @@ object DlvDml {
         st.scanPlan.withColumn("__file", col("_metadata.file_path")),
         st.metadata.schema.map(f => col(DlvColMap.physicalOf(
           st.metadata, f.name)).as(f.name)) :+ col("__file"),
-        sidecars, card, st.dvFileDirs)
+        sidecars, card)
     }
 
   /** Files whose rows can satisfy `cond`, discovered via a pruned scan
@@ -1228,8 +1225,7 @@ object DlvDml {
     val raw =
       if (sidecars.isEmpty) raw0
       else DlvDv.antiJoinDead(spark, l, raw0, sidecars,
-        files.flatMap(_.dv).map(_.cardinality).sum,
-        () => Some(DlvDv.fileDirMap(l, files)))
+        files.flatMap(_.dv).map(_.cardinality).sum)
     raw.select(meta.schema.fieldNames.map(col).toSeq ++
       (if (keepFileKey) Seq(col("__dv_fp").as("__src_file")) else Nil): _*)
   }
@@ -1261,8 +1257,8 @@ object DlvDml {
 
   /** One logical scan of the given table files through a
     * [[KnownFilesIndex]], with (when `withRowId`) the
-    * `__dv_fp`/`__dv_ri` row-identity columns materialized on the file
-    * relation itself, because `_metadata` does not resolve above one.
+    * [[DlvDv.withRowId]] columns materialized on the file relation
+    * itself, because `_metadata` does not resolve above one.
     * Table-local and external (shallow-clone) files plan alike: sizes
     * come from the AddFiles and partition values from
     * `AddFile.partitionValues`, so planning lists, HEADs and reads no
@@ -1287,19 +1283,13 @@ object DlvDml {
         partitionSchema = partitionSchema,
         dataSchema = StructType(dataFields),
         bucketSpec = None,
-        fileFormat = new org.apache.spark.sql.execution.datasources
-          .parquet.ParquetFileFormat(),
+        fileFormat = new DlvParquetFileFormat,
         options = Map.empty)(
         spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
     val raw = org.apache.spark.sql.graft.GraftInternal.ofRows(spark,
       org.apache.spark.sql.execution.datasources.LogicalRelation(rel))
-    val scanned =
-      if (!withRowId) raw
-      else raw
-        .withColumn("__dv_fp",
-          DlvDv.relFileExpr(l, col("_metadata.file_path")))
-        .withColumn("__dv_ri", col("_metadata.row_index"))
-    DlvColMap.toLogical(scanned, meta)
+    DlvColMap.toLogical(if (withRowId) DlvDv.withRowId(l, raw) else raw,
+      meta)
   }
 }
 
@@ -1329,5 +1319,5 @@ private[dlv] final class KnownFilesIndex(
       : Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory] =
     DlvFileIndex.pruneAndGroup(
       files, partitionFilters, dataFilters, partitionSchema,
-      statsSkipping = false, l.resolveQualified)._1
+      statsSkipping = false, l)._1
 }

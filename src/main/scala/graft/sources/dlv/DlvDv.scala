@@ -92,27 +92,6 @@ object DlvDv {
     sys.props.get("graft.dlv.dvCompactThreshold")
       .map(_.toInt).getOrElse(4)
 
-  /** Max DV-BEARING file count for which the per-file reader filter
-    * ships an exact `file → its vector's sidecar dirs` broadcast map
-    * ([[DvFileMap]]) — each file's dead-set load then touches at most
-    * [[compactThreshold]] dirs regardless of total table sidecar
-    * count. Above it (map would rival the dead set it replaces), the
-    * filter falls back to the all-dirs lookup whose per-file cost
-    * grows with live sidecar count but whose memory stays O(1). */
-  private[dlv] def fileMapLimit: Long =
-    sys.props.get("graft.dlv.dvFileMapLimit")
-      .map(_.toLong).getOrElse(4000000L)
-
-  /** vector key → absolute io-native sidecar dirs, from
-    * driver-resident AddFiles — the exact per-file lookup
-    * [[DvFileMap]] broadcasts. */
-  private[dlv] def fileDirMap(
-      l: DlvLog, files: Seq[AddFile]): Map[String, Seq[String]] =
-    files.iterator
-      .filter(_.dv.nonEmpty)
-      .map(f => keyOf(l, f.path) -> f.dv.get.paths.map(l.resolve))
-      .toMap
-
   /** Sidecar parquet rows per written part-file — sizes the coalesce
     * on sidecar writes so object count tracks DEAD ROWS, not the scan
     * parallelism that produced them (a sparse delete under 32 shuffle
@@ -168,33 +147,36 @@ object DlvDv {
     filterDeletedBy(spark, l, plan,
       meta.schema.map(f => col(DlvColMap.physicalOf(meta, f.name))
         .as(f.name)),
-      sidecarsOf(files), files.flatMap(_.dv).map(_.cardinality).sum,
-      () => Some(fileDirMap(l, files)))
+      sidecarsOf(files), files.flatMap(_.dv).map(_.cardinality).sum)
 
   /** Same, parameterized by sidecar list + total cardinality (the
     * distributed index summarizes without collecting its AddFiles)
     * and by an arbitrary output projection (DV-aware discovery keeps
-    * a file-identity column beside the schema). `fileDirs` supplies
-    * the per-file sidecar-dir map for the reader-filter path — a
-    * THUNK, evaluated only past [[broadcastLimit]] (the driver paths
-    * hand it for free; the distributed index collects a slim
-    * projection, or None past [[fileMapLimit]]). */
+    * a file-identity column beside the schema). The reader-filter
+    * route needs nothing more: each file's sidecar dirs ride on its
+    * own scan row ([[DlvParquetFileFormat]]). */
   def filterDeletedBy(
       spark: SparkSession, l: DlvLog, plan: DataFrame,
       cols: Seq[Column], sidecars: Seq[String],
-      cardinality: Long,
-      fileDirs: () => Option[Map[String, Seq[String]]]): DataFrame = {
-    if (sidecars.isEmpty) return plan.select(cols: _*)
-    val planId = plan
-      .withColumn("__dv_fp",
-        relFileExpr(l, col("_metadata.file_path")))
-      .withColumn("__dv_ri", col("_metadata.row_index"))
-    antiJoinDead(spark, l, planId, sidecars, cardinality, fileDirs)
+      cardinality: Long): DataFrame =
+    if (sidecars.isEmpty) plan.select(cols: _*)
+    else antiJoinDead(spark, l, withRowId(l, plan), sidecars, cardinality)
       .select(cols: _*)
-  }
 
-  /** Dead-row subtraction over a plan already carrying
-    * `__dv_fp`/`__dv_ri`, by dead-set size:
+  /** `scan` — a file relation, where `_metadata` still resolves — plus
+    * the row-identity columns the dead-row subtraction reads: the
+    * vector key `__dv_fp`, the row index `__dv_ri`, and the file's
+    * sidecar dirs `__dv_dirs`. */
+  private[dlv] def withRowId(l: DlvLog, scan: DataFrame): DataFrame =
+    scan
+      .withColumn("__dv_fp", relFileExpr(l, col("_metadata.file_path")))
+      .withColumn("__dv_ri", col("_metadata.row_index"))
+      .withColumn("__dv_dirs",
+        col(s"_metadata.${DlvParquetFileFormat.DV_DIRS}"))
+
+  /** Dead-row subtraction over a plan carrying [[withRowId]]'s
+    * columns, by dead-set size (`__dv_dirs` is dropped from the
+    * output):
     *
     *   - at or below [[broadcastLimit]]: broadcast ANTI-join on the
     *     union of sidecars (codegen'd, predicates push past it —
@@ -207,13 +189,12 @@ object DlvDv {
     *     ([[DvAliveExpr]]) — a filter directly over the scan, NO join
     *     and NO shuffle at any dead-set size (the pre-r15 fallback
     *     shuffled every scanned row); each file's dead-set load
-    *     touches only its OWN vector's dirs via the broadcast
-    *     [[DvFileMap]] when `fileDirs` yields one. */
+    *     touches only its OWN vector's dirs, read from the row's
+    *     `__dv_dirs`. */
   private[dlv] def antiJoinDead(
       spark: SparkSession, l: DlvLog, planId: DataFrame,
-      sidecars: Seq[String], cardinality: Long,
-      fileDirs: () => Option[Map[String, Seq[String]]]): DataFrame =
-    if (cardinality <= broadcastLimit) {
+      sidecars: Seq[String], cardinality: Long): DataFrame =
+    (if (cardinality <= broadcastLimit) {
       val dead = broadcast(spark.read.schema(SIDECAR_SCHEMA)
         .parquet(sidecars.map(l.resolveQualified): _*))
       planId.join(dead,
@@ -222,17 +203,11 @@ object DlvDv {
         "left_anti")
     } else {
       import org.apache.spark.sql.graft.GraftInternal
-      // io-NATIVE absolute dirs (not percent-encoded URIs): the
-      // expression lists and opens them through the same DlvIo
-      val lookup = fileDirs() match {
-        case Some(m) => DvFileMap(spark.sparkContext.broadcast(m))
-        case None => DvAllSidecars(sidecars.map(l.resolve))
-      }
       planId.filter(GraftInternal.column(DvAliveExpr(
         GraftInternal.expr(planId("__dv_fp")),
         GraftInternal.expr(planId("__dv_ri")),
-        lookup, l.io)))
-    }
+        GraftInternal.expr(planId("__dv_dirs")), l.io)))
+    }).drop("__dv_dirs")
 
   /** The shared mark-dead machinery behind DV DELETE, DV UPDATE and
     * DV MERGE: scan `touchedAdds` with row identity, existing vector
@@ -260,10 +235,9 @@ object DlvDv {
       withRowId = true)
     val live = {
       val sidecars = sidecarsOf(touchedAdds)
-      if (sidecars.isEmpty) withId
+      if (sidecars.isEmpty) withId.drop("__dv_dirs")
       else antiJoinDead(spark, l, withId, sidecars,
-        touchedAdds.flatMap(_.dv).map(_.cardinality).sum,
-        () => Some(fileDirMap(l, touchedAdds)))
+        touchedAdds.flatMap(_.dv).map(_.cardinality).sum)
     }
     val matched = mark(live).persist()
     try {

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BoundReference, Expression, Literal, Predicate => CatalystPredicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.json4s._
@@ -123,7 +123,7 @@ final class DlvFileIndex(
       spark, snapshot.metadata, dataFilters, partitionSchema)
     val (dirs, counts) = DlvFileIndex.pruneAndGroup(
       snapshot.files, partitionFilters ++ derived, dataFilters,
-      partitionSchema, statsSkipping, absolute)
+      partitionSchema, statsSkipping, log)
     DlvFileIndex.lastSkippingStats.set(counts)
     dirs
   }
@@ -163,15 +163,17 @@ object DlvFileIndex {
   /** The full pruning pipeline over an in-memory file list: partition
     * pruning, then stats skipping, grouped into [[PartitionDirectory]]s.
     * Returns (directories, (total, afterPartition, afterStats)). Shared
-    * by [[DlvFileIndex]] (whole snapshot) and the distributed index
-    * (pre-pruned survivors). */
+    * by [[DlvFileIndex]] (whole snapshot), the distributed index
+    * (pre-pruned survivors) and [[KnownFilesIndex]] (given files).
+    * Each file carries its vector's sidecar dirs
+    * ([[DlvParquetFileFormat.metadataOf]]). */
   private[dlv] def pruneAndGroup(
       files: Seq[AddFile],
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression],
       partitionSchema: StructType,
       statsSkipping: Boolean,
-      absolute: String => String)
+      l: DlvLog)
       : (Seq[PartitionDirectory], (Int, Int, Int)) = {
     val partPruned =
       boundPartitionPredicate(partitionFilters, partitionSchema) match {
@@ -189,9 +191,11 @@ object DlvFileIndex {
       case (_, fs) =>
         val row = partitionValueRow(fs.head, partitionSchema)
         val statuses = fs.map { f =>
-          new FileStatus(f.size, false, 1, 128L << 20,
-            f.modificationTime, new HPath(absolute(f.path)))
-        }.toArray
+          FileStatusWithMetadata(
+            new FileStatus(f.size, false, 1, 128L << 20,
+              f.modificationTime, new HPath(l.resolveQualified(f.path))),
+            DlvParquetFileFormat.metadataOf(l, f))
+        }
         PartitionDirectory(row, statuses)
     }
     (dirs, (files.size, partPruned.size, statsPruned.size))

@@ -183,7 +183,7 @@ object DlvMaintenance {
         // only crash orphans — swept with an empty referenced set
         val dvSweptD = sweepDvSidecars(l,
           if (DlvDv.active(idx.metadata, idx.protocol))
-            idx.dvSummary._1.toSet
+            idx.dvSplitSummary._1.toSet
           else Set.empty,
           cutoff, dryRun)
         val (del, kept, strandedD) = vacuumDistributed(

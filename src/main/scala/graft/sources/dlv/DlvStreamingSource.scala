@@ -359,7 +359,7 @@ class DlvStreamSourceProvider
     val hasDv = rel.location match {
       case i: DlvFileIndex => i.snapshot.files.exists(_.dv.nonEmpty)
       case i: DlvDistributedFileIndex =>
-        DlvDv.active(i.metadata, i.protocol) && i.dvSummary._1.nonEmpty
+        DlvDv.active(i.metadata, i.protocol) && i.dvSplitSummary._1.nonEmpty
       case _ => false
     }
     require(!hasDv,

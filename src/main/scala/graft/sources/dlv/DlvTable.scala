@@ -2,7 +2,6 @@ package graft.sources.dlv
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{coalesce, col, lit, to_json}
 import org.apache.spark.sql.graft.GraftInternal
 import scala.jdk.CollectionConverters._
@@ -958,7 +957,7 @@ object DlvTable {
       // dfForIndex/dfForSnapshot project back to logical just above
       dataSchema = DlvColMap.physicalDataSchema(index.metadata),
       bucketSpec = None,
-      fileFormat = new ParquetFileFormat(),
+      fileFormat = new DlvParquetFileFormat,
       options = Map.empty)(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
 
@@ -984,12 +983,11 @@ object DlvTable {
     if (!DlvDv.active(index.metadata, index.protocol))
       planOf(index).select(cols: _*)
     else {
-      val (sidecars, card, plainFiles, dvFiles) = index.dvSplitSummary
+      val (sidecars, card, plainFiles) = index.dvSplitSummary
       if (sidecars.isEmpty) planOf(index).select(cols: _*)
       else {
         val dvPlan = DlvDv.filterDeletedBy(spark, index.dlvLog,
-          planOf(index.restrictedToDv(true)), cols, sidecars, card,
-          () => index.dvFileDirs(dvFiles))
+          planOf(index.restrictedToDv(true)), cols, sidecars, card)
         if (plainFiles == 0L) dvPlan
         else planOf(index.restrictedToDv(false))
           .select(cols: _*).union(dvPlan)
@@ -1008,7 +1006,7 @@ object DlvTable {
       partitionSchema = snap.metadata.partitionSchema,
       dataSchema = DlvColMap.physicalDataSchema(snap.metadata),
       bucketSpec = None,
-      fileFormat = new ParquetFileFormat(),
+      fileFormat = new DlvParquetFileFormat,
       options = Map.empty)(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
   }

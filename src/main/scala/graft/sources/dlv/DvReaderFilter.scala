@@ -6,46 +6,51 @@ import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.io.api.Binary
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, FileSourceConstantMetadataStructField}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType, StructField}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Which sidecar dirs hold a given file's dead rows — the task-side
-  * lookup behind [[DvAliveExpr]].
-  *
-  *   - [[DvFileMap]]: a broadcast `encoded file → its own vector's
-  *     dirs` map, built from the AddFiles' `dv.paths`. Each file's
-  *     load touches AT MOST [[DlvDv.compactThreshold]] dirs, no
-  *     matter how many sidecars the TABLE accumulates — the shape a
-  *     daily-delete 100 TB table needs (the union-of-all-dirs form
-  *     pays one LIST + one footer read per live sidecar dir per file
-  *     per task). Map size tracks DV-BEARING FILE COUNT (paths +
-  *     ≤ threshold dir refs each), roughly two orders below the dead
-  *     set itself; [[DlvDv.fileMapLimit]] guards the collect.
-  *   - [[DvAllSidecars]]: every live sidecar dir — the fallback past
-  *     the map limit. Correct at any scale (a file's rows appear only
-  *     in dirs its vector references, and membership is what's
-  *     probed); the per-task dir-listing cache in [[DvAliveExpr]]
-  *     keeps repeat LISTs out, footer reads remain per (file, dir).
-  */
-private[dlv] sealed trait DvSidecarLookup extends Serializable {
-  /** Absolute io-native dirs that may hold `encodedFile`'s dead rows. */
-  def dirsOf(encodedFile: String): Seq[String]
+/** The dlv scan's file format: stock parquet plus one file-constant
+  * `_metadata` field, [[DlvParquetFileFormat.DV_DIRS]] — the io-native
+  * sidecar dirs of the file's deletion vector, empty for a vector-free
+  * file (never null, like every other `_metadata` field, which
+  * [[graft.sources.dlv.sql.DlvMetadataOnlyCountRule]] relies on).
+  * [[DlvFileIndex.pruneAndGroup]] attaches the value to each
+  * file's `FileStatusWithMetadata`; Spark carries it on the
+  * `PartitionedFile` and surfaces it as a literal, so [[DvAliveExpr]]
+  * reads a file's dirs from its own row — the way delta's reader gets
+  * each file's vector descriptor with the file itself. */
+private[dlv] class DlvParquetFileFormat extends ParquetFileFormat {
+  import DlvParquetFileFormat.DV_DIRS
+  override def metadataSchemaFields: Seq[StructField] =
+    super.metadataSchemaFields :+ FileSourceConstantMetadataStructField(
+      DV_DIRS, StringType, nullable = false)
+  // a vector-free file carries no value and reads as ""
+  override def fileConstantMetadataExtractors
+      : Map[String, PartitionedFile => Any] =
+    super.fileConstantMetadataExtractors + (DV_DIRS ->
+      ((f: PartitionedFile) =>
+        f.otherConstantMetadataColumnValues.getOrElse(DV_DIRS, "")))
 }
 
-private[dlv] case class DvFileMap(
-    bc: Broadcast[Map[String, Seq[String]]]) extends DvSidecarLookup {
-  // absent file = bears no vector = nothing dead
-  override def dirsOf(encodedFile: String): Seq[String] =
-    bc.value.getOrElse(encodedFile, Nil)
-}
+private[dlv] object DlvParquetFileFormat {
+  val DV_DIRS = "dv_dirs"
 
-private[dlv] case class DvAllSidecars(dirs: Seq[String])
-  extends DvSidecarLookup {
-  override def dirsOf(encodedFile: String): Seq[String] = dirs
+  /** `f`'s metadata values: its vector's sidecar dirs, io-native (not
+    * percent-encoded URIs: the expression lists and opens them through
+    * the same [[DlvIo]]) and joined by NUL, which no filesystem admits
+    * in a path (Spark refuses a non-atomic metadata field); none
+    * without a vector. */
+  def metadataOf(l: DlvLog, f: AddFile): Map[String, Any] =
+    f.dv.fold(Map.empty[String, Any])(dv =>
+      Map(DV_DIRS -> dv.paths.map(l.resolve).mkString("\u0000")))
+
+  def dirsOf(v: UTF8String): Array[String] =
+    if (v.numBytes == 0) Array.empty else v.toString.split('\u0000')
 }
 
 /** Per-file deletion-vector application at the READER — the scale path
@@ -59,7 +64,8 @@ private[dlv] case class DvAllSidecars(dirs: Seq[String])
   * scan. Each task loads the dead row-set of the file it is currently
   * reading (scan output arrives file-grouped, so a single-slot cache
   * is one load per file per task, bounded memory) from the sidecar
-  * dirs [[DvSidecarLookup]] names for it, reading each part THROUGH a
+  * dirs of its own vector, which its `_metadata` row carries
+  * ([[DlvParquetFileFormat]]), reading each part THROUGH a
   * `dv_file` filter — sidecars are written sorted by
   * `(dv_file, dv_row)` ([[DlvDv]]), so parquet row-group stats prune
   * the read to ~the file's own dead rows, and per-file dir count is
@@ -84,16 +90,16 @@ private[dlv] case class DvAllSidecars(dirs: Seq[String])
   * row-accounting.
   */
 private[dlv] case class DvAliveExpr(
-    file: Expression, row: Expression,
-    lookup: DvSidecarLookup, io: DlvIo)
+    file: Expression, row: Expression, dirs: Expression, io: DlvIo)
   extends Expression with CodegenFallback {
 
-  override def children: Seq[Expression] = Seq(file, row)
+  override def children: Seq[Expression] = Seq(file, row, dirs)
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = false
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(file = newChildren(0), row = newChildren(1))
+    copy(file = newChildren(0), row = newChildren(1),
+      dirs = newChildren(2))
 
   // single-slot per-task cache: scan output is file-grouped, so this
   // is one sidecar load per (task, file) with O(one file's dead rows)
@@ -104,8 +110,9 @@ private[dlv] case class DvAliveExpr(
   @transient private var curFile: UTF8String = _
   @transient private var curDead: Array[Long] = _
   // dir listings are immutable for the life of the plan (sidecars are
-  // write-once; removal is a VACUUM past retention) — cache per task
-  // so the all-dirs fallback pays one LIST per dir, not one per file
+  // write-once; removal is a VACUUM past retention) — cache per task:
+  // one DV commit's sidecar covers every file it touched, so files of
+  // one task share dirs and pay one LIST per dir, not one per file
   @transient private lazy val listings =
     new java.util.HashMap[String, Array[String]]()
 
@@ -114,7 +121,8 @@ private[dlv] case class DvAliveExpr(
     val r = row.eval(input).asInstanceOf[Long]
     if (curFile == null || !curFile.equals(f)) {
       curFile = f.clone()
-      curDead = loadDead(curFile.toString)
+      curDead = loadDead(curFile.toString, DlvParquetFileFormat
+        .dirsOf(dirs.eval(input).asInstanceOf[UTF8String]))
     }
     java.util.Arrays.binarySearch(curDead, r) < 0
   }
@@ -130,18 +138,19 @@ private[dlv] case class DvAliveExpr(
     parts
   }
 
-  /** All dead row indexes of `encodedFile` across the sidecar dirs its
-    * lookup names, sorted. Reads each sidecar part through a
+  /** All dead row indexes of `encodedFile` across its vector's
+    * `sidecarDirs`, sorted. Reads each sidecar part through a
     * `dv_file ==` filter — row-group pruned via the write-side sort.
     * Duplicates across sidecars (a compaction's copy beside a
     * still-live original) are harmless for membership and removed by
     * the sort-dedup. */
-  private def loadDead(encodedFile: String): Array[Long] = {
+  private def loadDead(
+      encodedFile: String, sidecarDirs: Array[String]): Array[Long] = {
     val pred = FilterCompat.get(FilterApi.eq(
       FilterApi.binaryColumn(DlvDv.FILE_COL),
       Binary.fromString(encodedFile)))
     val buf = scala.collection.mutable.ArrayBuilder.make[Long]
-    lookup.dirsOf(encodedFile).foreach { dir =>
+    sidecarDirs.foreach { dir =>
       partsOf(dir).foreach { part =>
         val reader = ParquetReader
           .builder(new GroupReadSupport(), new HPath(part))

@@ -121,7 +121,9 @@ case class DlvMetadataOnlyCountRule(spark: SparkSession)
     *     here); its aliases extend the environment the conditions
     *     above it resolve through;
     *   - the per-file reader filter — every conjunct a [[DvAliveExpr]]
-    *     (module-constructed only: the class is `private[dlv]`) or an
+    *     (module-constructed only: the class is `private[dlv]`; it
+    *     reads each file's sidecar dirs from the row's own
+    *     `_metadata`, so it removes exactly that file's vector) or an
     *     IsNotNull that RESOLVES, through the alias environment, to a
     *     provably-non-null `_metadata` probe shape ([[metadataProbe]]
     *     — never a NAME test: a user column or user alias spelled
@@ -188,7 +190,8 @@ case class DlvMetadataOnlyCountRule(spark: SparkSession)
 
   /** Provably row-preserving-under-IsNotNull probe: built ONLY from
     * file-source `_metadata` struct fields — non-null at runtime for
-    * every scanned row — via null-preserving extraction / literal-
+    * every scanned row (dlv's own `dv_dirs` field too: "" for a
+    * vector-free file) — via null-preserving extraction / literal-
     * bound substring. Exactly the shapes `DlvDv.filterDeletedBy`
     * generates (`__dv_fp` = substr of file_path, `__dv_ri` =
     * row_index); anything else — a user column, a user alias over a

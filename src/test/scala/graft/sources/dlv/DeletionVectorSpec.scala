@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Deletion vectors: soft-delete semantics equal rewrite semantics at
   * every observation point — content, counts, time travel, RESTORE,
   * CDF, OPTIMIZE — while the data files provably never rewrite. */
-class DeletionVectorSpec extends SparkSpec with DlvTestProps {
+class DeletionVectorSpec extends SparkSpec with DlvTestProps
+    with JobProbe {
 
   private def freshDir(name: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(s"dlv-$name-")
@@ -509,7 +510,7 @@ class DeletionVectorSpec extends SparkSpec with DlvTestProps {
       val idx = DlvDistributedFileIndex.forVersion(
         spark, l, None, statsSkipping = true)
       assert(idx.isDefined, "index must resolve past forced thresholds")
-      val (sidecars, card) = idx.get.dvSummary
+      val (sidecars, card, _) = idx.get.dvSplitSummary
       assert(sidecars.nonEmpty && card == rows0.count(_._1 % 5 == 2),
         s"checkpointed vector summary wrong: $sidecars / $card")
       assert(content(path) == live1)
@@ -527,18 +528,91 @@ class DeletionVectorSpec extends SparkSpec with DlvTestProps {
     }
   }
 
-  test("reader-filter all-dirs fallback (file-map limit forced to 0) " +
-    "reads identically to the map path and the broadcast path") {
+  test("reader-filter route (broadcast limit forced to 0) reads two " +
+    "deletes' vectors identically to the broadcast route") {
     val (path, rows) = mk("dv-alldirs")
     DlvDml.delete(spark, path, col("id") % 7 === 3)
     DlvDml.delete(spark, path, col("id") % 7 === 5)
     val expected = rows.filterNot(r => r._1 % 7 == 3 || r._1 % 7 == 5)
     assert(content(path) == expected, "broadcast route")
     withProps("graft.dlv.dvBroadcastLimit" -> "0") {
-      assert(content(path) == expected, "per-file map route")
-      withProps("graft.dlv.dvFileMapLimit" -> "0") {
-        assert(content(path) == expected, "all-dirs fallback route")
+      assert(content(path) == expected, "reader-filter route")
+    }
+  }
+
+  /** One data file (ids 0..39) whose vector spans three sidecar dirs:
+    * three single-row deletes, below the compaction threshold of 4.
+    * Callers set interval-4 parquet checkpoints: the third delete (v4)
+    * then writes one, so the distributed index can plan the table. */
+  private def threeSidecarFile(name: String): String = {
+    import spark.implicits._
+    val path = freshDir(name)
+    DlvTable.create(spark, path, "id BIGINT, v DOUBLE", Nil,
+      Map(DlvDv.PROP -> "true"))
+    DlvTable.append(spark, path,
+      (0L until 40L).map(i => (i, i.toDouble)).toDF("id", "v").coalesce(1))
+    (0L until 3L).foreach(i => DlvDml.delete(spark, path, col("id") === i))
+    val dvs = DlvTable.log(path).snapshot().files.map(_.dv)
+    assert(dvs.size == 1 && dvs.head.exists(_.paths.size == 3),
+      s"fixture: one file with a vector over 3 sidecars, got $dvs")
+    path
+  }
+
+  private def ids(path: String): Set[Long] =
+    DlvTable.toDF(spark, path).select("id").collect().map(_.getLong(0)).toSet
+
+  /** The index kind and the reader-filter count of a table read. */
+  private def readShape(path: String): (Set[String], Int) = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val lp = DlvTable.toDF(spark, path).queryExecution.optimizedPlan
+    (lp.collect { case r: LogicalRelation =>
+      r.relation.asInstanceOf[HadoopFsRelation].location.getClass.getSimpleName
+    }.toSet,
+      lp.collect { case f: org.apache.spark.sql.catalyst.plans.logical.Filter
+          if f.condition.exists(_.isInstanceOf[DvAliveExpr]) => f }.size)
+  }
+
+  test("the reader filter (broadcast limit 0) reads a file's 3-sidecar " +
+    "vector through every index kind: driver snapshot, distributed " +
+    "index, and KnownFilesIndex under a DV UPDATE and REORG PURGE") {
+    withProps(CKPT -> "1", "graft.dlv.checkpointInterval" -> "4",
+        "graft.dlv.dvBroadcastLimit" -> "0") {
+      val path = threeSidecarFile("dv-dirs-kinds")
+      val live = (3L until 40L).toSet
+      assert(readShape(path) == (Set("DlvFileIndex"), 1))
+      assert(ids(path) == live, "driver snapshot")
+      withProps(DIST -> "1") {
+        assert(readShape(path) == (Set("DlvDistributedFileIndex"), 1))
+        assert(ids(path) == live, "distributed index")
       }
+      // the UPDATE's mark scan reads the file through its 3-dir vector
+      // and grows it to 4 dirs; PURGE's rewrite reads through all 4
+      DlvDml.update(spark, path, col("id") === 5L, Map("v" -> lit(-1.0)))
+      assert(DlvTable.log(path).snapshot().files
+        .flatMap(_.dv).map(_.paths.size) == Seq(4))
+      DlvMaintenance.reorgPurge(spark, path)
+      assert(DlvTable.log(path).snapshot().files.forall(_.dv.isEmpty))
+      val got = DlvTable.toDF(spark, path).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toSet
+      assert(got == live.map(i => i -> (if (i == 5L) -1.0 else i.toDouble)),
+        "KnownFilesIndex reads (UPDATE mark scan, PURGE rewrite)")
+    }
+  }
+
+  test("a reader-filter read over the distributed index collects only " +
+    "its survivors from the index: no per-file sidecar-dir collect") {
+    withProps(CKPT -> "1", "graft.dlv.checkpointInterval" -> "4",
+        "graft.dlv.dvBroadcastLimit" -> "0", DIST -> "1") {
+      val path = threeSidecarFile("dv-dirs-jobs")
+      assert(ids(path) == (3L until 40L).toSet) // warms the light state
+      // the summary aggregation's jobs run on AQE stage threads and
+      // carry no index call site; every driver collect the index
+      // itself launches does
+      val collects = jobCallSites {
+        assert(ids(path) == (3L until 40L).toSet)
+      }.filter(_.contains("DlvDistributedFileIndex.scala"))
+      assert(collects.size == 1 && collects.head.startsWith("collect at"),
+        s"index collects of one read: $collects")
     }
   }
 

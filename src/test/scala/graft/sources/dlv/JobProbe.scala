@@ -14,14 +14,23 @@ trait JobProbe {
     jobDescriptions(body).filter(_.startsWith("Listing leaf files"))
 
   /** Descriptions of the jobs `body` launched. */
-  def jobDescriptions(body: => Unit): Seq[String] = {
+  def jobDescriptions(body: => Unit): Seq[String] =
+    jobsOf(body)(e => Option(e.properties)
+      .flatMap(p => Option(p.getProperty("spark.job.description"))))
+
+  /** Call sites (`collect at DlvDml.scala:42`) of the jobs `body`
+    * launched: Spark names a job's result stage after the call site. */
+  def jobCallSites(body: => Unit): Seq[String] =
+    jobsOf(body)(e => e.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
+
+  private def jobsOf(body: => Unit)(
+      label: org.apache.spark.scheduler.SparkListenerJobStart => Option[String])
+      : Seq[String] = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(seen.add)
+        label(e).foreach(seen.add)
     }
     spark.sparkContext.addSparkListener(listener)
     try {
