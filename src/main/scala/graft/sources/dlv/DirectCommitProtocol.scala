@@ -10,6 +10,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
 import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+import org.apache.spark.sql.graft.GraftInternal
 
 /** The commit protocol of every dlv data write: each task writes its
   * files ONCE, at their final paths under `root` (a qualified
@@ -23,6 +24,11 @@ import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
   * a failed job deletes the files of the tasks that had committed; a
   * file a crash still leaves behind is an unreferenced orphan that
   * VACUUM reclaims.
+  *
+  * The task commit also sets the task's output metrics (bytes and
+  * records written) from those sizes and footers, so the write job runs
+  * no stats tracker, whose own copy of the job's Hadoop conf every task
+  * would deserialize a second time.
   *
   * Names are `part-<task>-<uuid><suffix>` with a fresh UUID per file,
   * so a retried or speculative attempt never collides with another. */
@@ -65,20 +71,26 @@ private[dlv] final class DirectCommitProtocol(
 
   /** Runs after the task closed its writers. A task that wrote several
     * files (one per partition it touched) reads their footers
-    * concurrently. */
+    * concurrently. It also sets the task's output metrics from what it
+    * read: bytes are the files' sizes and records their footers' row
+    * counts. */
   override def commitTask(ctx: TaskAttemptContext): TaskCommitMessage = {
     val conf = ctx.getConfiguration
-    new TaskCommitMessage(DriverPar.map(opened.toSeq) { case (rel, full) =>
+    val files = DriverPar.map(opened.toSeq) { case (rel, full) =>
       val p = new Path(full)
       val st = p.getFileSystem(conf).getFileStatus(p)
-      AddFile(
+      val (rows, stats) = ParquetStats.footerStats(conf, p, indexed)
+      rows -> AddFile(
         path = rel,
         partitionValues = DlvDml.hivePartValues(rel),
         size = st.getLen,
         modificationTime = st.getModificationTime,
         dataChange = dataChange,
-        stats = Some(ParquetStats.statsJson(conf, p, indexed)))
-    })
+        stats = Some(stats))
+    }
+    GraftInternal.setTaskOutputMetrics(
+      files.map(_._2.size).sum, files.map(_._1).sum)
+    new TaskCommitMessage(files.map(_._2))
   }
 
   // best-effort: a file a delete misses stays unreferenced, and

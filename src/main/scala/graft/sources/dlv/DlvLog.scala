@@ -177,7 +177,12 @@ final class DlvLog(val tablePath: String, val io: DlvIo) {
     // interval without one; the next interval retries.
     if (won && version > 0 && version % DlvLog.checkpointInterval == 0)
       try writeCheckpoint(version)
-      catch { case _: Throwable => () }
+      catch {
+        case t: Throwable =>
+          DlvLog.checkpointFailures.incrementAndGet()
+          DlvLog.logger.warn(s"checkpoint of $tablePath at version " +
+            s"$version failed; the commit stands", t)
+      }
     won
   }
 
@@ -746,6 +751,15 @@ object DlvLog {
     * assert distributed-routed DML performs ZERO of these. */
   val snapshotMaterializations =
     new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Count of checkpoint writes that failed after their commit won
+    * ([[DlvLog.commit]]'s best-effort catch, which also logs each one
+    * at WARN). A table whose checkpoints keep failing replays from an
+    * older checkpoint on every read. */
+  val checkpointFailures =
+    new java.util.concurrent.atomic.AtomicLong(0)
+
+  private val logger = org.slf4j.LoggerFactory.getLogger(classOf[DlvLog])
 
   /** Protocol capabilities this library implements — the feature gate
     * [[Snapshot]] replay and [[OptimisticTransaction]] enforce against

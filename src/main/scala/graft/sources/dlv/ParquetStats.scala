@@ -31,7 +31,12 @@ object ParquetStats {
     * collected (metadata COUNT(*) and the identity machinery depend
     * on it). */
   def statsJson(conf: Configuration, file: org.apache.hadoop.fs.Path,
-      indexedCols: Option[Set[String]] = None): String = {
+      indexedCols: Option[Set[String]] = None): String =
+    footerStats(conf, file, indexedCols)._2
+
+  /** The file's row count and its [[statsJson]], from one footer read. */
+  def footerStats(conf: Configuration, file: org.apache.hadoop.fs.Path,
+      indexedCols: Option[Set[String]]): (Long, String) = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
     try {
       val blocks = reader.getFooter.getBlocks.asScala
@@ -81,7 +86,7 @@ object ParquetStats {
           }
         }
       }
-      JsonMethods.compact(JsonMethods.render(JObject(
+      numRecords -> JsonMethods.compact(JsonMethods.render(JObject(
         "numRecords" -> JLong(numRecords),
         "minValues" -> JObject(mins.toList),
         "maxValues" -> JObject(maxs.toList),

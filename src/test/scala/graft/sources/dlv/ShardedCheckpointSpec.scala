@@ -233,8 +233,11 @@ class ShardedCheckpointSpec extends SparkSpec with DlvTestProps {
     def marker(v: Long) = Seq(CommitInfo(v, System.currentTimeMillis(),
       "WRITE", Map.empty, isBlindAppend = true))
     val mat0 = DlvLog.snapshotMaterializations.get()
+    val failures0 = DlvLog.checkpointFailures.get()
     assert(l.commit(20, marker(20)), "a won commit must return true")
     assert(io.failed, "the sharded writer must have reached its publish")
+    assert(DlvLog.checkpointFailures.get() == failures0 + 1,
+      "the absorbed checkpoint failure must be counted")
     assert(DlvLog.snapshotMaterializations.get() == mat0,
       "a failed sharded write must not fall through to a driver replay")
     assert(!l.io.exists(l.checkpointParquetDir(20)) &&
@@ -250,6 +253,8 @@ class ShardedCheckpointSpec extends SparkSpec with DlvTestProps {
     (0 until 9).foreach(k => DlvTable.append(spark, path,
       batch(152 + k * 8, 152 + k * 8 + 8)))
     assert(l.commit(30, marker(30)))
+    assert(DlvLog.checkpointFailures.get() == failures0 + 1,
+      "a checkpoint that succeeds must not be counted as failed")
     val refs30 = DlvCheckpoint.sidecarRefs(
       spark, l.io.qualified(l.checkpointParquetDir(30)))
     assert(refs30.exists(_.isAdd), "the v30 checkpoint must be sharded")
